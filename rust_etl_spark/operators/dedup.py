@@ -594,7 +594,7 @@ def _simhash_batches():
     ``2*ones_j > T``. Empty Arrow batches are skipped (the PQ-kernel
     precedent: an upstream filter may emit one and it would reach
     np.concatenate as a malformed input). Zero-length ``th`` arrays
-    are asserted against (ADVICE r15): ``np.add.reduceat`` silently
+    raise ValueError (ADVICE r15): ``np.add.reduceat`` silently
     returns ``flat[start]`` — the NEXT doc's first hash — for an
     empty segment, a wrong signature rather than an error, so the
     kernel hard-fails if reused without the caller's size(t) > 0
@@ -607,7 +607,8 @@ def _simhash_batches():
             if not len(pdf):
                 continue
             lens = np.fromiter((len(a) for a in pdf["th"]), np.int64, len(pdf))
-            assert lens.min() > 0, "empty th segment: reduceat would read the next doc"
+            if lens.min() <= 0:
+                raise ValueError("empty th segment: reduceat would read the next doc")
             flat = np.concatenate([np.asarray(a, np.int64) for a in pdf["th"]])
             starts = np.zeros(lens.size, np.int64)
             np.cumsum(lens[:-1], out=starts[1:])

@@ -5,7 +5,7 @@ Parity map (all citations into /root/reference):
 - explode (list -> rows)            src/processor.rs:44-46  -> explode_outer
 - unnest (struct -> columns)        src/processor.rs:46-52  -> select("c.*")
 - drop technical columns            src/processor.rs:57-72  -> df.drop(*cols)
-- empty-table guard                 src/processor.rs:31-35  -> require_nonempty
+- empty-table guard                 src/processor.rs:31-35  -> require_nonempty (schema check)
 
 Semantics notes:
 - Polars ``explode`` emits a null row for null/empty lists, so the
@@ -44,12 +44,15 @@ TECHNICAL_COLUMNS: tuple[str, ...] = (
 
 
 def require_nonempty(df: DataFrame, context: str = "table") -> DataFrame:
-    """Refuse to continue on an empty frame (processor.rs:31-35).
+    """Refuse to continue on a frame with no columns (processor.rs:31-35).
 
-    ``isEmpty`` compiles to a LIMIT-1 job — O(1) rows read, safe at any
-    scale (no count over the full table).
+    A schema check, so it runs no Spark job. It is the empty-table guard
+    for a normalized JSON document: a multiLine read of zero records
+    infers no fields, and ``explode_outer`` never empties a non-empty
+    frame. Column-less frames with rows (``{}``, ``[{}]``, an envelope of
+    technical columns only) have nothing to write either.
     """
-    if df.isEmpty():
+    if not df.columns:
         raise SchemaError(f"empty {context}: refusing to write output")
     return df
 

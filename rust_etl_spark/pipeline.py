@@ -101,26 +101,25 @@ def run_pipeline(
         except Exception as e:  # main.rs:89-92 fail-soft on download
             res.status, res.error = "download_error", str(e)
             log.warning("download failed for %s: %s", url, e)
-            return res
-        try:
-            df = process_json_document(
-                spark,
-                staged,
-                root_path=group.root_path,
-                technical_columns=group.technical_columns or TECHNICAL_COLUMNS,
-            )
-            write_parquet(df, dest)
-            if count_rows:
-                res.rows = spark.read.parquet(dest).count()
-            os.remove(staged)  # processor.rs:94 — only after a good write
-        except Exception as e:  # main.rs:102-104 fail-soft on transform
-            # Any engine/Spark error degrades this endpoint only — the
-            # reference's From impls funnel all library errors into
-            # ProcessorError the same way (impl_errors.rs:18-85).
-            res.status, res.error = "transform_error", str(e)
-            log.warning("transform failed for %s: %s", url, e)
-        finally:
-            res.seconds = time.perf_counter() - t0
+        else:
+            try:
+                df = process_json_document(
+                    spark,
+                    staged,
+                    root_path=group.root_path,
+                    technical_columns=group.technical_columns or TECHNICAL_COLUMNS,
+                )
+                write_parquet(df, dest)
+                if count_rows:
+                    res.rows = spark.read.parquet(dest).count()
+                os.remove(staged)  # processor.rs:94 — only after a good write
+            except Exception as e:  # main.rs:102-104 fail-soft on transform
+                # Any engine/Spark error degrades this endpoint only — the
+                # reference's From impls funnel all library errors into
+                # ProcessorError the same way (impl_errors.rs:18-85).
+                res.status, res.error = "transform_error", str(e)
+                log.warning("transform failed for %s: %s", url, e)
+        res.seconds = time.perf_counter() - t0
         return res
 
     work = list(_endpoints(config))

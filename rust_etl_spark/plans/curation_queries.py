@@ -139,12 +139,10 @@ _DECON_SHINGLES_SQL = f"list_distinct({word_shingles_sql(tokens_sql('text'), DEC
     doc=f"Benchmark decontamination: flag training docs sharing any distinct "
     f"{DECON_NGRAM}-gram with the held-out eval split (the GPT-3/Pile n-gram-overlap "
     "scrub). Eval n-grams are DISTINCT-collapsed then shuffle_hash-joined as the "
-    "build side (round 13: the eval broadcast WAS the wall — building/probing a "
-    "5.6M-string hash relation cost ~6 s of the 10.3 s 100x total; distributing "
-    "the build is 1.4x and removes the synthetic's corpus-scaling broadcast); "
-    "per-doc totals ride an explode-free in-row size() branch joined back on "
-    "doc_id (one skinny row per doc — replaced the doc_id window over the full "
-    "exploded shingle set, the query's only big shuffle, in round 10).",
+    "build side, so a corpus-scaling eval split is never broadcast; each training "
+    "doc's distinct-shingle count n_total is size() of its shingle array, carried "
+    "as a rider through one explode_outer (outer, so no size filter is inferred "
+    "and the shingle pipeline runs once) with no second scan and no join-back.",
 )
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-training-doc count of distinct n-grams that also occur in the

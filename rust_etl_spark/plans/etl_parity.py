@@ -66,7 +66,8 @@ def struct_unnest(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   x -> chr(CAST(x AS INT))), '') AS decoded
         FROM documents
     """,
-    doc="Codepoint-array -> string decode (reference byte_arrays, processor.rs:100-123) via Arrow pandas UDF.",
+    doc="Codepoint-array -> string decode (reference byte_arrays, processor.rs:100-123) as one JVM "
+    "expression: pmod-wrap to a byte, Latin-1 encode to binary, cast to string, make_valid_utf8.",
 )
 def decode_codepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -75,7 +76,9 @@ def decode_codepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(104).cast("long"),
         F.lit(105).cast("long"),
     )
-    return docs.select("doc_id", decode_codepoints_col(arr).alias("decoded"))
+    return docs.select("doc_id", arr.alias("decoded")).select(
+        "doc_id", decode_codepoints_col("decoded").alias("decoded")
+    )
 
 
 @register(

@@ -4,7 +4,9 @@
 Reads a staged JSON document (either a root-level record array or an
 envelope object whose ``root_path`` key holds the records), normalizes
 it into a flat relational frame, applies column hygiene and codepoint
-decoding, and refuses to produce output for empty tables.
+decoding, and refuses to produce output for empty tables. Everything
+after the read is plan-time: the only Spark jobs are schema inference
+and the caller's write, and no Python worker runs.
 
 Spark mapping notes:
 - ``multiLine=true`` because government-API payloads are single JSON
@@ -68,21 +70,18 @@ def process_json_document(
 ) -> DataFrame:
     """The full processor.rs transform chain as one declarative plan:
 
-    scan -> empty guard -> dtype-dispatched normalize (explode_outer /
-    struct flatten) -> drop technical columns -> decode codepoint
-    arrays. Caller writes the result (sink stays separate so the same
-    transform serves batch files, streams, and tests).
+    scan -> dtype-dispatched normalize (explode_outer / struct flatten)
+    -> drop technical columns -> empty guard (a schema check) -> decode
+    codepoint arrays. Caller writes the result (sink stays separate so
+    the same transform serves batch files, streams, and tests).
     """
     df = read_json_document(spark, path, infer_records=infer_records)
     if df.columns == ["_corrupt_record"]:
         # Unparseable JSON: the reader produced only the corrupt-record
         # column (parity: reference JsonReader error -> ProcessorError).
         raise SchemaError(f"unparseable JSON document {path!r}")
-    df = require_nonempty(df, context=f"json document {path!r}")
-    df = normalize_envelope(df, root_path)
-    df = require_nonempty(df, context=f"records of {path!r}")
-    df = drop_technical(df, technical_columns)
-    return decode_codepoint_arrays(df)
+    df = drop_technical(normalize_envelope(df, root_path), technical_columns)
+    return decode_codepoint_arrays(require_nonempty(df, context=f"records of {path!r}"))
 
 
 def write_parquet(df: DataFrame, dest: str) -> None:

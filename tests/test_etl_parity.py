@@ -7,7 +7,9 @@ import json
 import os
 
 import pytest
+from pyspark.errors import PySparkException
 
+from rust_etl_spark import pipeline
 from rust_etl_spark.config import Config, is_templated, join_urls, resolve_endpoint_url
 from rust_etl_spark.errors import ConfigError, EmptyResponseError, SchemaError
 from rust_etl_spark.operators.decode import decode_codepoint_arrays
@@ -35,6 +37,19 @@ def _write(tmp_path, name, obj) -> str:
     with open(p, "w") as f:
         json.dump(obj, f)
     return p
+
+
+def _run_one_route(spark, tmp_path, doc):
+    """run_pipeline over one route whose offline fetch stages ``doc``."""
+    cfg = Config.from_dict({"portal": {"base_url": "https://api.example.gov",
+                                       "contracts": {"root_path": "resultado", "one": "/one"}}})
+
+    def fetch(session, url, dest, **kw):
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        return os.path.getsize(_write(os.path.dirname(dest), os.path.basename(dest), doc))
+
+    return run_pipeline(spark, cfg, data_dir=str(tmp_path / "data"), fetcher=fetch,
+                        session_factory=lambda: None, max_workers=1)
 
 
 def test_envelope_normalization(spark, tmp_path):
@@ -66,25 +81,53 @@ def test_struct_root_path(spark, tmp_path):
     assert "totalPaginas" not in df.columns
 
 
-def test_empty_table_refuses_output(spark, tmp_path):
+@pytest.mark.parametrize(
+    "text",
+    [
+        # zero records: the multiLine read infers no columns
+        pytest.param("[]", id="empty_array"),
+        pytest.param(" [ ] ", id="padded_empty_array"),
+        pytest.param("\n", id="blank"),
+        # rows with no columns, or none left after drop_technical
+        pytest.param("[[]]", id="nested_empty_array"),
+        pytest.param("[null]", id="null_record"),
+        pytest.param("{}", id="empty_object"),
+        pytest.param("[{}]", id="empty_record"),
+        pytest.param('{"totalRegistros": 0}', id="technical_only"),
+    ],
+)
+def test_empty_table_refuses_output(spark, tmp_path, text):
     """Empty input table -> SchemaError, nothing written
     (processor.rs:31-35, 'fail-soft rule 2')."""
-    path = _write(str(tmp_path), "empty.json", [])
+    path = os.path.join(str(tmp_path), "empty.json")
+    with open(path, "w") as f:
+        f.write(text)
     with pytest.raises(SchemaError):
         process_json_document(spark, path, root_path=None)
 
 
-def test_non_ascii_codepoint_decode(spark):
+def test_non_ascii_codepoint_decode(spark, tmp_path):
     """UTF-8 multi-byte fidelity + UInt8 wrap parity
     (processor.rs:110-117: Int64 -> UInt8 (wrapping) -> Binary -> String)."""
     df = spark.createDataFrame(
-        [(1, [0xC3, 0xA9]), (2, [0x68 + 256, 0x69]), (3, None)],
+        [(1, [0xC3, 0xA9]), (2, [0x68 + 256, 0x69]), (3, None), (4, [])],
         "id long, codigo array<bigint>",
     )
     out = {r["id"]: r["codigo"] for r in decode_codepoint_arrays(df).collect()}
     assert out[1] == "é"          # multi-byte UTF-8 assembled from bytes
     assert out[2] == "hi"         # 0x168 wraps to 0x68 ('h') like UInt8 cast
     assert out[3] is None
+    assert out[4] == ""
+
+    # A null or NaN element fails the query, as int(None) / int(nan) do.
+    for ddl, arr in (("bigint", [104, None]), ("double", [104.0, float("nan")])):
+        bad = spark.createDataFrame([(arr,)], f"codigo array<{ddl}>")
+        with pytest.raises(PySparkException, match="non-finite codepoint"):
+            decode_codepoint_arrays(bad).collect()
+
+    # ... which the pipeline reports as a transform error for that endpoint.
+    report = _run_one_route(spark, tmp_path, dict(ENVELOPE, resultado=[{"id": 1, "codigo": [104, None]}]))
+    assert [r.status for r in report.results] == ["transform_error"]
 
 
 def test_flatten_struct_collision_raises(spark):
@@ -171,9 +214,37 @@ def test_pipeline_fail_soft_end_to_end(spark, tmp_path):
     by_key = {r.key: r for r in report.results}
     assert by_key["good"].status == "ok" and by_key["good"].rows == 2
     assert by_key["empty"].status == "download_error"
+    assert by_key["empty"].seconds > 0  # failed endpoints are timed too
     assert by_key["by_id"].status == "skipped_templated"
     out = str(tmp_path / "data" / "portal" / "contracts" / "good.parquet")
     got = spark.read.parquet(out)
     assert sorted(got.columns) == ["codigo", "id", "nome"]
     # staging removed after successful write (processor.rs:94)
     assert not os.path.exists(str(tmp_path / "data" / "_staging" / "portal" / "contracts" / "good_temp.json"))
+
+
+def test_envelope_runs_two_jvm_only_jobs(spark, tmp_path, monkeypatch):
+    """One ok envelope costs exactly two Spark jobs — schema inference
+    and the parquet write: the empty guard reads only the schema and
+    the decode is a JVM expression, so no Python worker runs."""
+    plans = []
+    write = pipeline.write_parquet
+
+    def planned_write(df, dest):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        write(df, dest)
+
+    monkeypatch.setattr(pipeline, "write_parquet", planned_write)
+    sc = spark.sparkContext
+    sc.setJobGroup("envelope-job-count", "one ok envelope")
+    try:
+        report = _run_one_route(spark, tmp_path, ENVELOPE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener state
+    assert [r.status for r in report.results] == ["ok"]
+    assert len(sc.statusTracker().getJobIdsForGroup("envelope-job-count")) == 2
+    assert len(plans) == 1
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plans[0]

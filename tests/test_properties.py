@@ -21,22 +21,34 @@ def _decode_reference(arr):
     return bytes(int(x) & 0xFF for x in arr).decode("utf-8", "replace")
 
 
+#: Byte sequences that are not UTF-8: overlong, surrogate, truncated
+#: 4-byte, above U+10FFFF and a never-valid byte.
+_INVALID_UTF8 = [[0xC0, 0xAF], [0xED, 0xA0, 0x80], [0xF0, 0x9F], [0xF4, 0x90], [0xFF]]
+_FRACTIONAL = [[-1.5, 104.9, 105.2], [-0.5, 255.999, -256.5, 1e17 + 104.0]]
+
+
 @given(
     st.lists(
         st.lists(st.integers(min_value=-(2**40), max_value=2**40), max_size=24),
         min_size=1,
         max_size=8,
-    )
+    ),
+    st.lists(
+        st.lists(st.floats(min_value=-(2.0**40), max_value=2.0**40), max_size=24),
+        min_size=1,
+        max_size=8,
+    ),
 )
 @_SLOW
-def test_decode_matches_reference_semantics(spark, arrays):
+def test_decode_matches_reference_semantics(spark, arrays, doubles):
     from rust_etl_spark.operators.decode import decode_codepoint_arrays
 
-    rows = [(i, arr) for i, arr in enumerate(arrays)]
-    df = spark.createDataFrame(rows, "id long, codigo array<bigint>")
-    got = {r["id"]: r["codigo"] for r in decode_codepoint_arrays(df).collect()}
-    for i, arr in rows:
-        assert got[i] == _decode_reference(arr), f"row {i}: {arr!r}"
+    for ddl, arrs in (("bigint", arrays + _INVALID_UTF8), ("double", doubles + _FRACTIONAL)):
+        rows = [(i, arr) for i, arr in enumerate(arrs)]
+        df = spark.createDataFrame(rows, f"id long, codigo array<{ddl}>")
+        got = {r["id"]: r["codigo"] for r in decode_codepoint_arrays(df).collect()}
+        for i, arr in rows:
+            assert got[i] == _decode_reference(arr), f"{ddl} row {i}: {arr!r}"
 
 
 @given(

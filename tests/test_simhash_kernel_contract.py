@@ -125,7 +125,7 @@ def test_empty_th_segment_asserts_instead_of_corrupting():
         (3, np.asarray([5], dtype=np.int64)),
     ]
     pdf = pd.DataFrame({"doc_id": [r[0] for r in rows], "th": [r[1] for r in rows]})
-    with pytest.raises(AssertionError, match="empty th segment"):
+    with pytest.raises(ValueError, match="empty th segment"):
         list(_simhash_batches()([pdf]))
 
 
