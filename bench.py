@@ -15,11 +15,12 @@ JVM/codegen startup is not billed to the first headline query.
 Variance note (three rounds of evidence, r1-r3): individual sub-second
 queries on local[32] swing up to +/-30% between runs of UNCHANGED code
 (JIT, GC, page cache), while the 22-query headline TOTAL is
-reproducible to ~1%. Compare totals across rounds; treat any
-single-query delta smaller than its reported "variance" spread as
-noise. Each query runs 3x and reports the min (steady state); the
-per-query max-min spread ships in the JSON so noise is visible in the
-artifact instead of inferred.
+reproducible to ~1%. Treat any single-query delta smaller than its
+reported "variance" spread as noise. Each query runs 3x and reports
+the min (steady state); the per-query max-min spread ships in the
+JSON so noise is visible in the artifact instead of inferred. This
+runner records one window; before/after comparisons are interleaved
+same-host runs judged by perfbench/compare.py.
 
 Stdout-tail note: the "No Partition Defined for Window operation"
 WARNs this run emits all come from the BOUNDED-GRAIN single-partition
@@ -127,11 +128,11 @@ def _force(df) -> None:
 
 def _calibration() -> float:
     """Fixed-work single-thread CPU anchor (min-of-3 of a constant
-    sha256 chain, ~0.9 s on the round-7 sandbox). Cross-round wall
-    ratios divide out environment drift with this: round 7's uniform
-    1.23x headline slowdown on byte-identical code would otherwise
-    read as a regression forever (VERDICT r7). Compare
-    value / calibration_sec across rounds, not raw value."""
+    sha256 chain). Recorded beside the walls as a measure of the
+    window's single-thread speed; it cannot divide out a change of host
+    or core count, so before/after comparisons are same-host
+    interleaved perfbench runs (perfbench/compare.py), not ratios of
+    this anchor across records."""
     import hashlib
 
     runs = []
@@ -142,43 +143,6 @@ def _calibration() -> float:
             buf = hashlib.sha256(buf).digest() * 2048
         runs.append(time.perf_counter() - t0)
     return round(min(runs), 3)
-
-
-def _calibrated_vs_prev(total: float, calibration: float, sf: str):
-    """(this total / this calibration) over the same ratio from the
-    highest-numbered committed BENCH_r*.json of the SAME sf — the
-    driver records those at sf0.1, so other tiers usually return
-    None. Returns {"round": N, "ratio": r} or None."""
-    import glob
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best = None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = _re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        # the driver's per-round records wrap the bench JSON line under
-        # "parsed" (alongside rc/tail); unwrap before reading fields
-        if isinstance(rec.get("parsed"), dict):
-            rec = rec["parsed"]
-        try:
-            same_sf = float(rec.get("sf")) == float(sf)
-        except (TypeError, ValueError):
-            same_sf = str(rec.get("sf")) == str(sf)
-        if not same_sf or not rec.get("value") or not rec.get("calibration_sec"):
-            continue
-        n = int(m.group(1))
-        if best is None or n > best[0]:
-            best = (n, rec["value"] / rec["calibration_sec"])
-    if best is None:
-        return None
-    return {"round": best[0], "ratio": round((total / calibration) / best[1], 3)}
 
 
 def _warm_page_cache(sf_dir: str) -> None:
@@ -210,9 +174,7 @@ def main() -> None:
     # Start-of-run CPU anchor (VERDICT r15 #8): paired with the
     # end-of-run `calibration_sec` below, a >10% within-run divergence
     # flags a contended measurement window IN the record itself (the
-    # r15 driver window read untouched queries up to 3x high and the
-    # adjudication had to live in judge prose). scaling_report prints
-    # a CAUTION when the two anchors diverge.
+    # r15 driver window read untouched queries up to 3x high).
     calibration_start = _calibration()
 
     # min-of-3 per query: first execution pays codegen/JIT, the min
@@ -250,19 +212,10 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calibration_sec": calibration,
         # Within-run window-health pair: calibration_sec_start runs
-        # BEFORE the headline loop, calibration_sec (the cross-round
-        # anchor, unchanged semantics) after everything. Divergence
-        # >10% means the wall numbers above straddled a contended
-        # host window and per-query deltas should be adjudicated
-        # against the committed chain records, not trusted raw.
+        # BEFORE the headline loop, calibration_sec after everything.
+        # Divergence >10% means the wall numbers above straddled a
+        # contended host window.
         "calibration_sec_start": calibration_start,
-        # Anchor story IN the artifact (VERDICT r12 #8): raw totals move
-        # with sandbox drift (r12's +22% raw was 0.98x calibrated), so
-        # ship the calibrated ratio vs the last committed per-round
-        # record rather than leaving readers to derive it from
-        # BASELINE.md prose. <1 = faster than last round per unit of
-        # this sandbox's CPU; null when no same-SF prior record exists.
-        "calibrated_vs_prev_round": _calibrated_vs_prev(total, calibration, sf),
         "extended_total": round(sum(extended.values()), 3),
         "queries": timings,
         "variance": variance,
@@ -294,7 +247,6 @@ def main() -> None:
                 "sf": record["sf"],
                 "calibration_sec": record["calibration_sec"],
                 "calibration_sec_start": record["calibration_sec_start"],
-                "calibrated_vs_prev_round": record["calibrated_vs_prev_round"],
                 "extended_total": record["extended_total"],
                 "queries": timings,
                 "variance": variance,

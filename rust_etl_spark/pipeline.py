@@ -43,7 +43,6 @@ class EndpointResult:
     status: str  # "ok" | "skipped_templated" | "download_error" | "transform_error"
     seconds: float = 0.0
     bytes_downloaded: int = 0
-    rows: int | None = None
     error: str | None = None
 
 
@@ -73,7 +72,6 @@ def run_pipeline(
     max_workers: int = 8,
     fetcher=fetch_data_to_disk,
     session_factory=make_session,
-    count_rows: bool = False,
 ) -> PipelineReport:
     """Extract + transform + load every endpoint, fail-soft per route.
 
@@ -110,8 +108,6 @@ def run_pipeline(
                     technical_columns=group.technical_columns or TECHNICAL_COLUMNS,
                 )
                 write_parquet(df, dest)
-                if count_rows:
-                    res.rows = spark.read.parquet(dest).count()
                 os.remove(staged)  # processor.rs:94 — only after a good write
             except Exception as e:  # main.rs:102-104 fail-soft on transform
                 # Any engine/Spark error degrades this endpoint only — the

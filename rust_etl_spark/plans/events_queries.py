@@ -502,40 +502,26 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FOLLOW side (every event, 2N rows — the 100 TB side of the join);
     flipping the expansion onto signups (~20% of events here; the
     filtered side by construction) leaves the big side un-generated
-    and un-duplicated — measured 15.4 -> 4.9 s at the 100x tier, value
-    parity exact (e in (s, s+W] <=> e_bkt in {s_bkt, s_bkt+1}, integer
-    division so bucket boundaries are exact). At 100 TB this bounds
-    every join group to ~one user-day instead of one user-lifetime;
-    the residual range predicate filters inside buckets.
+    and un-duplicated, with value parity exact (e in (s, s+W] <=>
+    e_bkt in {s_bkt, s_bkt+1}, integer division so bucket boundaries
+    are exact). At 100 TB this bounds every join group to ~one
+    user-day instead of one user-lifetime; the residual range
+    predicate filters inside buckets.
 
-    Join strategy (round-11 re-plan, measured in
-    RANGE_JOIN_REGIMES.json): left to its size estimates Catalyst
-    BROADCASTS the pruned follow-side projection — the side that grows
-    with the corpus (the round-10 fallback note assumed the signup
-    side broadcast; the executedPlan at the 100x tier shows BuildRight
-    = the FULL 20M-row events projection, a single-threaded hash build
-    of the 100 TB side: 5.34 s min-of-3). The shipped form therefore
-    hints ``shuffle_hash`` on the signup side: both sides shuffle on
-    the bounded (user_id, day-bucket) key and each task hash-builds
-    only its signup slice — 1.70 s at 100x, 3.1x over the unhinted
-    pick. At 100 TB the per-task build stays small because AQE's 16 MB
-    advisory partition target bounds the post-shuffle slice regardless
-    of corpus size, per-key fan-out is one user-day (measured max 11 /
-    p99 6 events per (user, day) vs 99 per lifetime), and the hint is
-    advisory — Spark falls back to the spill-safe SortMergeJoin on the
-    same bounded key when a build slice can't be hashed (measured at
-    par: 1.74 s, identical 212 MB shuffle)."""
-    return _range_join(spark, sf_dir, hint="shuffle_hash")
-
-
-def _range_join(
-    spark: SparkSession, sf_dir: str, hint: str | None
-) -> DataFrame:
-    """events_range_join body with the join-strategy hint as a
-    parameter — scripts/range_join_regimes.py measures the identical
-    dataflow under every strategy (shipped shuffle_hash / merge
-    fallback / Catalyst's unhinted pick) without duplicating the
-    plan."""
+    Join strategy: left to its size estimates Catalyst BROADCASTS the
+    pruned follow-side projection — the side that grows with the
+    corpus, a single-threaded hash build of the 100 TB side. The
+    signup side is therefore hinted ``shuffle_hash``: both sides
+    shuffle on the bounded (user_id, day-bucket) key and each task
+    hash-builds only its signup slice. At 100 TB the per-task build
+    stays small because AQE's 16 MB advisory partition target bounds
+    the post-shuffle slice regardless of corpus size, per-key fan-out
+    is one user-day, and the hint is advisory — Spark falls back to
+    the spill-safe SortMergeJoin on the same bounded key when a build
+    slice can't be hashed. The committed RANGE_JOIN_REGIMES.json holds
+    the measured regimes (hinted, merge fallback, unhinted broadcast)
+    and the per-(user, day) fan-out; tests/test_plans.py locks the
+    hinted shape and fails any broadcast."""
     ev = load_table(spark, sf_dir, "events")
     day_us = 24 * 3600 * 1_000_000
     base = ev.select(
@@ -562,10 +548,8 @@ def _range_join(
             ).alias("bkt"),
         )
     )
-    if hint:
-        signups = signups.hint(hint)
     return (
-        signups.join(base, ["user_id", "bkt"])
+        signups.hint("shuffle_hash").join(base, ["user_id", "bkt"])
         .filter((F.col("e_us") > F.col("s_us")) & (F.col("e_us") <= F.col("s_us") + day_us))
         .groupBy("signup_id")
         .agg(F.count(F.lit(1)).alias("n_follow"))

@@ -163,7 +163,7 @@ def groupby_agg_dec38(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sum reconstitutes through one correctly-rounded cast to
     DOUBLE (identical on both engines even above 2^53) + one IEEE
     division + the portable half-up round. Per-tier cost vs the BIGINT
-    accumulator is measured in DEC38_BENCH.json (scripts/dec38_bench.py).
+    accumulator is recorded in the committed DEC38_BENCH.json.
     """
     li = load_table(spark, sf_dir, "lineitem")
     return (

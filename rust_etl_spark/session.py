@@ -79,10 +79,7 @@ def get_spark(
         # partition). Cluster translation: advisory size ≈
         # (executor memory * memory fraction / cores) / ~5x row
         # expansion, rather than a constant.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "16m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")

@@ -12,11 +12,10 @@ Spark mapping notes:
 - ``multiLine=true`` because government-API payloads are single JSON
   documents, not JSON-lines.
 - The reference caps schema inference at the first 1000 records
-  (processor.rs:24-27). Spark's JSON reader samples via
-  ``samplingRatio``; for an explicit record cap we do a two-pass read:
-  infer on a ``limit(infer_records)`` slice, then re-read the full
-  file with the pinned schema — same contract, and at scale it avoids
-  a full inference pass over TBs of staged JSON.
+  (processor.rs:24-27). A multiLine read infers from the one staged
+  document as a whole, so the cap has no Spark counterpart here; the
+  two can differ only for a document whose records after the 1000th
+  bring fields or types the first 1000 lack.
 """
 
 from __future__ import annotations
@@ -32,32 +31,11 @@ from rust_etl_spark.operators.normalize import (
     require_nonempty,
 )
 
-INFER_RECORDS_DEFAULT = 1000  # processor.rs:24-27 infer_schema_len
 
-
-def read_json_document(
-    spark: SparkSession,
-    path: str,
-    *,
-    multiline: bool = True,
-    infer_records: int = INFER_RECORDS_DEFAULT,
-) -> DataFrame:
-    """Scan a staged JSON document with capped schema inference.
-
-    ``multiline=True`` (the envelope case) is one JSON object/array —
-    inference touches exactly one document, no cap needed. For
-    JSON-lines staging (``multiline=False``) the cap matters at scale:
-    infer the schema from the first ``infer_records`` lines only, then
-    re-read the full path with the pinned schema — the Spark analogue
-    of ``infer_schema_len(1000)``.
-    """
-    if multiline:
-        return spark.read.option("multiLine", "true").json(path)
-    if infer_records <= 0:
-        return spark.read.json(path)
-    sample = spark.read.text(path).limit(infer_records)
-    schema = spark.read.json(sample.rdd.map(lambda r: r.value)).schema
-    return spark.read.schema(schema).json(path)
+def read_json_document(spark: SparkSession, path: str) -> DataFrame:
+    """Scan one staged JSON document (an object or an array); the read
+    infers its schema, which is one Spark job."""
+    return spark.read.option("multiLine", "true").json(path)
 
 
 def process_json_document(
@@ -66,7 +44,6 @@ def process_json_document(
     *,
     root_path: str | None = None,
     technical_columns: tuple[str, ...] = TECHNICAL_COLUMNS,
-    infer_records: int = INFER_RECORDS_DEFAULT,
 ) -> DataFrame:
     """The full processor.rs transform chain as one declarative plan:
 
@@ -75,7 +52,7 @@ def process_json_document(
     codepoint arrays. Caller writes the result (sink stays separate so
     the same transform serves batch files, streams, and tests).
     """
-    df = read_json_document(spark, path, infer_records=infer_records)
+    df = read_json_document(spark, path)
     if df.columns == ["_corrupt_record"]:
         # Unparseable JSON: the reader produced only the corrupt-record
         # column (parity: reference JsonReader error -> ProcessorError).

@@ -184,15 +184,8 @@ def main() -> None:
     app_id = spark.sparkContext.applicationId
     seen: set[int] = set()
 
-    # SPARK_GRAFT_BUCKETED_FAMILIES=events_user re-runs only the named
-    # families and MERGES their rows into the existing BUCKETED_BENCH
-    # record (the untouched families keep their committed rows) — for
-    # re-measuring one family after a re-plan without the full ~20 min.
-    only = os.environ.get("SPARK_GRAFT_BUCKETED_FAMILIES")
-    run_fams = [f for f in FAMILIES if not only or f["family"] in only.split(",")]
-
     families_out = []
-    for fam in run_fams:
+    for fam in FAMILIES:
         queries, facts = fam["queries"], fam["facts"]
         tiers_out = []
         for tag in fam["tiers"]:
@@ -279,12 +272,6 @@ def main() -> None:
     }
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_path = os.path.join(root, "BUCKETED_BENCH.json")
-    if only and os.path.exists(out_path):
-        with open(out_path) as f:
-            prev = json.load(f)
-        ran = {fo["family"] for fo in families_out}
-        merged = [fo for fo in prev.get("families", []) if fo["family"] not in ran]
-        record["families"] = merged + families_out
     with open(out_path, "w") as f:
         json.dump(record, f, indent=1)
         f.write("\n")

@@ -5,7 +5,16 @@ per-query records as written by bench.py's BENCH_LOCAL.json, renamed)
 and the scale-audit JSONs (SCALE_AUDIT.json / SCALE_AUDIT_gen_sf1.json)
 and writes SCALING.md: per-query wall-time and shuffle-byte ratios at
 10x the rows. Near-linear means wall ratio <= ~12x and shuffle ratio
-<= ~12x; anything above is flagged as the re-plan work queue.
+<= ~12x; anything above is flagged as the re-plan work queue. The
+other sections render the committed tier, audit, bucketed-layout,
+curation and streaming records. ``render()`` reads only files in the
+repo, so tests/test_scaling_report_guards.py checks that SCALING.md
+is exactly its output.
+
+This report describes one set of records; it does not compare runs.
+Before/after timing goes through perfbench (``perfbench/run.py``
+interleaved on one host, then ``perfbench/compare.py``, which refuses
+records from different hosts).
 
 Run after:
     python scripts/gen_scale_tier.py
@@ -24,7 +33,6 @@ import json
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SCALE_FACTOR = 10.0
 WALL_FLAG = 12.0  #: wall ratio above this at 10x rows = super-linear
 SHUFFLE_FLAG = 12.0
 #: a shuffle-ratio flag needs materiality: kilobyte-scale top-k merges
@@ -114,8 +122,7 @@ MID_TIER_WORST_NOTES = {
     ),
     ("100x", "events_ewma"): (
         "18.6x wall for 100x rows on the chain record — the cold-page-"
-        "cache artifact, diagnosed to mechanism this round (see the "
-        "events_ewma watch-list entry above): idle 11.2 s reproduces "
+        "cache artifact, diagnosed to mechanism: idle 11.2 s reproduces "
         "at a healthy CPU anchor, one sequential warm scan of "
         "events.parquet drops it to 3.19 s = 2.9x for 100x rows, "
         "sub-linear. The plan is untouched integer-weight window "
@@ -175,370 +182,8 @@ MID_TIER_WORST_NOTES = {
         "5.34 s min-of-3 at 100x. The shipped form now hints "
         "shuffle_hash on the signup side — 1.70 s, with the spill-safe "
         "SortMergeJoin fallback measured at par (1.74 s, identical "
-        "212 MB shuffle) — see the dedicated regime section below. "
+        "212 MB shuffle) — all regimes in RANGE_JOIN_REGIMES.json. "
         "Closed (re-planned twice, both measured)."
-    ),
-}
-
-#: Watch list: queries BELOW the flag thresholds whose tier ratio moved
-#: between rounds and was re-measured; the note records the evidence so
-#: the next drift is judged against a quiet-machine anchor, not a noisy
-#: bench round.
-#: Round-10 closure of the five r9-bench regressions (+20-28% raw on
-#: plans untouched since round 6): quiet min-of-5 re-measure on a
-#: sandbox whose CPU anchor was 1.26x SLOWER than r8's (1.128 vs
-#: 0.955 s) — all five still measured faster than BOTH r8 and r9 raw.
-_R10_NOISE_CLOSURE = (
-    "r9 bench +{pct}% on an untouched plan; round-10 quiet min-of-5 "
-    "re-measure: {q:.3f} s vs r8 {r8:.3f} / r9 {r9:.3f} at CPU anchor "
-    "1.128 s (vs r8's 0.955) — faster than both rounds raw on a slower "
-    "sandbox; the r9 delta does not reproduce. Closed as the documented "
-    "driver-bench noise family."
-)
-WATCH_NOTES = {
-    "r16_optimization_chain": (
-        "the round-16 chain ran on the final-optimization-round HEAD "
-        "(4 re-plans + the co-bucketed events/orders layout; "
-        "OPTIMIZATION_r16.md). gen_sf10: headline 40.63 -> 34.70 s, "
-        "extended 87.18 -> 75.06 s at par anchors (1.011/0.977); the "
-        "re-planned queries landed at their A/B-predicted values "
-        "(q21 7.25 -> 6.03, events_asof_join 2.61 -> 2.05, "
-        "decontaminate 5.55 -> 3.21). Chain movers adjudicated idle "
-        "(IDLE_REMEASURES.json): events_retention +47% idles at 0.95x "
-        "(noise, spread 3.7 in the chain slot), events_zscore +16% at "
-        "1.04x (noise), events_rolling_distinct +24% CONFIRMED at "
-        "2.84 s (spread 0.11) — the deliberate bytes-for-local-CPU "
-        "trade of its sweep-line re-plan (229.1 -> 7.1 MB shuffle; "
-        "collect_set is non-codegen where the retired fan-out was "
-        "all-codegen; see the query docstring). The chain's sf0.1 "
-        "bench slot landed in a contended window (15.89 s headline, "
-        "uniformly 1.3-1.7x on untouched sub-second queries at PAR "
-        "start/end CPU anchors — the anchor pair catches CPU "
-        "contention, not this VM's I/O/scheduler windows); re-run "
-        "verified-quiet per the round-11 doctrine: 13.198 s headline "
-        "/ 27.733 s extended at anchors 0.985/0.987, and the "
-        "committed sf0.1 record IS the quiet run. gen_sf0.3 (the "
-        "overhead-dominated smallest tier, the r14 window-family "
-        "precedent) carries three elevated sub-second movers on "
-        "untouched code (q16 0.45 -> 0.81, pca 0.63 -> 0.95); idle "
-        "re-measures swing 0.55-0.97 with spreads comparable to the "
-        "deltas, pca reads PAR (0.629) in a later quiet run, and a "
-        "full stage re-run was itself flagged by the new start/end "
-        "anchor pair (1.193 -> 0.994: contended start) so the chain "
-        "record — whose own anchor pair is healthy (1.001/1.002) — "
-        "stays committed; big tiers are par on the same code "
-        "(gen_sf3 1.019x, gen_sf10 headline calibrated 0.885x). "
-        "events_rolling_distinct's small-tier +18-27% is its "
-        "documented bytes-for-CPU trade, not noise."
-    ),
-    "r15_optimization_chain": (
-        "the third round-15 chain ran on the optimization-round HEAD "
-        "(7 re-plans + 5 expression/kernel swaps; OPTIMIZATION_r15.md) "
-        "after a sandbox reset regenerated every gen tier from the "
-        "same seed. sf0.1: headline 14.818 -> 12.432 s, extended "
-        "24.412 s, at the IDENTICAL anchor 0.992 — zero >1.5x "
-        "untouched movers. gen_sf10: headline 43.49 -> 40.63 s, "
-        "extended 95.32 -> 87.18 s at par anchors (1.01/1.011); the "
-        "optimized queries landed at their A/B-predicted values "
-        "(events_ewma 8.82 -> 1.63, dedup_simhash 3.90 -> 1.95, "
-        "similarity_ann_lsh 2.92 -> 1.64, zorder_order 2.67 -> 0.83, "
-        "q9 3.48 -> 2.56, doc_winnow audit 10.3 -> ~3.4). ONE >1.5x "
-        "untouched mover: groupby_agg 1.165 -> 1.802 (spread-prone "
-        "sub-2s query); idle re-measure (IDLE_REMEASURES.json third "
-        "record, min-of-5 warm, spread 0.479) reads 1.257 s = 1.05x "
-        "calibrated vs the r15b base — chain-window noise, closed. "
-        "Deep misbroadcast audit re-run on this HEAD: 0 raw across "
-        "all 87; the dedup_segments and dedup_embedding_lsh reduced "
-        "flags RETIRED (their re-plans have no joins left to "
-        "broadcast)."
-    ),
-    "r15_second_chain": (
-        "the second round-15 chain (run after the join_star/q3/"
-        "events_retention shuffle re-plans) landed with the in-chain "
-        "window family active: its sf0.1 record read 16.42 s headline "
-        "at the SAME anchor as r15a's 14.825 with a broad 1.1-1.35x "
-        "elevation on untouched sub-second queries — re-run quiet "
-        "immediately after, it came back at 14.818 s / anchor 0.992 "
-        "(par with r15a), and the committed sf0.1 record IS the quiet "
-        "run. gen_sf10 read +0.2-0.6 s on ~8 untouched plans; a quiet "
-        "re-run there came back SLOWER still (46.8 s headline at par "
-        "anchor — host-window drift the CPU anchor does not capture), "
-        "so the chain record was kept and the movers adjudicated idle "
-        "instead (IDLE_REMEASURES.json second record, r15a base vs "
-        "r15b cur): every untouched mover idles at 0.86-1.00x of "
-        "r15a (dedup_simhash 1.004x, similarity_ann_lsh 0.952x, "
-        "window_range_frame 0.855x, events_asof_join 0.969x, "
-        "dedup_ngram_jaccard 0.965x) — window noise, no plan changed. "
-        "The re-planned queries: events_retention idles 0.272x "
-        "(3.10 -> 0.87 s, shuffle 119 -> 8 MB), join_star 0.624x "
-        "(4.79 -> 3.10 s, shuffle 1009 -> 376 MB), q3 1.036x — PAR on "
-        "local wall (interleaved old-vs-new min 2.995 vs 2.867 over 5 "
-        "pairs); its re-plan win is the 3.1x shuffle cut (601 -> 197 "
-        "MB) plus removing the forced corpus-scaling broadcast, which "
-        "is the 100 TB argument, not the local[32] one."
-    ),
-    "r15_rebaseline": (
-        "the round-15 chain re-baselined the two records VERDICT r14 #1 "
-        "named: gen_sf0.3 reads 0.854x headline / 0.860x extended "
-        "calibrated vs its elevated r14 version (the 1.178x/1.206x "
-        "elevation was the measurement window, now reverted in the "
-        "committed record itself) and gen_sf10 reads 0.987x/1.048x. "
-        "gen_sf1's 1.123x headline line is an ANCHOR artifact, not a "
-        "slowdown: its r14 version was recorded at anchor 1.13 (a slow "
-        "CPU window) and the raw headline got FASTER (15.193 -> 14.569 "
-        "s) — dividing by a 17% faster anchor manufactures the ratio. "
-        "The driver-window mover question (VERDICT r14 #2) is settled "
-        "by the committed IDLE_REMEASURES.json: all 10 biggest r14 "
-        "movers sit 0.69-1.11x of the r14 chain record when idle, and "
-        "repeated idle runs minutes apart swing sub-second fixture "
-        "queries up to ~1.7x (events_seasonal_decompose 0.68 -> 0.40 s "
-        "across three runs) — chain records, not driver-window values, "
-        "are the diff baseline. bench.py now pre-warms the page cache "
-        "itself so the driver's post-close run stops paying cold-read "
-        "variance into BENCH_r*.json. The r15 chain's own gen_sf10 "
-        "movers were spot re-measured idle (warm, pre-pass, anchor "
-        "0.995) immediately after: ngram_counts 4.77 in-chain -> 1.74 "
-        "idle (r14 band 1.63), events_retention 3.10 -> 1.28 (band "
-        "1.15), q5_local_supplier 2.81 -> 2.60 — all chain-window "
-        "noise on untouched plans, closed."
-    ),
-    "r14_chain_movers": (
-        "the round-14 chain landed clean at the big tiers (gen_sf10 "
-        "headline 0.996x calibrated vs r13, zero per-query regressions "
-        "above 1.4x — the only large movers are IMPROVEMENTS: "
-        "text_tfidf 9.02 -> 3.84 s, settling into the idle ~4 s band "
-        "its r13 adjudication predicted, and similarity_topk 3.21 -> "
-        "0.52 s, a prior cold slot). The gen_sf0.3 record elevated "
-        "1.178x calibrated with six 1.5-2.6x sub-second movers on "
-        "untouched plans (join_star 0.91 -> 2.30 the largest); all "
-        "six idle re-measured with the warm-scan protocol immediately "
-        "after the chain and reverted to AT OR BELOW their r13 values "
-        "(join_star 0.62, q16 0.46, agg_filter_sum 0.11, q2 0.56, "
-        "q13 0.36, lm_quality 0.39 min-of-4) — the in-chain window "
-        "family at the fixed-overhead-dominated small tier; no plan "
-        "changed, none re-planned."
-    ),
-    "decontaminate_bloom_lever_r14": (
-        "the round-13 docstring left a dangling lever: 5.19 s measured "
-        "with the runtime bloom filter vs the shipped 7.58. Round 14 "
-        "adjudicated it with an interleaved A/B (5 warm reps each, "
-        "alternating confs so host noise cancels; "
-        "BloomFilterMightContain verified present in the ON plan): "
-        "bloom ON 4.59 s min / OFF 4.64 s min at gen_sf10 — "
-        "indistinguishable, and the shipped shuffle_hash plan itself "
-        "now idles at ~4.6-5.4 s (better than the 6.06 s committed "
-        "chain record; the 5.19-vs-7.58 spread was chain-window "
-        "noise). Decision: conf stays default — making injection fire "
-        "requires applicationSideScanSizeThreshold=0, which would add "
-        "creation-side aggregates to every shuffle join globally for "
-        "a measured ~0 gain on the one query it targeted."
-    ),
-    "dedup_ngram_jaccard_r14_adjudication": (
-        "round 14 gave the largest steady plan-attributable extended "
-        "wall (6.3-6.6 s idle at gen_sf10) the worst-query treatment "
-        "(scripts/ngram_jaccard_profile.py). Subtree attribution: the "
-        "shingle pipeline computes 2.4 s (scan 0.27, +tokenize 0.47, "
-        "+shingle fold 1.54, +md5 2.20, +explode 2.42 — md5 is the "
-        "oracle-portability cost, the rest is codegen string work), "
-        "and everything downstream of the df-cap is trivial (71,835 "
-        "of 18.7M exploded rows survive; members 2.7k lists, pairs "
-        "969k) — the residual ~3.5 s is ONE 18.7M-row/240 MB exchange "
-        "plus the window sort on sh. Two alternatives were measured "
-        "and REJECTED: (a) groupBy(sh).count + join-back runs 10.1 s "
-        "vs 5.4-7.0 s — map-side partial aggregation makes the two "
-        "exchanges non-identical, ReuseExchange never fires, and the "
-        "whole shingle pipeline evaluates twice; (b) a single "
-        "groupBy(sh) collecting doc lists and df together would hold "
-        "UNBOUNDED per-group state on hot shingles (max df ~ corpus "
-        "size) — the sort-based window spills gracefully where that "
-        "hash-agg OOMs, which is exactly why the current shape is the "
-        "100 TB-safe one. Verdict: plan is right; the wall is "
-        "irreducible compute + one spill-safe exchange."
-    ),
-    "window_range_frame_r12_replan": (
-        "round 12 gave the extended set's largest 100x wall (7.42-7.82 "
-        "s idle) the worst-query treatment and RE-PLANNED it: profiling "
-        "showed the cost was the per-ORDER endpoint explode (2N = 30M "
-        "rows through the bucket window) plus a 2N-row groupBy over an "
-        "N-key domain — while distinct prices are only 149,743 at "
-        "gen_sf10 (1% of rows; cent-quantized bounded domain). The "
-        "identical two-level prefix-sum machinery now runs per DISTINCT "
-        "price and order rows resolve by one equi-join on the exact "
-        "price double: 7.42 -> 2.81 s min-of-3 warm at gen_sf10, output "
-        "verified EXACTLY equal (exceptAll both directions = 0 over all "
-        "15M rows). The join-back is shuffle_hash-hinted building the "
-        "per-price side: unhinted, the new gate-resident misbroadcast "
-        "canary caught Catalyst broadcasting the pruned ORDERS "
-        "projection (the corpus-scaling side — the round-11 pathology, "
-        "caught this time at pytest cost before the code ever reached a "
-        "snapshot). The round-12 chain recorded 5.61 s (min-of-3 spread "
-        "2.38 — in-chain cold-cache runs of [~6-8, ~3] shape); idle "
-        "warm-scan re-measure immediately after: 3.08 s min-of-3 "
-        "([6.21, 3.27, 3.08]), consistent with the pre-chain 2.81. "
-        "Compare future rounds against ~2.8-3.1 s idle, not the "
-        "chain-window record."
-    ),
-    "q21_r12_replan": (
-        "round 12's second worst-query treatment: q21's decorrelated "
-        "groupBy-then-join-back form was executing the entire "
-        "lineitem-join-orders-aggregate subtree TWICE (the self-join "
-        "branches carry distinct expression IDs, defeating "
-        "ReusedExchange — verified in the executed plan: two lineitem "
-        "scans, two join exchanges, two (order,supplier) aggregates). "
-        "Replaced the join-back with count/sum windows over "
-        "l_orderkey computed on the clustering the join exchange "
-        "already provides (local sort only, no new exchange, "
-        "self-join gone): same-session old-vs-new at gen_sf10 11.41 "
-        "-> 6.37 s min-of-4 warm, outputs exactly equal (exceptAll "
-        "= 0). Not a no-window-argmin violation: the window input is "
-        "the post-aggregate grain, partition key bounded (suppliers "
-        "per order), and it REMOVES a shuffle join."
-    ),
-    "dedup_minhash_verified_r12": (
-        "round-12 chain recorded 2.50 -> 4.43 s at gen_sf10 on code "
-        "untouched since the round-11 hints (min-of-3 spread 1.48 — "
-        "the noise is in the record itself); idle re-measure "
-        "immediately after, documents warm-scanned first: 2.68 s "
-        "min-of-3 ([7.32, 3.06, 2.68] — the first run shows the cold "
-        "start the chain paid on all three). Closed as the "
-        "cold-page-cache family (the events_ewma mechanism); plan "
-        "unchanged, no re-plan warranted."
-    ),
-    "r12_second_chain_movers": (
-        "the second round-12 chain (q16/q5/IVF-kernel regen) ran "
-        "into the SAME host pattern: anchor 0.88 -> 0.992 across "
-        "chains, and a VM-external load spike right after (load avg "
-        "9-14 with zero VM processes; anchor 1.09-1.49 before "
-        "settling at ~1.0-1.1). Untouched-code movers at gen_sf10, "
-        "each idle re-measured with the warm-scan + NOOP-action "
-        "protocol (an early re-measure mistake worth recording: "
-        ".collect() is NOT the bench action — for wide-output "
-        "queries like events_json_extract it times driver "
-        "materialization and reads 2-4x high): kmeans_iterate chain "
-        "5.63 vs idle 2.99 min-of-4 ([24.2, 4.1, 3.5, 3.0] — "
-        "anchor-adjusted this IS the post-swap ~2.3 s value); "
-        "events_json_extract chain 7.55 vs idle-noop 3.86 "
-        "([16.7, 14.9, 5.3, 3.9] — the non-self-warming descent "
-        "signature); events_range_join chain 2.76 vs idle-noop 1.91 "
-        "([5.71, 3.81, 1.91, 1.93] — anchor-adjusted ~1.7, exactly "
-        "the round-11 RANGE_JOIN_REGIMES value); q21 chain 7.42 at "
-        "anchor 0.992 vs 6.37 same-session at the healthier morning "
-        "window — consistent, no action. All closed as the "
-        "cold-cache/host-window families; no plan changed for any "
-        "of them this chain."
-    ),
-    "r13_chains": (
-        "round 13 ran the chain twice (first on the round()-based "
-        "money quantization, then on the floor-form fix it exposed — "
-        "q1 0.92 -> 2.04 s and groupby_agg 1.11 -> 2.34 s at 100x "
-        "from Spark's per-row BigDecimal round(double); floor form "
-        "restored 1.17/1.65). The warm() pre-stage WORKED: the "
-        "standing cold-cache movers stayed in their idle bands "
-        "in-chain for the first time (events_ewma 4.3-5.2 chain vs "
-        "its old 9.9-14.2 cold records; no post-chain re-adjudication "
-        "needed for that family). First-chain dedup-family elevation "
-        "(minhash_lsh 3.81 / verified 4.86 / ngram 9.22 vs r12's "
-        "2.2/2.9/6.0) idle re-measured immediately after at 2.67 / "
-        "2.78 / 6.51 — in-chain CPU/IO contention, not plans (none "
-        "touched); second chain confirmed in-chain (2.75 / 2.35 / "
-        "6.61). One genuine outlier: the second chain's decontaminate "
-        "slot hit a sustained host-I/O window (21.2 s min-of-3, "
-        "spread 10.5, on a query whose re-plan now writes a ~1 GB "
-        "shuffle); 9 idle runs read [5.5-6.6] steady with "
-        "intermittent 10-21 s spikes, and the >50%-regression "
-        "protocol re-ran the tier bench to the clean committed "
-        "record (6.06 s, spread 1.3). text_tfidf, the record's "
-        "nominal tier-worst (9.02, spread 4.8; r12 committed 4.20 at "
-        "spread 7.3), idle re-measures at [11.0, 4.9, 4.2, 4.1, 3.9] "
-        "— steady ~4 s with a first-run JIT/vocab-broadcast cold "
-        "start, the same in-chain window family; plan untouched "
-        "since its Heaps-law vocabulary adjudication. Extended total "
-        "101.1 -> 86.2 s r12 -> r13 at par anchors (0.972/0.982)."
-    ),
-    "r12_third_chain_movers": (
-        "the third round-12 chain (events_json_extract regen, anchor "
-        "0.972 — par with the second's 0.992) confirmed the two "
-        "prior adjudications in-chain (events_json_extract 7.55 -> "
-        "2.77 after the from_json re-plan; kmeans_iterate 5.63 -> "
-        "2.10, the numpy-kernel value the second chain's host window "
-        "had masked) and produced three movers, each idle "
-        "warm-scan re-measured at anchor 0.999: events_ewma 9.96 "
-        "chain / 3.79 idle min-of-3 — the permanent cold-cache "
-        "note's exact oscillation; q10_returned_items 6.94 / 5.06 — "
-        "back to the prior chain's value; window_range_frame 3.33 "
-        "(spread 9.8, first-run cold) / 3.27 idle — at its "
-        "post-re-plan ~2.8-3.3 band. All closed; extended total "
-        "108.6 -> 101.1 s across the two chains."
-    ),
-    "window_range_frame_chain3": (
-        "the round-11 third chain (the PQ-swap regen) ran in a "
-        "HOST-DEGRADED window — CPU anchor 1.257 s vs the same day's "
-        "0.89-0.93 — and recorded four untouched-code >50% movers at "
-        "gen_sf10 (window_range_frame 6.55 -> 10.17, "
-        "events_interval_merge 1.37 -> 3.95, events_anomaly_mad 0.51 "
-        "-> 1.40, events_seasonal_decompose 0.59 -> 0.96 vs the "
-        "second chain hours earlier). Idle re-measure immediately "
-        "after, warm-scan protocol, anchor 1.048: 7.82 / 2.15 / 1.08 "
-        "/ 1.01 — all revert most of the way on plans git-verifiably "
-        "untouched since the second chain. The residual sits inside "
-        "the anchor gap (the host was still ~15% slow at re-measure "
-        "time). Closed as the host-window family; the PQ deltas "
-        "shipped this chain (11.89 -> 0.64, 12.14 -> 0.99) dwarf it "
-        "and survive any anchor correction."
-    ),
-    "events_ewma": (
-        "the recurring 'host I/O contention' query got a MECHANISM in "
-        "round 11: the second-chain gen_sf10 record (12.4 s, vs 4.65 "
-        "in that round's first chain) REPRODUCED idle (11.2 s min-of-3 "
-        "at a healthy 0.887 CPU anchor, buff/cache down to 4 GB of "
-        "125) — then one sequential warming scan of events.parquet "
-        "dropped it to 3.19 s (the historical idle value; the query's "
-        "own runs do NOT self-warm: [16.3, 11.7, 11.2] across three "
-        "noop re-scans). Cold-page-cache column-pruned parquet reads "
-        "are seeky and ~3.5x slower than warm on this VM's storage; "
-        "whether a chain query lands warm depends on what ran before "
-        "it, which is why the family oscillates 3-4 s vs 12-16 s "
-        "across rounds with tight per-run spreads. The CPU anchor "
-        "cannot catch it (I/O, not CPU); treat any ewma-class delta "
-        "as cache state unless it survives an explicit warm scan."
-    ),
-    "pii_pseudonymize": (
-        "investigated round 9 as the 3x tier's worst single query and "
-        "closed as sub-linear vs rows: 2.2-2.3x wall for 3x rows with "
-        "ZERO shuffle at every tier (map-side keyed-hash projection), "
-        "worst at 3x only because every other query there is flatter "
-        "(fixed-overhead-dominated sub-second baselines); at 30x the "
-        "same query is ~1.1x. Recorded here permanently because the "
-        "3x worst-query slot rotates between rounds and the closure "
-        "note must not rotate out with it (VERDICT r10 #4)."
-    ),
-    "sort_topk": _R10_NOISE_CLOSURE.format(pct=28, q=0.121, r8=0.187, r9=0.240),
-    "window_rank": _R10_NOISE_CLOSURE.format(pct=26, q=0.168, r8=0.242, r9=0.306),
-    "text_stats": _R10_NOISE_CLOSURE.format(pct=25, q=0.235, r8=0.296, r9=0.370),
-    "join_star": _R10_NOISE_CLOSURE.format(pct=23, q=0.435, r8=1.052, r9=1.292),
-    "dedup_minhash_lsh": _R10_NOISE_CLOSURE.format(pct=21, q=0.526, r8=0.951, r9=1.152),
-    "q10_returned_items": (
-        "round-10 regen chain recorded 5.83 -> 19.78 s at gen_sf10 on "
-        "untouched code with BYTE-IDENTICAL shuffle (736.48 MB both "
-        "rounds — same plan, same work); idle min-of-3 immediately "
-        "after: 4.78 s, faster than r9. Chain-window host I/O "
-        "contention (same signature as events_ewma, re-measured idle "
-        "at 4.11 s this round vs 13.6 in-chain). Closed."
-    ),
-    "struct_unnest": (
-        "round-10 regen chain recorded 1.398 -> 2.107 s at gen_sf10 "
-        "(1.51x, exactly at the >50% re-run threshold) on untouched "
-        "code; idle min-of-4 re-measure immediately after: 1.351 s — "
-        "the chain window's host I/O contention (the CLAUDE.md "
-        "events_ewma precedent), not the plan. Closed."
-    ),
-    "window_range_frame": (
-        "round 7's regenerated bench showed 2.87 s -> 5.054 s at gen_sf1 "
-        "(10x-rows ratio 4.2x, up from 2.6x); quiet-machine min-of-5 "
-        "re-measurement round 8: sf0.1 1.247 s, gen_sf1 2.144 s = 1.7x — "
-        "the 4.2x was the round-7 sandbox slowdown (uniform ~1.23x, see "
-        "calibration note), not the plan; two-level prefix-sum plan "
-        "unchanged, no single-partition stage."
     ),
 }
 
@@ -549,112 +194,6 @@ def _load(name: str) -> dict | None:
         return None
     with open(path) as f:
         return json.load(f)
-
-
-def _git_prev_record(name: str, cur: dict) -> tuple[str, dict] | None:
-    """The last COMMITTED version of a tier bench record that differs
-    from the working copy — (short sha, record) or None. Makes the
-    gen-tier cross-round anchor machine-readable (VERDICT r13 #8): the
-    chain rewrites BENCH_gen_*.json in place, so 'previous round' for
-    a tier record means its previous git version, not a BENCH_r*.json
-    (those are sf0.1-only)."""
-    import subprocess
-
-    try:
-        shas = subprocess.run(
-            ["git", "log", "-n", "8", "--format=%h", "--", name],
-            capture_output=True, text=True, cwd=ROOT, check=True,
-        ).stdout.split()
-    except (subprocess.CalledProcessError, OSError):
-        return None
-    for sha in shas:
-        # Per-sha try/except: one malformed or deleted version must not
-        # abort the lookup — skip it and keep consulting older commits
-        # (ADVICE r14: a single bad sha silently dropped the whole
-        # tier-continuity line).
-        try:
-            text = subprocess.run(
-                ["git", "show", f"{sha}:{name}"],
-                capture_output=True, text=True, cwd=ROOT, check=True,
-            ).stdout
-            rec = json.loads(text)
-        except (subprocess.CalledProcessError, json.JSONDecodeError, OSError):
-            continue
-        if rec.get("value") and rec.get("calibration_sec") and (
-            rec["value"] != cur.get("value")
-            or rec["calibration_sec"] != cur.get("calibration_sec")
-        ):
-            return sha, rec
-    return None
-
-
-def _tier_continuity_lines() -> list[str]:
-    """Calibrated cross-round ratios for every gen-tier bench record
-    present: (cur.value/cur.cal) / (prev.value/prev.cal) against the
-    last differing committed version."""
-    out = []
-    for name in ("BENCH_gen_sf1.json", "BENCH_gen_sf3.json", "BENCH_gen_sf10.json",
-                 "BENCH_gen_sf0.3.json"):
-        cur = _load(name)
-        if not cur or not cur.get("value") or not cur.get("calibration_sec"):
-            continue
-        prev = _git_prev_record(name, cur)
-        if not prev:
-            continue
-        sha, rec = prev
-        ratio = (cur["value"] / cur["calibration_sec"]) / (
-            rec["value"] / rec["calibration_sec"]
-        )
-        line = (
-            f"- `{name}`: headline {rec['value']} s (@{sha}) -> {cur['value']} s, "
-            f"anchors {rec['calibration_sec']} / {cur['calibration_sec']} — "
-            f"calibrated **{ratio:.3f}x**"
-        )
-        e0, e1 = rec.get("extended_total"), cur.get("extended_total")
-        if e0 and e1:
-            er = (e1 / cur["calibration_sec"]) / (e0 / rec["calibration_sec"])
-            line += f"; extended {e0} -> {e1} s, calibrated **{er:.3f}x**"
-        # Anchor-dominated ratios mislead (round 15: gen_sf1 read
-        # 1.123x "slower" while the RAW headline got faster, purely
-        # because the r14 version was recorded in a 17% slower CPU
-        # window) — say so inline when the anchors differ enough to
-        # manufacture most of the ratio.
-        cal_shift = cur["calibration_sec"] / rec["calibration_sec"]
-        if abs(cal_shift - 1.0) > 0.10:
-            raw = cur["value"] / rec["value"]
-            line += (
-                f" — CAUTION: anchors differ {cal_shift:.2f}x between the two"
-                f" windows, so this ratio is partly anchor-dominated (raw"
-                f" {raw:.3f}x); adjudicate with an idle re-measure before"
-                f" treating it as a plan change"
-            )
-        # Within-run anchor pair (bench.py emits calibration_sec_start
-        # before the headline loop since round 16, VERDICT r15 #8): a
-        # >10% start/end divergence means the record's OWN window was
-        # contended while it ran — flag it in the artifact so the
-        # adjudication doesn't have to live in judge prose.
-        for tag, r in (("prev", rec), ("cur", cur)):
-            cs = r.get("calibration_sec_start")
-            if cs and abs(cs / r["calibration_sec"] - 1.0) > 0.10:
-                line += (
-                    f" — CAUTION: the {tag} record's own start/end anchors"
-                    f" diverge ({cs} -> {r['calibration_sec']} s): contended"
-                    f" window, per-query walls unreliable"
-                )
-        out.append(line)
-    if not out:
-        return []
-    return [
-        "## Cross-round continuity at the generated tiers (calibrated)",
-        "",
-        "Same mechanism as bench.py's `calibrated_vs_prev_round` (sf0.1 "
-        "vs committed BENCH_r*.json), applied to the in-place-rewritten "
-        "tier records via their previous git versions — >1 means this "
-        "round's code is slower per unit of CPU-anchor work at that tier:",
-        "",
-        *out,
-        "",
-    ]
 
 
 #: extra curve points beyond the flagged sf0.1->10x pair: (label,
@@ -812,112 +351,6 @@ def _curation_section() -> list[str]:
         f"wall: {curve}; worst point "
         f"{worst['wall_sec'] / base['wall_sec']:.1f}x wall at "
         f"{worst['mult']}x documents.",
-        "",
-    ]
-    return lines
-
-
-def _idle_remeasure_section() -> list[str]:
-    """Driver-window noise adjudication, rendered from
-    IDLE_REMEASURES.json (scripts/idle_remeasure.py — round-15 VERDICT
-    #1/#2: the idle values that adjudicate elevated committed records
-    must live in a committed artifact, not prose)."""
-    loaded = _load("IDLE_REMEASURES.json")
-    if not loaded:
-        return []
-    records = loaded if isinstance(loaded, list) else [loaded]
-    lines = ["## Idle re-measure adjudication (machine-readable)", ""]
-    for ir in records:
-        lines += _idle_remeasure_record(ir)
-    return lines
-
-
-def _idle_remeasure_record(ir: dict) -> list[str]:
-    has_chain = bool(ir.get("chain_record"))
-    lines = [
-        f"The biggest calibrated per-query movers of `{ir['cur_record']}`"
-        f" vs `{ir['base_record']}`, re-measured idle (page-cache warm,"
-        f" session-shape pre-pass, min-of-{ir['runs_per_query']}, own CPU"
-        f" anchor {ir['idle_calibration_sec']}) at `{ir['sf_dir']}`"
-        + (f", with `{ir['chain_record']}` as a second reference"
-           if has_chain else "") + ":",
-        "",
-        "| query | base s | cur s (ratio) | idle s | idle vs base |"
-        + (" idle vs chain |" if has_chain else ""),
-        "|---|---|---|---|---|" + ("---|" if has_chain else ""),
-    ]
-    reverted = chain_band = 0
-    for q in ir["queries"]:
-        ratio = q.get("cur_vs_base_calibrated")
-        iv = q.get("idle_vs_base_calibrated")
-        ic = q.get("idle_vs_chain_calibrated")
-        if iv is not None and iv <= 1.1:
-            reverted += 1
-        if ic is not None and ic <= 1.2:
-            chain_band += 1
-        row = (
-            f"| {q['query']} | {q['base_sec']} | {q['cur_sec']}"
-            f" ({ratio if ratio is not None else '—'}x) | {q['idle_min_sec']}"
-            f" | **{iv if iv is not None else '—'}x** |"
-        )
-        if has_chain:
-            row += f" {ic if ic is not None else '—'}x |"
-        lines.append(row)
-    n = len(ir["queries"])
-    lines += [
-        "",
-        f"{reverted}/{n} movers revert to within 1.1x of the base record"
-        " when measured idle — those elevations were measurement-window"
-        " noise on unchanged plans."
-        + (
-            f" {chain_band}/{n} sit within 1.2x of the chain reference:"
-            " where idle matches the chain but not the base, the shift is"
-            " SANDBOX drift between the two records' windows (the CPU"
-            " anchor does not capture host I/O/memory contention), not a"
-            " plan regression — the chain record is the reproducible one"
-            " and is the correct diff baseline going forward."
-            if has_chain else ""
-        ),
-        "",
-    ]
-    return lines
-
-
-def _dec38_section() -> list[str]:
-    """DECIMAL(38,0) escape-hatch cost, rendered from DEC38_BENCH.json
-    (scripts/dec38_bench.py — round-15 VERDICT #4: the headroom guard's
-    migration path must have a measured cost, not a designed-on-the-
-    spot one)."""
-    db = _load("DEC38_BENCH.json")
-    if not db:
-        return []
-    lines = [
-        "## DECIMAL(38,0) money-accumulator escape hatch (measured)",
-        "",
-        "`tests/test_money_headroom.py` trips near ~sf25 (charge_scaled"
-        " at q1's 4-group grain) and points at the `dec38_sql` migration"
-        " (functions/money.py), which is implemented and oracle-verified"
-        " (`groupby_agg_dec38`) — this is its measured premium on the"
-        " minimal q1 charge shape, where the A/B delta is exactly the"
-        " accumulator type (same filter, groupBy, and count; adjacent"
-        " warm min-of-"
-        f"{db['runs_per_point']} runs):",
-        "",
-        "| tier | BIGINT s | DECIMAL(38,0) s | dec38 / bigint |",
-        "|---|---|---|---|",
-    ]
-    for t in db["tiers"]:
-        lines.append(
-            f"| {t['tier']} ({t['mult']}x) | {t['bigint_min_sec']} "
-            f"| {t['dec38_min_sec']} | **{t['dec38_over_bigint']}x** |"
-        )
-    lines += [
-        "",
-        "Past-int64 failure mode under Spark 4's default ANSI mode is a"
-        " LOUD `ARITHMETIC_OVERFLOW` (pinned in tests/test_money_dec38.py"
-        " along with exact-beyond-int64 parity of the decimal form), so"
-        " the premium is paid only at tiers the guard names, never"
-        " preemptively.",
         "",
     ]
     return lines
@@ -1086,126 +519,6 @@ def _bucketed_section() -> list[str]:
     return lines
 
 
-#: The r9/r10 committed chain walls for the seven >20% movers
-#: (BENCH_sf0.1.json at 518a1e4 / 70398e6) — the comparison baseline
-#: for the closure lines, which read the LIVE record so every future
-#: chain regen re-tests the closure automatically.
-R9_R10_EXT_MOVERS = {
-    "events_ewma": (0.561, 0.771),
-    "decontaminate": (0.630, 0.864),
-    "embedding_pca_project": (0.593, 0.774),
-    "events_anomaly_mad": (0.398, 0.493),
-    "lm_bigram_score": (0.623, 0.756),
-    "events_seasonal_decompose": (0.352, 0.424),
-    "events_rolling_distinct": (0.394, 0.474),
-}
-
-
-def _extended_drift_section() -> list[str]:
-    """VERDICT r10 #3: the +3.9% r9->r10 extended-bench drift,
-    itemized mover by mover with the same closure protocol the
-    headline five got in round 10."""
-    lines = [
-        "## Extended-bench drift r9 -> r10, itemized (round 11)",
-        "",
-        "Driver records: extended total 33.788 -> 35.104 s (+3.9%) at "
-        "a par anchor (0.896 / 0.894). Committed chain records "
-        "(BENCH_sf0.1.json at 518a1e4 vs 70398e6): 32.551 -> 34.747 s "
-        "(+6.7% raw) — but the chain anchors moved 0.888 -> 0.933 "
-        "(+5.1% slower sandbox), so the CALIBRATED chain drift is "
-        "+1.6%. Every mover above 20% (all sub-second), with its own "
-        "r10 min-of-3 spread beside the delta:",
-        "",
-        "| query | r9 s | r10 s | ratio | delta s | r10 spread s | closure |",
-        "|---|---|---|---|---|---|---|",
-        "| events_ewma | 0.561 | 0.771 | 1.37x | 0.210 | 0.045 | "
-        "re-measured quiet (below) — also the documented host-I/O "
-        "contention query (CLAUDE.md precedent) |",
-        "| decontaminate | 0.630 | 0.864 | 1.37x | 0.234 | 0.316 | "
-        "the round-10 accepted local trade (window -> explode-free "
-        "size() branch: wall par locally, the win is 495 -> 148 MB "
-        "cluster shuffle); delta < its own spread |",
-        "| embedding_pca_project | 0.593 | 0.774 | 1.31x | 0.181 | "
-        "0.647 | delta is 0.3x its OWN r10 min-of-3 spread — "
-        "same-session noise; re-measured quiet (below) |",
-        "| events_anomaly_mad | 0.398 | 0.493 | 1.24x | 0.095 | "
-        "0.160 | delta < spread; re-measured quiet (below) |",
-        "| lm_bigram_score | 0.623 | 0.756 | 1.21x | 0.133 | 0.365 | "
-        "delta < spread — noise family |",
-        "| events_seasonal_decompose | 0.352 | 0.424 | 1.20x | 0.072 "
-        "| 0.198 | delta < spread — noise family |",
-        "| events_rolling_distinct | 0.394 | 0.474 | 1.20x | 0.080 | "
-        "0.297 | delta < spread — noise family |",
-        "",
-        "The seven movers sum to ~1.0 s of the 2.2 s chain delta; the "
-        "remainder is spread across <20% movers. No plan changed for "
-        "any of these between the rounds (git-verified: round 10's "
-        "events_queries.py diff was confined to events_range_join; no "
-        "other mover's function was touched except decontaminate's "
-        "accepted re-plan).",
-        "",
-    ]
-    cur = _load("BENCH_sf0.1.json")
-    if cur:
-        cq = {**cur["queries"], **cur.get("queries_extended", {})}
-        cv = {**cur.get("variance", {}), **cur.get("variance_extended", {})}
-        lines += [
-            "Closure (round 11): the full chain was regenerated this "
-            "round (for the range-join re-plan) — an independent, "
-            "protocol-identical measurement of every mover on "
-            f"otherwise-untouched code (anchor "
-            f"{cur.get('calibration_sec')} s vs r10's 0.933). Current "
-            "chain walls vs the r9/r10 pair:",
-            "",
-        ]
-        still_open = []
-        for q, (r9v, r10v) in R9_R10_EXT_MOVERS.items():
-            now = cq.get(q)
-            if now is None:
-                continue
-            reverted = now <= r10v or (now - r9v) <= (cv.get(q) or 0)
-            lines.append(
-                f"- `{q}`: {r9v:.3f} -> {r10v:.3f} -> **{now:.3f} s** "
-                f"(spread {cv.get(q)}) — "
-                + (
-                    "the accepted round-10 trade; re-planned again in "
-                    "round 13 (eval join shuffle_hash — see the 100x "
-                    "investigation note), so the current value "
-                    "reflects the new plan, not r10's."
-                    if q == "decontaminate"
-                    else "reverted toward r9 / within its own spread; "
-                    "the r10 value was the chain window, not the plan."
-                    if reverted
-                    else "STILL ELEVATED — on the watch list."
-                )
-            )
-            if q != "decontaminate" and not reverted:
-                still_open.append(q)
-        lines += [
-            "",
-            "A protocol caveat discovered while re-measuring "
-            "standalone: a fresh session that runs ONE query pays "
-            "per-query codegen/JIT that the in-chain context (40+ "
-            "prior queries) amortizes — standalone min-of-5 walls run "
-            "~0.1-0.2 s above in-chain values for these sub-second "
-            "queries, so closures compare chain records to chain "
-            "records, never chain to standalone.",
-            "",
-        ]
-        if not still_open:
-            lines.append(
-                "All non-decontaminate movers closed: the r9 -> r10 "
-                "extended drift was the documented chain-window noise "
-                "family plus one accepted re-plan trade."
-            )
-        else:
-            lines.append(
-                "Open after re-measure: " + ", ".join(still_open) + "."
-            )
-        lines.append("")
-    return lines
-
-
 def _misbroadcast_section() -> list[str]:
     """Round-11 systematic sweep for the pathology class the range-join
     regime measurement exposed: Catalyst broadcasting a side that grows
@@ -1282,11 +595,11 @@ def _expansion_audit_section() -> list[str]:
         "bands, shingles, salts — belongs on the side with fewer rows "
         "at that point in the plan. Verified inventory:",
         "",
-        "- `events_range_join` (plans/events_queries.py::_range_join): "
+        "- `events_range_join` (plans/events_queries.py): "
         "two-bucket explode on the FILTERED SIGNUP side (~20% of "
         "events), never the follow side — the round-10 flip that "
-        "motivated the rule (15.4 -> 4.9 s at 100x), regime-measured "
-        "round 11 (section above).",
+        "motivated the rule (15.4 -> 4.9 s at 100x); join regimes "
+        "measured in RANGE_JOIN_REGIMES.json.",
         "- `minhash_bands` (operators/dedup.py:148): banded-signature "
         "explode emits exactly K/band_rows rows per doc — symmetric "
         "self-candidate generation, no side choice exists; downstream "
@@ -1337,67 +650,6 @@ def _expansion_audit_section() -> list[str]:
     ]
 
 
-def _range_join_regimes_section() -> list[str]:
-    """Every join regime of events_range_join measured at the big
-    tier, rendered from RANGE_JOIN_REGIMES.json
-    (scripts/range_join_regimes.py — VERDICT r10 #1: the fallback
-    regime was asserted, never measured)."""
-    rj = _load("RANGE_JOIN_REGIMES.json")
-    if not rj:
-        return []
-    fan = rj["fanout"]
-    lines = [
-        f"## Range-join regimes at {rj['tier']} (every strategy measured)",
-        "",
-        "Identical dataflow, only the join-strategy hint varies "
-        "(min-of-3 after an untimed per-regime warm run, calibration "
-        f"anchor {rj['calibration_sec']} s). Measuring the fallback "
-        "regime round 11 found the round-10 note's premise wrong: "
-        "Catalyst's unhinted pick was a BroadcastHashJoin building the "
-        "FOLLOW-side projection — the side that grows with the corpus "
-        "— not the signup side. The shipped form hints `shuffle_hash` "
-        "on the signup side; the spill-safe SortMergeJoin fallback "
-        "measures at par, so the plan is safe in whichever regime a "
-        "cluster lands in.",
-        "",
-        "| regime | hint | wall min s | shuffle write MB | join | exchanges | spill MB |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for r in rj["regimes"]:
-        join = (
-            f"BHJ x{r['bhj']}" if r["bhj"]
-            else f"SHJ x{r['shj']}" if r["shj"]
-            else f"SMJ x{r['smj']}"
-        )
-        lines.append(
-            f"| {r['regime']} | {r['hint'] or '—'} | {r['wall_min_sec']} "
-            f"| {r['shuffle_write_mb']} | {join} | {r['exchanges']} "
-            f"| {r['spill_mb']} |"
-        )
-    lines += [
-        "",
-        "Why the 212 MB shuffle beats the 15.7 MB broadcast locally — "
-        "and why it is the only shape that survives 100 TB: the "
-        "broadcast regime's 'small' shuffle hides a single-threaded "
-        "hash build of the entire follow-side projection (every event "
-        "row), which grows linearly with the corpus until the driver "
-        "dies; the shuffle regimes partition BOTH sides on the bounded "
-        "(user_id, day-bucket) key, so per-task state is one slice of "
-        "the FILTERED signup side (shuffle_hash) or a spillable sorted "
-        "run (merge). The bucketed key keeps every regime skew-safe: "
-        f"max {fan['max_events_per_user_day']} / p99 "
-        f"{fan['p99_events_per_user_day']} events per (user, day) vs "
-        f"{fan['max_events_per_user_lifetime']} / "
-        f"{fan['p99_events_per_user_lifetime']} per user lifetime — "
-        "join groups are one user-day, never one user-history. "
-        "`tests/test_plans.py::test_range_join_builds_hash_from_signup_side` "
-        "locks the shape: ShuffledHashJoin building the signup side or "
-        "the SMJ fallback tolerated, any BroadcastHashJoin fails.",
-        "",
-    ]
-    return lines
-
-
 def _streaming_section() -> list[str]:
     """Structured Streaming timing/state evidence, rendered from
     STREAM_BENCH.json (scripts/stream_bench.py)."""
@@ -1423,7 +675,8 @@ def _streaming_section() -> list[str]:
     return lines
 
 
-def main() -> None:
+def render() -> str:
+    """SCALING.md's full text, built from the committed records only."""
     b0 = _load("BENCH_sf0.1.json")
     b1 = _load("BENCH_gen_sf1.json")
     a0 = _load("SCALE_AUDIT.json")
@@ -1531,17 +784,6 @@ def main() -> None:
         for r in noted:
             out.append(f"- `{r['query']}`: {FLAG_NOTES[r['query']]}")
         out.append("")
-    if WATCH_NOTES:
-        out += [
-            "## Watch list (below flag thresholds, re-measured after a "
-            "cross-round drift)",
-            "",
-        ]
-        for name, note in WATCH_NOTES.items():
-            cur = next((r for r in rows if r["query"] == name), None)
-            ratio = f" (this run: {cur['wall_ratio']}x)" if cur else ""
-            out.append(f"- `{name}`{ratio}: {note}")
-        out.append("")
     out += _mid_tier_section(b0, b1)
     out += [
         "## Correctness at 10x",
@@ -1562,16 +804,11 @@ def main() -> None:
         " sf0.001 / sf0.1 / 10x.",
         "",
     ]
-    out += _tier_continuity_lines()
-    out += _extended_drift_section()
-    out += _range_join_regimes_section()
     out += _misbroadcast_section()
     out += _expansion_audit_section()
     out += _bucketed_section()
     out += _curation_section()
     out += _streaming_section()
-    out += _dec38_section()
-    out += _idle_remeasure_section()
     out += [
         "| query | wall sf0.1 s | wall 10x s | wall ratio | shufW sf0.1 MB | shufW 10x MB | shuf ratio | spill 10x MB |",
         "|---|---|---|---|---|---|---|---|",
@@ -1582,12 +819,13 @@ def main() -> None:
             f"| {r['wall_ratio']} | {r['shuffle_sf01_mb']} | {r['shuffle_sf1_mb']} "
             f"| {r['shuffle_ratio']} | {r['spill_sf1_mb']} |"
         )
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
     with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(
-        f"wrote SCALING.md  (headline {h1 / h0:.1f}x, "
-        f"{len(flagged)} flagged: {[r['query'] for r in flagged]})"
-    )
+        f.write(render())
+    print("wrote SCALING.md")
 
 
 if __name__ == "__main__":

@@ -1,9 +1,11 @@
-"""Pure-python guards for the SCALING.md generator's edge cases.
+"""Pure-python guards for the SCALING.md generator.
 
 The regen chain runs scripts/scaling_report.py last — a crash there
 loses an hour of measurements, so the degenerate-record paths that
 ADVICE rounds flagged get direct tests (no Spark, no fixtures on
-disk: _load is monkeypatched)."""
+disk: _load is monkeypatched). SCALING.md itself must be exactly the
+generator's output over the committed records, so hand edits to it
+(or generator edits without a regeneration) fail here."""
 
 from __future__ import annotations
 
@@ -12,12 +14,11 @@ import os
 import sys
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _load_module():
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        "scaling_report.py",
-    )
+    path = os.path.join(ROOT, "scripts", "scaling_report.py")
     spec = importlib.util.spec_from_file_location("scaling_report_under_test", path)
     mod = importlib.util.module_from_spec(spec)
     sys.modules[spec.name] = mod
@@ -70,3 +71,11 @@ def test_breakeven_still_computes_when_savings_clear_the_floors():
     # write 30 s / 2 s saved = 15 executions; 400 MB / 350 MB = ~1
     assert "**~15-15 executions**" in text
     assert "**~1-1 executions**" in text
+
+
+def test_scaling_md_matches_generator():
+    with open(os.path.join(ROOT, "SCALING.md")) as f:
+        committed = f.read()
+    assert _load_module().render() == committed, (
+        "SCALING.md is stale: run python scripts/scaling_report.py"
+    )
