@@ -16,7 +16,6 @@ pipeline through local files and never import it.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from rust_etl_spark.errors import ApiError, EmptyResponseError, HttpStatusError, InvalidUrlError
 
@@ -38,7 +37,6 @@ def fetch_data_to_disk(
     dest_path: str,
     *,
     timeout_s: int = DEFAULT_TIMEOUT_S,
-    progress: Callable[[int], None] | None = None,
 ) -> int:
     """GET ``url`` streaming into ``dest_path``; returns bytes written.
 
@@ -65,8 +63,6 @@ def fetch_data_to_disk(
             if chunk:
                 f.write(chunk)
                 written += len(chunk)
-                if progress is not None:
-                    progress(written)
     if written == 0:
         os.remove(dest_path)  # api.rs:109-113
         raise EmptyResponseError(f"zero-byte response from {url!r}")

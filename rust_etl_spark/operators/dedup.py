@@ -43,12 +43,13 @@ from rust_etl_spark.functions.textfns import (
     word_shingles_sql,
 )
 from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
-from rust_etl_spark.functions.vectors import cosine, cosine_sql, to_double_array
+from rust_etl_spark.functions.vectors import cosine, to_double_array
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
-def _expand_pairs(members: str, a: str = "doc_a", b: str = "doc_b"):
-    """All ordered pairs (x < y) from a sorted id-array column — in-row
+def expand_pairs(members: str, pair):
+    """Explode every ordered pair (x, y), x before y, of the sorted array
+    column ``members`` into one ``pair(x, y)`` struct per row — in-row
     expansion, so candidate generation never self-joins (and never
     recomputes the upstream pipeline for a second join side)."""
     return F.explode(
@@ -57,7 +58,7 @@ def _expand_pairs(members: str, a: str = "doc_a", b: str = "doc_b"):
                 members,
                 lambda x, i: F.transform(
                     F.slice(F.col(members), i + 2, F.size(members)),
-                    lambda y: F.struct(x.alias(a), y.alias(b)),
+                    lambda y: pair(x, y),
                 ),
             )
         )
@@ -188,20 +189,13 @@ _MINHASH_ORACLE = f"""
 """
 
 
-def minhash_candidate_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = MINHASH_K,
-    band_rows: int = MINHASH_BAND_ROWS,
-) -> DataFrame:
-    """(doc_a, doc_b) MinHash-LSH near-dup candidate pairs (doc_a < doc_b).
-
-    ``(k, band_rows)`` defaults to the shipped operating point; the
-    parameterization exists so recall can be characterized against
+def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b) MinHash-LSH near-dup candidate pairs (doc_a < doc_b)
+    at the shipped operating point; ``minhash_candidate_pairs_df`` takes
+    ``(k, band_rows)`` so recall can be characterized against
     exact-Jaccard ground truth (see ``minhash_recall`` and the recall
     table in CATALOG.md)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_candidate_pairs_df(docs, k, band_rows)
+    return minhash_candidate_pairs_df(load_table(spark, sf_dir, "documents"))
 
 
 def minhash_candidate_pairs_df(
@@ -218,7 +212,11 @@ def minhash_candidate_pairs_df(
         .agg(F.sort_array(F.collect_list("doc_id")).alias("members"))
         .filter((F.size("members") >= 2) & (F.size("members") <= MINHASH_MAX_BUCKET))
     )
-    pairs = buckets.select(_expand_pairs("members").alias("p"))
+    pairs = buckets.select(
+        expand_pairs(
+            "members", lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
+        ).alias("p")
+    )
     return pairs.select("p.doc_a", "p.doc_b").distinct()
 
 
@@ -490,21 +488,18 @@ _JACCARD_ORACLE = f"""
 """
 
 
-@register(
-    "dedup_ngram_jaccard",
-    oracle=_JACCARD_ORACLE,
-    doc=f"{JACCARD_SHINGLE_N}-gram Jaccard pairs >= {JACCARD_THRESHOLD} via an inverted "
-    f"index over discriminative shingles (df <= {JACCARD_DF_CAP}); one linear dataflow, "
-    "single documents scan, in-row pair expansion.",
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single linear dataflow — ONE scan of ``documents``.
+def _shingle_overlaps(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, na, nb, n_common) for every pair of documents that
+    share a discriminative shingle: na / nb are the sizes of each
+    document's df-capped shingle set, n_common the size of their
+    intersection. The candidate stage of ``dedup_ngram_jaccard`` and
+    ``dedup_containment``, which differ only in the score.
 
-    The round-1 shape derived postings, then joined per-doc sizes back
-    onto the expanded pairs; Spark has no subplan reuse above
-    exchanges, so the postings pipeline (scan + tokenize + shingle +
-    shuffle) re-evaluated once per consumer (3x). Here every stage is
-    consumed exactly once: df-cap via a window on shingle, per-doc
+    Single linear dataflow — ONE scan of ``docs``. Spark has no subplan
+    reuse above exchanges, so a stage consumed twice (e.g. per-doc
+    sizes joined back onto the pairs) re-evaluates scan + tokenize +
+    shingle + shuffle once per consumer. Here every stage is consumed
+    exactly once: df-cap via a window on shingle, per-doc
     discriminative-set size via a window on doc_id (carried alongside,
     so no size join later), regroup by shingle, in-row pair expansion
     with both sizes already attached, and one final pair aggregation.
@@ -512,7 +507,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-splittable at 100 TB; per-list width stays bounded by the
     df-cap.
     """
-    docs = load_table(spark, sf_dir, "documents")
     # Materialize the token array before shingling (see word_shingles PERF note).
     toks = docs.select("doc_id", tokens("text").alias("t"))
     sh_all = toks.select(
@@ -533,26 +527,31 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ms") >= 2)
     )
     pairs = members.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ms",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size("ms")),
-                        lambda y: F.struct(
-                            x["doc_id"].alias("doc_a"),
-                            x["n"].alias("na"),
-                            y["doc_id"].alias("doc_b"),
-                            y["n"].alias("nb"),
-                        ),
-                    ),
-                )
-            )
+        expand_pairs(
+            "ms",
+            lambda x, y: F.struct(
+                x["doc_id"].alias("doc_a"),
+                x["n"].alias("na"),
+                y["doc_id"].alias("doc_b"),
+                y["n"].alias("nb"),
+            ),
         ).alias("p")
     )
-    inter = pairs.groupBy("p.doc_a", "p.doc_b", "p.na", "p.nb").agg(
+    return pairs.groupBy("p.doc_a", "p.doc_b", "p.na", "p.nb").agg(
         F.count(F.lit(1)).alias("n_common")
     )
+
+
+@register(
+    "dedup_ngram_jaccard",
+    oracle=_JACCARD_ORACLE,
+    doc=f"{JACCARD_SHINGLE_N}-gram Jaccard pairs >= {JACCARD_THRESHOLD} via an inverted "
+    f"index over discriminative shingles (df <= {JACCARD_DF_CAP}); one linear dataflow, "
+    "single documents scan, in-row pair expansion.",
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jaccard n_common / (na + nb - n_common) over ``_shingle_overlaps``."""
+    inter = _shingle_overlaps(load_table(spark, sf_dir, "documents"))
     jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
         inter.filter(jac >= JACCARD_THRESHOLD)
@@ -1167,54 +1166,12 @@ _CONTAINMENT_ORACLE = f"""
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric-overlap (containment) duplicate detection.
 
-    Same single-scan posting-list dataflow as ``dedup_ngram_jaccard``
-    (df-cap bounds the per-shingle fan-out, sizes ride the rows, one
-    in-row pair expansion) — only the final score changes to
+    The candidate stage is ``_shingle_overlaps``, shared with
+    ``dedup_ngram_jaccard``; only the final score changes to
     n_common / min(na, nb), the Broder containment of the smaller
-    discriminative set. At 100 TB the cost profile is identical to
-    the Jaccard pass, so a curation run gets both signals from what
-    can be one shared candidate stage.
+    discriminative set.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("t"))
-    sh_all = toks.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(word_shingles(F.col("t"), JACCARD_SHINGLE_N), md5_long60)
-            )
-        ).alias("sh"),
-    )
-    capped = sh_all.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-    ).filter(F.col("df") <= JACCARD_DF_CAP)
-    sized = capped.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-    members = (
-        sized.groupBy("sh")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    pairs = members.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ms",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size("ms")),
-                        lambda y: F.struct(
-                            x["doc_id"].alias("doc_a"),
-                            x["n"].alias("na"),
-                            y["doc_id"].alias("doc_b"),
-                            y["n"].alias("nb"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    inter = pairs.groupBy("p.doc_a", "p.doc_b", "p.na", "p.nb").agg(
-        F.count(F.lit(1)).alias("n_common")
-    )
+    inter = _shingle_overlaps(load_table(spark, sf_dir, "documents"))
     cont = F.col("n_common") / F.least("na", "nb")
     return (
         inter.filter(cont >= CONTAINMENT_TAU)
@@ -1380,13 +1337,14 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.size("ms") >= 2) & (F.size("ms") <= SIMHASH_MAX_BUCKET))
     )
     pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ms, (x, i) -> "
-                "transform(slice(ms, i + 2, size(ms)), y -> "
-                "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-                "x.simhash AS sa, y.simhash AS sb))))"
-            )
+        expand_pairs(
+            "ms",
+            lambda x, y: F.struct(
+                x["doc_id"].alias("doc_a"),
+                y["doc_id"].alias("doc_b"),
+                x["simhash"].alias("sa"),
+                y["simhash"].alias("sb"),
+            ),
         ).alias("p")
     ).select("p.doc_a", "p.doc_b", "p.sa", "p.sb").distinct()
     hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
@@ -1401,9 +1359,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_novelty_curve",
-    oracle=r"""
+    oracle=f"""
         WITH sh AS (
-            SELECT doc_id, unnest((SELECT CASE WHEN len(t) < 3 THEN [] ELSE list_transform(range(1, len(t) - 1), i -> t[i + 0] || ' ' || t[i + 1] || ' ' || t[i + 2]) END FROM (SELECT (CASE WHEN length(trim(lower(text))) = 0 THEN [] ELSE string_split_regex(trim(lower(text)), '\s+') END) AS t))) AS s
+            SELECT doc_id, unnest({word_shingles_sql(tokens_sql('text'), 3)}) AS s
             FROM documents
         ),
         per AS (SELECT DISTINCT doc_id, s FROM sh),

@@ -1283,7 +1283,8 @@ def _pq_anchors(emb: DataFrame) -> list:
         .select("embedding")
         .collect()
     )
-    assert len(anchors) == PQ_K, "anchor codebook incomplete"
+    if len(anchors) != PQ_K:
+        raise ValueError(f"anchor codebook incomplete: {len(anchors)} of {PQ_K} anchors")
     return anchors
 
 

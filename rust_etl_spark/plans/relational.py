@@ -34,6 +34,7 @@ from rust_etl_spark.functions.money import (
     REV_SCALED as _REV_SCALED,
 )
 from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+from rust_etl_spark.operators.dedup import expand_pairs
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
@@ -73,9 +74,9 @@ def filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount")
 
 
-@register(
-    "groupby_agg",
-    oracle=f"""
+def pricing_summary_oracle(cutoff: str) -> str:
+    """DuckDB mirror of :func:`pricing_summary`."""
+    return f"""
         SELECT l_returnflag, l_linestatus,
                CAST(qty AS DOUBLE) AS sum_qty,
                {round_half_up_sql("cents / 100.0", 2)} AS sum_base_price,
@@ -94,19 +95,19 @@ def filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(sum({_DPCT}) AS BIGINT) AS dpct,
                    CAST(count(*) AS BIGINT) AS cnt
             FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '{_CUTOFF}'
+            WHERE l_shipdate <= TIMESTAMP '{cutoff}'
             GROUP BY l_returnflag, l_linestatus
         ) t
-    """,
-    doc="TPC-H-Q1-shaped flagship: filter + 2-key groupBy + 8 aggregates (map-side "
-    "partial agg). Money/rate aggregates are exact scaled BIGINTs (functions/"
-    "money.py); dollars reconstitute via identical IEEE steps on both engines.",
-)
-def groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """
+
+
+def pricing_summary(spark: SparkSession, sf_dir: str, cutoff: str) -> DataFrame:
+    """TPC-H Q1 pricing summary of lineitem shipped on or before ``cutoff``:
+    2-key groupBy, 8 exact scaled-integer aggregates (functions/money.py)."""
     li = load_table(spark, sf_dir, "lineitem")
     cnt = F.col("cnt")
     return (
-        li.filter(F.col("l_shipdate") <= F.lit(_CUTOFF).cast("timestamp"))
+        li.filter(F.col("l_shipdate") <= F.lit(cutoff).cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum(F.expr(_QTY_INT)).cast("long").alias("qty"),
@@ -129,6 +130,17 @@ def groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cnt").alias("count_order"),
         )
     )
+
+
+@register(
+    "groupby_agg",
+    oracle=pricing_summary_oracle(_CUTOFF),
+    doc="TPC-H-Q1-shaped flagship: filter + 2-key groupBy + 8 aggregates (map-side "
+    "partial agg). Money/rate aggregates are exact scaled BIGINTs (functions/"
+    "money.py); dollars reconstitute via identical IEEE steps on both engines.",
+)
+def groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return pricing_summary(spark, sf_dir, _CUTOFF)
 
 
 @register(
@@ -199,12 +211,19 @@ def groupby_agg_dec38(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one partial+final agg. Exact scaled-integer discount revenue.",
 )
 def agg_filter_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return discount_revenue(spark, sf_dir, 0.05, 0.07)
+
+
+def discount_revenue(spark: SparkSession, sf_dir: str, lo: float, hi: float) -> DataFrame:
+    """TPC-H Q6 revenue of 1997 lineitem with quantity < 24 and ``lo <=
+    l_discount <= hi``; every predicate pushes down to the parquet scan."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & F.col("l_discount").between(0.05, 0.07)
+            & (F.col("l_discount") >= lo)
+            & (F.col("l_discount") <= hi)
             & (F.col("l_quantity") < 24)
         )
         .agg(F.sum(F.expr(_DISC_REV_SCALED)).cast("long").alias("rev_scaled"))
@@ -717,16 +736,8 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.size("parts") >= 2) & (F.size("parts") <= BASKET_CAP))
     )
     pairs = baskets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "parts",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("parts"), i + 2, F.size("parts")),
-                        lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-                    ),
-                )
-            )
+        expand_pairs(
+            "parts", lambda x, y: F.struct(x.alias("part_a"), y.alias("part_b"))
         ).alias("p")
     )
     return (

@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 
 from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
 from rust_etl_spark.plans.catalog import register
+from rust_etl_spark.plans.relational import (
+    discount_revenue,
+    pricing_summary,
+    pricing_summary_oracle,
+)
 from rust_etl_spark.sources import load_table
 
 # Exact scaled-integer money (the abc_analysis / q9 / q15 pattern,
@@ -21,11 +26,8 @@ from rust_etl_spark.sources import load_table
 # failed twice at the 10x tier in round 6 and CLAUDE.md's policy is to
 # migrate the class, not wait for the third hit). See functions/money.py.
 from rust_etl_spark.functions.money import (  # noqa: E402
-    CHARGE_SCALED as _CHARGE_SCALED,
     CENTS as _CENTS,
     DISC_REV_SCALED as _DISC_REV_SCALED,
-    DPCT as _DPCT,
-    QTY_INT as _QTY_INT,
     REV_SCALED as _REV_SCALED,
 )
 
@@ -282,29 +284,7 @@ def join_outer_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q1_pricing_summary",
-    oracle=f"""
-        SELECT l_returnflag, l_linestatus,
-               CAST(qty AS DOUBLE) AS sum_qty,
-               {round_half_up_sql("cents / 100.0", 2)} AS sum_base_price,
-               {round_half_up_sql("rev / 10000.0", 2)} AS sum_disc_price,
-               {round_half_up_sql("charge / 1000000.0", 2)} AS sum_charge,
-               {round_half_up_sql("qty / (cnt * 1.0)", 4)} AS avg_qty,
-               {round_half_up_sql("cents / (cnt * 100.0)", 4)} AS avg_price,
-               {round_half_up_sql("dpct / (cnt * 100.0)", 4)} AS avg_disc,
-               cnt AS count_order
-        FROM (
-            SELECT l_returnflag, l_linestatus,
-                   CAST(sum({_QTY_INT}) AS BIGINT) AS qty,
-                   CAST(sum({_CENTS}) AS BIGINT) AS cents,
-                   CAST(sum({_REV_SCALED}) AS BIGINT) AS rev,
-                   CAST(sum({_CHARGE_SCALED}) AS BIGINT) AS charge,
-                   CAST(sum({_DPCT}) AS BIGINT) AS dpct,
-                   CAST(count(*) AS BIGINT) AS cnt
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        ) t
-    """,
+    oracle=pricing_summary_oracle("2000-09-02 00:00:00"),
     doc="TPC-H-Q1-shaped pricing summary: the canonical wide-aggregate scan — one "
     "pass, partial (map-side) aggregation into 4 groups, derived sums/avgs all in "
     "whole-stage codegen; the shuffle moves only 4 groups x 8 partials. All money "
@@ -313,33 +293,7 @@ def join_outer_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identical IEEE division + half-up-round steps on both engines.",
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp")
-    )
-    cnt = F.col("cnt")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.expr(_QTY_INT)).cast("long").alias("qty"),
-            F.sum(F.expr(_CENTS)).cast("long").alias("cents"),
-            F.sum(F.expr(_REV_SCALED)).cast("long").alias("rev"),
-            F.sum(F.expr(_CHARGE_SCALED)).cast("long").alias("charge"),
-            F.sum(F.expr(_DPCT)).cast("long").alias("dpct"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            F.col("qty").cast("double").alias("sum_qty"),
-            round_half_up(F.col("cents") / F.lit(100.0), 2).alias("sum_base_price"),
-            round_half_up(F.col("rev") / F.lit(10000.0), 2).alias("sum_disc_price"),
-            round_half_up(F.col("charge") / F.lit(1000000.0), 2).alias("sum_charge"),
-            round_half_up(F.col("qty") / (cnt * F.lit(1.0)), 4).alias("avg_qty"),
-            round_half_up(F.col("cents") / (cnt * F.lit(100.0)), 4).alias("avg_price"),
-            round_half_up(F.col("dpct") / (cnt * F.lit(100.0)), 4).alias("avg_disc"),
-            F.col("cnt").alias("count_order"),
-        )
-    )
+    return pricing_summary(spark, sf_dir, "2000-09-02 00:00:00")
 
 
 @register(
@@ -361,20 +315,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(cents x discount-pct).",
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.045)
-            & (F.col("l_discount") <= 0.075)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(F.sum(F.expr(_DISC_REV_SCALED)).cast("long").alias("rev_scaled"))
-        .select(
-            round_half_up(F.col("rev_scaled") / F.lit(10000.0), 2).alias("revenue")
-        )
-    )
+    return discount_revenue(spark, sf_dir, 0.045, 0.075)
 
 
 Q18_QTY_MIN = 300.0

@@ -198,9 +198,12 @@ def zorder_key(a, b, bits: int = 16):
     bit — so z-keys go negative and sort locality inverts (ADVICE
     r15). Shipped callers use bits=21 / default 16.
     """
+    if bits > 31:
+        raise ValueError(
+            f"bits={bits} > 31: the b-side spread would reach the long sign bit"
+        )
     from pyspark.sql import functions as F
 
-    assert bits <= 31, "bit 31 of the b-side spread would reach the long sign bit"
     mask = F.lit((1 << bits) - 1).cast("long")
     sa = _morton_spread(a.cast("long").bitwiseAND(mask))
     sb = _morton_spread(b.cast("long").bitwiseAND(mask))

@@ -14,6 +14,11 @@ file source here is a stand-in for Kafka: swap ``readStream.format``.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +52,41 @@ def windowed_counts_batch(events: DataFrame) -> DataFrame:
     )
 
 
+def drain_bounded_stream(
+    spark: SparkSession,
+    events_path: str,
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+    mode: str,
+    name: str,
+    copies: int,
+) -> DataFrame:
+    """Run ``build(source)`` as a streaming query over ``copies`` copies
+    of the events file until drained; return the memory-sink table ``name``.
+
+    ``source()`` opens one file stream (one file per trigger, event time
+    normalized as in ``load_table``); the interval join opens two. The
+    watched directory is removed once the query stops — the memory sink
+    keeps its rows on the driver.
+    """
+    # events.ts is parquet TIMESTAMP(NANOS) — see sources/tables.py.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(events_path).schema
+    with tempfile.TemporaryDirectory(prefix="events_") as watch_dir:
+        for i in range(copies):
+            shutil.copy(events_path, os.path.join(watch_dir, f"{i}.parquet"))
+
+        def source() -> DataFrame:
+            s = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(watch_dir)
+            return normalize_event_time(s)
+
+        q = build(source).writeStream.outputMode(mode).format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return spark.table(name)
+
+
 def run_stream_dedup_once(spark: SparkSession, events_path: str) -> int:
     """Streaming exact dedup: the same events file delivered twice
     (two micro-batches of duplicates) must come out once.
@@ -56,28 +96,13 @@ def run_stream_dedup_once(spark: SparkSession, events_path: str) -> int:
     watermark horizon and expires beyond it, so unbounded duplicate
     streams run in bounded memory. Returns the deduplicated count.
     """
-    import shutil
-    import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    watch_dir = tempfile.mkdtemp(prefix="events_dedup_")
-    shutil.copy(events_path, f"{watch_dir}/a.parquet")
-    shutil.copy(events_path, f"{watch_dir}/b.parquet")  # exact duplicates
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(watch_dir)
-    stream = normalize_event_time(stream).withColumnRenamed("ts", "ts_event")
-    deduped = stream.withWatermark("ts_event", WATERMARK).dropDuplicates(["event_id", "ts_event"])
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("events_deduped")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql("SELECT count(*) AS n FROM events_deduped").collect()[0]["n"]
+    def build(source):
+        return source().withWatermark("ts", WATERMARK).dropDuplicates(["event_id", "ts"])
+
+    return drain_bounded_stream(
+        spark, events_path, build, "append", "events_deduped", copies=2
+    ).count()
 
 
 def run_stream_interval_join_once(spark: SparkSession, events_path: str) -> DataFrame:
@@ -91,86 +116,46 @@ def run_stream_interval_join_once(spark: SparkSession, events_path: str) -> Data
     only rows inside watermark + interval, regardless of stream length.
     Returns the joined (signup_id, event_id) pairs from the memory sink.
     """
-    import shutil
-    import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    watch_dir = tempfile.mkdtemp(prefix="events_ssjoin_")
-    shutil.copy(events_path, watch_dir)
-    schema = spark.read.parquet(events_path).schema
-
-    def src():
-        # Raw stream source bypasses load_table, so route through the
-        # same schema-robust normalizer (nanos-long or NTZ vintage).
-        s = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(watch_dir)
-        return normalize_event_time(s).withColumnRenamed("ts", "ts_ev")
-
-    signups = (
-        src()
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            F.col("user_id").alias("s_user"),
-            F.col("ts_ev").alias("ts_s"),
+    def build(source):
+        signups = (
+            source()
+            .filter(F.col("event_type") == "signup")
+            .select(
+                F.col("event_id").alias("signup_id"),
+                F.col("user_id").alias("s_user"),
+                F.col("ts").alias("ts_s"),
+            )
+            .withWatermark("ts_s", "1 hour")
         )
-        .withWatermark("ts_s", "1 hour")
-    )
-    follows = (
-        src()
-        .select("event_id", F.col("user_id").alias("e_user"), F.col("ts_ev").alias("ts_e"))
-        .withWatermark("ts_e", "1 hour")
-    )
-    joined = signups.join(
-        follows,
-        F.expr(
-            "e_user = s_user AND ts_e > ts_s AND ts_e <= ts_s + INTERVAL 24 HOURS"
-        ),
-    ).select("signup_id", "event_id")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("events_ssjoin")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql("SELECT signup_id, event_id FROM events_ssjoin")
+        follows = (
+            source()
+            .select("event_id", F.col("user_id").alias("e_user"), F.col("ts").alias("ts_e"))
+            .withWatermark("ts_e", "1 hour")
+        )
+        return signups.join(
+            follows,
+            F.expr("e_user = s_user AND ts_e > ts_s AND ts_e <= ts_s + INTERVAL 24 HOURS"),
+        ).select("signup_id", "event_id")
+
+    return drain_bounded_stream(spark, events_path, build, "append", "events_ssjoin", copies=1)
 
 
 def run_stream_once(spark: SparkSession, sf_dir: str, events_path: str) -> DataFrame:
     """Drive the streaming agg over a bounded file source to
     completion (memory sink) and return the result as a DataFrame —
     the standard local smoke for a streaming plan."""
-    import shutil
-    import tempfile
 
-    # events.ts is parquet TIMESTAMP(NANOS) — see sources/tables.py.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The file stream source requires a *directory* to watch.
-    watch_dir = tempfile.mkdtemp(prefix="events_stream_")
-    shutil.copy(events_path, watch_dir)
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(watch_dir)
-    stream = normalize_event_time(stream)
-    agg = (
-        stream.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), _total_value_col().alias("total_value"))
-        .select(F.col("w.start").alias("w_start"), "event_type", "n", "total_value")
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("events_windowed")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql("SELECT * FROM events_windowed")
+    def build(source):
+        return (
+            source()
+            .withWatermark("ts", WATERMARK)
+            .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"), _total_value_col().alias("total_value"))
+            .select(F.col("w.start").alias("w_start"), "event_type", "n", "total_value")
+        )
+
+    return drain_bounded_stream(spark, events_path, build, "complete", "events_windowed", copies=1)
 
 
 SESSION_GAP = "30 minutes"
@@ -187,35 +172,20 @@ def run_stream_sessions_once(spark: SparkSession, events_path: str) -> DataFrame
     an unbounded event stream sessionizes in bounded memory. Append
     mode emits each session exactly once, when it finalizes.
     """
-    import shutil
-    import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    watch_dir = tempfile.mkdtemp(prefix="events_sess_")
-    shutil.copy(events_path, watch_dir)
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(watch_dir)
-    stream = normalize_event_time(stream)
-    agg = (
-        stream.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), _total_value_col().alias("total_value"))
-        .select(
-            "user_id",
-            F.unix_micros("w.start").alias("s_start_us"),
-            F.unix_micros("w.end").alias("s_end_us"),
-            "n_events",
-            "total_value",
+    def build(source):
+        return (
+            source()
+            .withWatermark("ts", WATERMARK)
+            .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"), _total_value_col().alias("total_value"))
+            .select(
+                "user_id",
+                F.unix_micros("w.start").alias("s_start_us"),
+                F.unix_micros("w.end").alias("s_end_us"),
+                "n_events",
+                "total_value",
+            )
         )
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("events_sessions")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql("SELECT * FROM events_sessions")
+
+    return drain_bounded_stream(spark, events_path, build, "append", "events_sessions", copies=1)

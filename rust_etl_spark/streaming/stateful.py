@@ -32,10 +32,10 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from rust_etl_spark.sources.tables import normalize_event_time
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
+
+from rust_etl_spark.streaming.events import drain_bounded_stream
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double, last_ts_ns bigint"
 STATE_SCHEMA = "n bigint, total double, last_ns bigint"
@@ -73,27 +73,14 @@ def user_profiles_stream(events_stream: DataFrame) -> DataFrame:
 def run_profiles_once(spark: SparkSession, events_path: str) -> DataFrame:
     """Drive the stateful operator over a bounded file stream; returns
     the final per-user profile (last update per key)."""
-    import shutil
-    import tempfile
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    watch_dir = tempfile.mkdtemp(prefix="events_state_")
-    shutil.copy(events_path, watch_dir)
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(watch_dir)
-    stream = normalize_event_time(stream)
-    out = user_profiles_stream(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_profiles")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update-mode memory sink appends every update; keep the last per key
-    all_updates = spark.sql("SELECT * FROM user_profiles")
+    all_updates = drain_bounded_stream(
+        spark,
+        events_path,
+        lambda source: user_profiles_stream(source()),
+        "update",
+        "user_profiles",
+        copies=1,
+    )
     w = F.row_number().over(Window.partitionBy("user_id").orderBy(F.col("n_events").desc()))
     return all_updates.withColumn("rn", w).filter(F.col("rn") == 1).drop("rn")

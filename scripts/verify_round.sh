@@ -19,22 +19,29 @@
 #      caught two real scale bugs in round 11 now fires on every
 #      gate run, not only on manual gen_sf10 sweeps (which remain
 #      the round-close deep check for AQE-runtime conversions).
-#   4. bench smoke — bench.py must print exactly one JSON line.
+#   4. perfbench tests — the benchmark's own suite; it catches breakage
+#      of the engine names the benchmark wraps (read_json_document,
+#      process_json_document, run_pipeline, get_spark) before a
+#      benchmark run does.
+#   5. bench smoke — bench.py must print exactly one JSON line.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/4 driver-sim (vanilla session, sf0.01) =="
+echo "== 1/5 driver-sim (vanilla session, sf0.01) =="
 python scripts/driver_sim.py
 
-echo "== 2/4 oracle parity sweep + tier ANN recall at sf0.1 =="
+echo "== 2/5 oracle parity sweep + tier ANN recall at sf0.1 =="
 SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.1 python -m pytest \
     tests/test_oracle_parity.py "tests/test_ann_recall.py::test_tier_ivf_recall_curve" \
     "tests/test_ann_recall.py::test_tier_pq_rerank_recall_curve" -q
 
-echo "== 3/4 full test suite =="
+echo "== 3/5 full test suite =="
 python -m pytest tests/ -q
 
-echo "== 4/4 bench smoke (sf0.01) =="
+echo "== 4/5 perfbench tests =="
+python -m pytest perfbench/tests -q
+
+echo "== 5/5 bench smoke (sf0.01) =="
 # bench.py rewrites BENCH_LOCAL.json on every run; the smoke's sf0.01
 # record must not clobber the committed sf0.1 one — save and restore.
 bench_local_saved=""

@@ -13,6 +13,7 @@ the properties the oracle cannot express:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rust_etl_spark.operators.layout import (
@@ -40,6 +41,13 @@ def test_zorder_key_is_injective_on_key_pairs(spark):
     )
     z = grid.select(zorder_key(F.col("a"), F.col("b"), bits=Z_BITS).alias("z"))
     assert z.distinct().count() == n * n
+
+
+def test_zorder_key_rejects_bits_past_31(spark):
+    """bits=32 would put bit 31 of the b-side spread on the long sign
+    bit; the guard is a ValueError, so it survives ``python -O``."""
+    with pytest.raises(ValueError, match="sign bit"):
+        zorder_key(F.col("a"), F.col("b"), bits=32)
 
 
 def test_zorder_key_locality(spark):

@@ -4,6 +4,8 @@ falling back to shuffle join, global sort instead of top-k)."""
 
 from __future__ import annotations
 
+import pytest
+
 from rust_etl_spark.plans import catalog
 
 SF = "/root/testdata/sf0.001"
@@ -138,11 +140,13 @@ def test_embedding_lsh_dedup_single_exchange_no_joins(spark):
     assert "MapInPandas" in plan, plan
 
 
-def test_ngram_jaccard_scans_documents_once(spark):
-    """The jaccard pipeline is a single linear dataflow (round-2
-    re-plan): a second documents scan means a consumer re-evaluates the
-    scan+shingle subplan (Spark has no subplan reuse above exchanges)."""
-    plan = _formatted_plan(spark, "dedup_ngram_jaccard")
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "dedup_containment"])
+def test_ngram_jaccard_scans_documents_once(spark, name):
+    """Both scores over the shared shingle-overlap stage
+    (dedup._shingle_overlaps) are one linear dataflow: a second
+    documents scan means a consumer re-evaluates the scan+shingle
+    subplan (Spark has no subplan reuse above exchanges)."""
+    plan = _formatted_plan(spark, name)
     # formatted output lists each node once in the tree and once in the
     # detail section
     assert plan.count("documents.parquet") <= 2

@@ -30,6 +30,7 @@ from rust_etl_spark.operators.similarity import (
     PQ_M,
     PQ_SUBDIM,
     _pq_adc_batches,
+    _pq_anchors,
     _pq_batch_matrix,
     _pq_encode_batches,
     _pq_subspace_scan,
@@ -156,3 +157,14 @@ def test_empty_arrow_batches_are_skipped(factory):
     empty = _fake_batch(0)
     out = list(fn(iter([empty, _fake_batch(3), empty])))
     assert len(out) == 1 and len(out[0]) == 3
+
+
+def test_incomplete_anchor_codebook_raises(spark):
+    """Fewer than PQ_K anchor rows (vec_id < PQ_K) must fail loudly — a
+    short codebook would silently shift every code — with a ValueError,
+    so the guard survives ``python -O``."""
+    emb = spark.createDataFrame(
+        [(i, [0.0] * DIMS) for i in range(PQ_K - 1)], "vec_id bigint, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="anchor codebook incomplete"):
+        _pq_anchors(emb)

@@ -3,6 +3,8 @@ must equal the batch aggregation."""
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import functions as F
 
 from rust_etl_spark.sources import load_table
@@ -11,8 +13,12 @@ from rust_etl_spark.streaming.stateful import run_profiles_once
 SF = "/root/testdata/sf0.001"
 
 
-def test_stateful_profiles_match_batch(spark):
+def test_stateful_profiles_match_batch(spark, tmp_path, monkeypatch):
+    # Python temp dirs (the stream's watch directory) land in tmp_path,
+    # which must be left without a directory.
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     streamed = run_profiles_once(spark, f"{SF}/events.parquet")
+    assert [p.name for p in tmp_path.iterdir() if p.is_dir()] == []
     batch = (
         load_table(spark, SF, "events")
         .groupBy("user_id")
