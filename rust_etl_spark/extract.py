@@ -4,10 +4,11 @@
 Spark has no HTTP table source, so extraction stays outside the query
 engine (exactly as the reference keeps it outside Polars): stream the
 response to a staging file with constant memory, then hand the staged
-path to the Spark-side transform. For wide endpoint fan-out the
-pipeline runs one ``requests.Session`` per worker thread — the
-keep-alive parity of the reference's single reqwest client
-(api.rs:29-34), scaled out.
+path to the Spark-side transform. The pipeline opens one
+``requests.Session`` per endpoint (``run_pipeline`` calls its session
+factory for each route), so keep-alive reuse holds within an
+endpoint's download, not across endpoints as the reference's single
+reqwest client (api.rs:29-34) does.
 
 ``requests`` is import-gated: offline/test environments exercise the
 pipeline through local files and never import it.
@@ -31,13 +32,7 @@ def require_https(url: str) -> None:
         raise InvalidUrlError(f"refusing non-HTTPS url: {url!r}")
 
 
-def fetch_data_to_disk(
-    session,
-    url: str,
-    dest_path: str,
-    *,
-    timeout_s: int = DEFAULT_TIMEOUT_S,
-) -> int:
+def fetch_data_to_disk(session, url: str, dest_path: str) -> int:
     """GET ``url`` streaming into ``dest_path``; returns bytes written.
 
     Mirrors api.rs:56-117: HTTPS guard, parent mkdir, status check,
@@ -50,7 +45,7 @@ def fetch_data_to_disk(
         resp = session.get(
             url,
             stream=True,
-            timeout=timeout_s,
+            timeout=DEFAULT_TIMEOUT_S,
             headers={"User-Agent": USER_AGENT, "Accept": "*/*"},
         )
     except Exception as e:  # transport error (api.rs ApiError::Request)

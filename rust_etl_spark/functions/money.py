@@ -58,6 +58,11 @@ DEC38_BENCH.json / SCALING.md.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+
 
 def cents_sql(col: str) -> str:
     """Integer cents of a dollar-valued double column (engine-portable).
@@ -134,3 +139,18 @@ C_ACCTBAL_CENTS = cents_sql("c_acctbal")
 #: sf0.1 and linear in rows-per-user, so ~0.24 of int64 only at
 #: ~sf1000, far beyond any graded or evidence tier.
 VALUE_CENTS = cents_sql("value")
+
+
+def value_total_sql() -> str:
+    """Exact total of the 2-decimal events.value column: sum BIGINT
+    cents, reconstitute dollars with one IEEE division +
+    round_half_up (round(sum(double), 2) is the class that hash-failed
+    twice at the 10x tier)."""
+    return round_half_up_sql(f"CAST(sum({VALUE_CENTS}) AS BIGINT) / 100.0", 2)
+
+
+def value_total_col() -> Column:
+    """Spark form of :func:`value_total_sql`. The batch plans and the
+    streaming queries both aggregate with it, so their totals agree
+    value for value, and the streaming sum state is an exact BIGINT."""
+    return round_half_up(F.sum(F.expr(VALUE_CENTS)).cast("long") / F.lit(100.0), 2)

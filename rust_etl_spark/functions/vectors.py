@@ -32,8 +32,14 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column, ndigits: int = 6) -> Column:
-    """Rounded cosine similarity of two (already double) arrays.
+#: Digits every distance and similarity score is rounded to before any
+#: comparison, threshold or ordering.
+NDIGITS = 6
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity of two (already double) arrays, rounded to
+    ``NDIGITS``.
 
     Portable half-up floor rounding (round-14 sweep): cosine is a
     DERIVED float, and round(double, n) is only empirically portable —
@@ -41,22 +47,26 @@ def cosine(a: Column, b: Column, ndigits: int = 6) -> Column:
     round half-toward-+inf identically on both)."""
     from rust_etl_spark.functions.rounding import round_half_up
 
-    return round_half_up(dot(a, b) / (norm(a) * norm(b)), ndigits)
+    return round_half_up(dot(a, b) / (norm(a) * norm(b)), NDIGITS)
 
 
-def l2sq(a: Column, b: Column, ndigits: int = 6) -> Column:
-    """Rounded squared L2 distance of two (already double) arrays
-    (portable half-up floor rounding — see :func:`cosine`)."""
+def l2sq(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two (already double) arrays, rounded to
+    ``NDIGITS`` with portable half-up floor rounding (see
+    :func:`cosine`). The IVF assignment kernels mirror this rounding
+    bit for bit (distances are non-negative, so the
+    half-toward-+inf caveat never applies)."""
     from rust_etl_spark.functions.rounding import round_half_up
 
     return round_half_up(
         F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x),
-        ndigits,
+        NDIGITS,
     )
 
 
-def l2sq_sql(a_expr: str, b_expr: str, ndigits: int = 6) -> str:
-    """DuckDB mirror of :func:`l2sq` — double-widened, same fold order."""
+def l2sq_sql(a_expr: str, b_expr: str) -> str:
+    """DuckDB mirror of :func:`l2sq` — double-widened, same fold order,
+    same floor-based rounding."""
     diff = (
         f"list_transform(range(1, len({a_expr}) + 1), "
         f"i -> (CAST(({a_expr})[i] AS DOUBLE) - CAST(({b_expr})[i] AS DOUBLE)) "
@@ -64,42 +74,10 @@ def l2sq_sql(a_expr: str, b_expr: str, ndigits: int = 6) -> str:
     )
     from rust_etl_spark.functions.rounding import round_half_up_sql
 
-    return round_half_up_sql(f"list_reduce({diff}, (acc, x) -> acc + x)", ndigits)
+    return round_half_up_sql(f"list_reduce({diff}, (acc, x) -> acc + x)", NDIGITS)
 
 
-def l2sq_rhu(a: Column, b: Column, ndigits: int = 6) -> Column:
-    """:func:`l2sq` with PORTABLE floor-based rounding (round_half_up)
-    instead of ``F.round`` — for operators whose numpy kernels mirror
-    the rounding bit-for-bit (distances are non-negative, so the
-    half-toward-+inf caveat never applies). The IVF assignment family
-    migrated here in round 12 per the CLAUDE.md rounding rule."""
-    from rust_etl_spark.functions.rounding import round_half_up
-
-    return round_half_up(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        ndigits,
-    )
-
-
-def l2sq_rhu_sql(a_expr: str, b_expr: str, ndigits: int = 6) -> str:
-    """DuckDB mirror of :func:`l2sq_rhu` — same fold order, same
-    floor-based rounding, bit-identical to the numpy assignment
-    kernel's ``floor(d * 10^n + 0.5) / 10^n`` by construction."""
-    from rust_etl_spark.functions.rounding import round_half_up_sql
-
-    diff = (
-        f"list_transform(range(1, len({a_expr}) + 1), "
-        f"i -> (CAST(({a_expr})[i] AS DOUBLE) - CAST(({b_expr})[i] AS DOUBLE)) "
-        f"* (CAST(({a_expr})[i] AS DOUBLE) - CAST(({b_expr})[i] AS DOUBLE)))"
-    )
-    return round_half_up_sql(f"list_reduce({diff}, (acc, x) -> acc + x)", ndigits)
-
-
-def cosine_sql(a_expr: str, b_expr: str, ndigits: int = 6) -> str:
+def cosine_sql(a_expr: str, b_expr: str) -> str:
     """DuckDB mirror of :func:`cosine` — double-widened, same rounding."""
     da = f"list_transform({a_expr}, x -> CAST(x AS DOUBLE))"
     db = f"list_transform({b_expr}, x -> CAST(x AS DOUBLE))"
@@ -108,4 +86,4 @@ def cosine_sql(a_expr: str, b_expr: str, ndigits: int = 6) -> str:
     nb = f"sqrt(list_reduce(list_transform({db}, x -> x * x), (acc, x) -> acc + x))"
     from rust_etl_spark.functions.rounding import round_half_up_sql
 
-    return round_half_up_sql(f"({d}) / (({na}) * ({nb}))", ndigits)
+    return round_half_up_sql(f"({d}) / (({na}) * ({nb}))", NDIGITS)

@@ -306,12 +306,16 @@ def _star_round(c: DataFrame) -> DataFrame:
     return _canonical_edges(small)
 
 
+#: Label-propagation rounds before escalating to star rounds, and the
+#: cap on star rounds (see :func:`connected_components`).
+CC_STAR_AFTER = 5
+CC_MAX_ROUNDS = 50
+
+
 def connected_components(
     pairs: DataFrame,
     a: str,
     b: str,
-    max_rounds: int = 50,
-    star_after: int = 5,
     stats: dict | None = None,
 ) -> DataFrame:
     """(u, lbl) for every node of the undirected pair graph, where lbl
@@ -319,7 +323,7 @@ def connected_components(
 
     Hybrid strategy: distributed min-label propagation (one join +
     groupBy-min per round, O(diameter) rounds — 2-3 on the band-induced
-    quasi-cliques near-dup graphs form) for up to ``star_after``
+    quasi-cliques near-dup graphs form) for up to ``CC_STAR_AFTER``
     rounds; if still unconverged the graph is high-diameter
     (chain/lattice-shaped), so it escalates to alternating
     large-star/small-star rounds, which converge in O(log^2 n) — the
@@ -330,10 +334,10 @@ def connected_components(
     ``plain_rounds`` / ``star_rounds`` for observability; property-
     tested against a union-find reference in tests/test_properties.py.
 
-    ``star_after=5`` is measured, not guessed: the sf0.1 MinHash
+    ``CC_STAR_AFTER = 5`` is measured, not guessed: the sf0.1 MinHash
     candidate graph converges in exactly 5 propagation rounds (2.52 s);
-    escalating earlier is slower there (star_after=3 → 3.44 s,
-    star_after=2 → 3.21 s) because a star round (two sub-phases +
+    escalating earlier is slower there (after 3 rounds → 3.44 s,
+    after 2 → 3.21 s) because a star round (two sub-phases +
     distinct) costs more than a propagation round. The escalation pays
     off only on genuinely high-diameter graphs (50-chain: 49 plain
     rounds vs ~7 hybrid). A fused round-0 initialization (labels =
@@ -349,7 +353,7 @@ def connected_components(
     labels = nodes.withColumn("lbl", F.col("u"))
     plain_rounds = 0
     converged = False
-    for _ in range(min(star_after, max_rounds)):
+    for _ in range(CC_STAR_AFTER):
         plain_rounds += 1
         prop = (
             edges.join(labels.withColumnRenamed("u", "v"), "v")
@@ -398,7 +402,7 @@ def connected_components(
 
     prev = sig(c)
     star_rounds = 0
-    for _ in range(max_rounds):
+    for _ in range(CC_MAX_ROUNDS):
         star_rounds += 1
         c = _star_round(c).localCheckpoint(eager=True)
         cur = sig(c)
@@ -850,12 +854,11 @@ def minhash_recall(
     docs: DataFrame,
     k: int = MINHASH_K,
     band_rows: int = MINHASH_BAND_ROWS,
-    tau: float = MINHASH_VERIFY_TAU,
 ) -> float:
     """Measured candidate recall of the (k, band_rows) LSH setting over
     a (doc_id, text) frame: |candidates ∩ truth| / |truth| for truth =
-    exact Jaccard >= tau."""
-    truth = exact_jaccard_pairs_df(docs, tau)
+    exact Jaccard >= ``MINHASH_VERIFY_TAU``."""
+    truth = exact_jaccard_pairs_df(docs, MINHASH_VERIFY_TAU)
     cand = minhash_candidate_pairs_df(docs, k, band_rows)
     n_truth = truth.count()
     if n_truth == 0:

@@ -25,10 +25,10 @@ def salted_join(
     *,
     n_salts: int = 8,
     probe_salt_source: str | Column,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join ``probe.on == build.on`` with the hot-key shuffle
-    spread over ``n_salts`` sub-keys.
+    """Inner equi-join ``probe.on == build.on`` with the hot-key shuffle
+    spread over ``n_salts`` sub-keys (inner only: the build side is
+    replicated per salt, so an unmatched build row would repeat).
 
     ``probe_salt_source`` must be a high-cardinality probe column (row
     id, line number) — the salt is ``pmod(xxhash64(col), n_salts)``,
@@ -38,5 +38,5 @@ def salted_join(
     salted_probe = probe.withColumn("__salt", F.pmod(F.xxhash64(src), F.lit(n_salts)).cast("int"))
     salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("__salt")
     salted_build = build.select("*", salts)
-    out = salted_probe.join(salted_build, [on, "__salt"], how)
+    out = salted_probe.join(salted_build, [on, "__salt"])
     return out.drop("__salt")

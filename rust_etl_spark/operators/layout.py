@@ -48,7 +48,7 @@ Z_BITS = 21
 ZORDER_TOPK = 100
 
 
-def morton_duckdb(acol: str, bcol: str, bits: int = Z_BITS) -> str:
+def morton_duckdb(acol: str, bcol: str) -> str:
     """DuckDB mirror of :func:`rust_etl_spark.sinks.zorder_key`.
 
     Same bit placement as the Spark helper (a's bit j at position 2j,
@@ -56,7 +56,7 @@ def morton_duckdb(acol: str, bcol: str, bits: int = Z_BITS) -> str:
     identical BIGINT values by construction.
     """
     terms = []
-    for j in range(bits):
+    for j in range(Z_BITS):
         terms.append(f"(((CAST({acol} AS BIGINT) >> {j}) & 1) << {2 * j})")
         terms.append(f"(((CAST({bcol} AS BIGINT) >> {j}) & 1) << {2 * j + 1})")
     return "(" + " + ".join(terms) + ")"

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def plan_compaction(
@@ -100,8 +100,3 @@ def compact_parquet(
         "n_untouched": len(untouched),
         "n_output_files": len(bins) + len(untouched),
     }
-
-
-def compacted_table(spark: SparkSession, out_path: str) -> DataFrame:
-    """Read back a compacted dataset (plain parquet read)."""
-    return spark.read.parquet(out_path)

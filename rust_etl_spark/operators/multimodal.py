@@ -27,16 +27,16 @@ from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Materialize an opaque binary column + typed metadata struct —
-    the multimodal column pattern (payload stays a black box, metadata
-    is queryable)."""
-    payload = F.encode(F.col(text_col), "utf-8")
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Materialize an opaque binary column of ``text`` + typed metadata
+    struct — the multimodal column pattern (payload stays a black box,
+    metadata is queryable)."""
+    payload = F.encode(F.col("text"), "utf-8")
     return df.withColumn("payload", payload).withColumn(
         "meta",
         F.struct(
             F.length(payload).cast("long").alias("n_bytes"),
-            F.md5(F.col(text_col)).alias("digest"),
+            F.md5(F.col("text")).alias("digest"),
             F.lit("text/plain;charset=utf-8").alias("mime"),
         ),
     )

@@ -36,22 +36,19 @@ PACK_BUCKETS = 32
 _PACK_SCHEMA = "doc_id long, bucket long, bin_id long, n_tokens long"
 
 
-def pack_sequences_df(
-    docs: DataFrame,
-    max_tokens: int = PACK_MAX_TOKENS,
-    n_buckets: int = PACK_BUCKETS,
-) -> DataFrame:
+def pack_sequences_df(docs: DataFrame) -> DataFrame:
     """(doc_id, bucket, bin_id, n_tokens): first-fit packing of each
-    hash-bucket's docs (in deterministic hash order) into bins whose
-    token totals stay <= ``max_tokens``. A doc longer than the budget
-    gets a bin of its own (splitting is the tokenizer's concern)."""
+    of ``PACK_BUCKETS`` hash-buckets' docs (in deterministic hash order)
+    into bins whose token totals stay <= ``PACK_MAX_TOKENS``. A doc
+    longer than the budget gets a bin of its own (splitting is the
+    tokenizer's concern)."""
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["h", "doc_id"]).reset_index(drop=True)
         bins: list[int] = []
         cur, used = 0, 0
         for nt in pdf["n_tokens"]:
-            if used > 0 and used + nt > max_tokens:
+            if used > 0 and used + nt > PACK_MAX_TOKENS:
                 cur += 1
                 used = 0
             used += int(nt)
@@ -62,7 +59,7 @@ def pack_sequences_df(
     h = md5_long60(F.col("doc_id"))
     prepared = docs.select(
         "doc_id",
-        (h % n_buckets).alias("bucket"),
+        (h % PACK_BUCKETS).alias("bucket"),
         h.alias("h"),
         token_count("text").alias("n_tokens"),
     )

@@ -38,7 +38,6 @@ from rust_etl_spark.functions.vectors import (
     cosine,
     cosine_sql,
     l2sq,
-    l2sq_rhu_sql,
     l2sq_sql,
     to_double_array,
 )
@@ -49,7 +48,6 @@ TOPK = 10
 QUERY_VEC_ID = 0
 N_PLANES = 8
 N_DIMS = 64
-LSH_PROBE_BITS = 1  #: multi-probe radius: also probe buckets 1 bit-flip away
 
 #: dedup_embedding_lsh plane-count sizing. A FIXED plane count is a
 #: scale bug for the all-pairs-within-bucket dedup (found by the 100x
@@ -61,7 +59,8 @@ LSH_PROBE_BITS = 1  #: multi-probe radius: also probe buckets 1 bit-flip away
 #: shuffle: 15.8 GB shuffled, 121 GB spilled, 332 s.) The SEARCH ops
 #: (similarity_ann_lsh, lsh_bucket_assign) keep the fixed N_PLANES:
 #: their cost is the probed fraction, not in-bucket pairs, and the
-#: probe-set size is the documented recall knob. The dedup variant
+#: probe set (the query bucket plus its one-bit-flip neighbors) sets
+#: their recall. The dedup variant
 #: sizes planes so expected occupancy stays ~LSH_DEDUP_OCCUPANCY:
 #: pairs ~ N * occupancy / 2 — linear at every tier. Same integer-only
 #: Python==SQL derivation family as ivf_mod / fuzzy_block_len /
@@ -396,9 +395,10 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH search: the probe set is the query's bucket and
     every bucket at Hamming distance 1 (one hyperplane disagreement) —
     built in-plan from the single query-bucket row, broadcast to the
-    bucket table. Probing 1+N_PLANES of the 2^N_PLANES buckets bounds
-    the scanned fraction while recovering the neighbors that a single
-    cutting plane happened to separate from the query."""
+    bucket table. The probe radius is fixed at one bit flip: probing
+    1+N_PLANES of the 2^N_PLANES buckets bounds the scanned fraction
+    while recovering the neighbors that a single cutting plane happened
+    to separate from the query."""
     emb = load_table(spark, sf_dir, "embeddings")
     buckets = lsh_buckets(spark, emb)
     # The query bucket comes from a SINGLE-ROW kernel pass over the
@@ -513,7 +513,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_pair_batches(tau: float, ndigits: int = 6):
+def _lsh_pair_batches(tau: float):
     """mapInPandas body for :func:`dedup_embedding_lsh` — module-level
     so the kernel contract is unit-testable without a cluster (the
     PQ/IVF pattern). Each input row is one LSH bucket's sorted member
@@ -533,7 +533,7 @@ def _lsh_pair_batches(tau: float, ndigits: int = 6):
     import numpy as np
     import pandas as pd
 
-    s = float(10 ** ndigits)
+    s = 1e6
 
     def gen(batches):
         for pdf in batches:
@@ -602,7 +602,7 @@ _ASSIGN_SQL = f"""
             SELECT c.cid, s.sid,
                    row_number() OVER (
                        PARTITION BY c.cid
-                       ORDER BY {l2sq_rhu_sql('c.cvec', 's.svec')}, s.sid) AS rn
+                       ORDER BY {l2sq_sql('c.cvec', 's.svec')}, s.sid) AS rn
             FROM centroids c CROSS JOIN supers s
         ) t WHERE rn = 1
     ),
@@ -615,17 +615,17 @@ _ASSIGN_SQL = f"""
             SELECT e.vec_id, s.sid,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {l2sq_rhu_sql('e.embedding', 's.svec')}, s.sid) AS rn
+                       ORDER BY {l2sq_sql('e.embedding', 's.svec')}, s.sid) AS rn
             FROM embeddings e CROSS JOIN supers s
         ) t WHERE rn <= 2
     ),
     assign AS (
         SELECT vec_id, cid, dist FROM (
             SELECT e.vec_id, c.cid,
-                   {l2sq_rhu_sql('e.embedding', 'c.cvec')} AS dist,
+                   {l2sq_sql('e.embedding', 'c.cvec')} AS dist,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {l2sq_rhu_sql('e.embedding', 'c.cvec')}, c.cid) AS rn
+                       ORDER BY {l2sq_sql('e.embedding', 'c.cvec')}, c.cid) AS rn
             FROM embeddings e
             JOIN vec_super vs ON vs.vec_id = e.vec_id
             JOIN cent_super ca ON ca.sid = vs.sid
@@ -647,7 +647,7 @@ def _ivf_l2sq_np(X, C, ndigits: int = 6):
     and float32 -> float64 input widening is value-exact. Rounding is
     the portable floor form (``floor(x * 1e6 + 0.5) / 1e6`` ==
     functions/rounding.round_half_up — distances are non-negative), to
-    which the oracle's l2sq_rhu_sql is bit-identical by construction;
+    which the oracle's l2sq_sql is bit-identical by construction;
     the legacy ``F.round``/DuckDB-``round`` pair this replaces agreed
     only empirically on boundary values (CLAUDE.md)."""
     import numpy as np

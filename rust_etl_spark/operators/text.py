@@ -69,11 +69,6 @@ def argmax_lang(hits: dict[str, Column]) -> Column:
     return expr.otherwise(pred)
 
 
-def predict_lang(toks: Column) -> Column:
-    """Argmax of stopword evidence over a token-array column."""
-    return argmax_lang({lang: stopword_hits(toks, STOPWORDS[lang]) for lang in LANG_ORDER})
-
-
 def predict_lang_sql(toks_expr: str) -> str:
     hit = {lang: stopword_hits_sql(toks_expr, STOPWORDS[lang]) for lang in LANG_ORDER}
     whens = []

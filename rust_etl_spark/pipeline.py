@@ -8,8 +8,9 @@ transform failure logs and advances (fail-soft, main.rs:89-104) while
 config errors are fatal at load. We reproduce that control flow in the
 Python driver and hand all data work to Spark.
 
-Scale posture: endpoint fan-out parallelizes with a thread pool of
-keep-alive sessions (network-bound, GIL-friendly); each endpoint's
+Scale posture: endpoint fan-out parallelizes with a thread pool
+(network-bound, GIL-friendly), and each endpoint downloads through a
+session of its own from ``session_factory``; each endpoint's
 transform is an independent Spark job, so a 1000-endpoint spec simply
 becomes 1000 small plans the scheduler interleaves. Staging can point
 at any Hadoop-visible filesystem (local, HDFS, s3a) — the driver only

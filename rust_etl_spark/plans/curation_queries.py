@@ -428,9 +428,6 @@ def doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- train/val/test split
 
-SPLIT_PCT = {"train": 80, "val": 10, "test": 10}  # documented; thresholds below
-
-
 @register(
     "dataset_split",
     oracle=f"""

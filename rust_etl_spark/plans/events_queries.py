@@ -25,26 +25,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from rust_etl_spark.functions.money import VALUE_CENTS as _V_CENTS
+from rust_etl_spark.functions.money import (
+    VALUE_CENTS as _V_CENTS,
+    value_total_col,
+    value_total_sql,
+)
 from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
 SESSION_GAP_NS = 30 * 60 * 1_000_000_000  # 30 min
-
-#: exact scaled-integer total of the 2-decimal events.value column —
-#: sum BIGINT cents, reconstitute dollars with one IEEE division +
-#: round_half_up (the money.py doctrine; round(sum(double), 2) is the
-#: class that hash-failed twice at the 10x tier).
-_V_SUM_SQL = f"CAST(sum({_V_CENTS}) AS BIGINT)"
-
-
-def _total_value_sql() -> str:
-    return round_half_up_sql(f"{_V_SUM_SQL} / 100.0", 2)
-
-
-def _total_value_col() -> F.Column:
-    return round_half_up(F.sum(F.expr(_V_CENTS)).cast("long") / F.lit(100.0), 2)
 
 
 def ntz_epoch_us(col: str):
@@ -60,7 +50,7 @@ def ntz_epoch_us(col: str):
         SELECT epoch_us(time_bucket(INTERVAL '5 minutes', ts)) AS w_start_us,
                event_type,
                count(*) AS n,
-               {_total_value_sql()} AS total_value
+               {value_total_sql()} AS total_value
         FROM events
         GROUP BY 1, 2
     """,
@@ -71,7 +61,7 @@ def events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), _total_value_col().alias("total_value"))
+        .agg(F.count(F.lit(1)).alias("n"), value_total_col().alias("total_value"))
         .select(
             F.unix_micros("w.start").alias("w_start_us"),
             "event_type",
@@ -97,7 +87,7 @@ HOP_SLIDE_US = 5 * 60 * 1_000_000
             FROM b
         )
         SELECT w_start_us, event_type, count(*) AS n,
-               {_total_value_sql()} AS total_value
+               {value_total_sql()} AS total_value
         FROM cand
         WHERE t_us >= w_start_us AND t_us < w_start_us + {HOP_WIDTH_US}
         GROUP BY 1, 2
@@ -111,7 +101,7 @@ def events_hop_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), _total_value_col().alias("total_value"))
+        .agg(F.count(F.lit(1)).alias("n"), value_total_col().alias("total_value"))
         .select(
             F.unix_micros("w.start").alias("w_start_us"),
             "event_type",
@@ -142,7 +132,7 @@ def events_hop_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT user_id, session_seq,
                min(ts_ns) // 1000 AS session_start_us,
                count(*) AS n_events,
-               {_total_value_sql()} AS total_value
+               {value_total_sql()} AS total_value
         FROM numbered GROUP BY user_id, session_seq
     """,
     doc="Gap-based sessionization (30-min inactivity): lag + cumulative-sum session ids, one shuffle on user_id.",
@@ -162,7 +152,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.expr("min(ts_ns) div 1000").alias("session_start_us"),
             F.count(F.lit(1)).alias("n_events"),
-            _total_value_col().alias("total_value"),
+            value_total_col().alias("total_value"),
         )
     )
 
@@ -187,7 +177,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
                min(ts_us) AS s_start_us,
                max(ts_us) + {SESSION_GAP_NS // 1000} AS s_end_us,
                count(*) AS n_events,
-               {_total_value_sql()} AS total_value
+               {value_total_sql()} AS total_value
         FROM numbered GROUP BY user_id, seq
     """,
     doc="Native session_window(30 min gap) sessionization, cross-validated against the "
@@ -199,7 +189,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), _total_value_col().alias("total_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), value_total_col().alias("total_value"))
         .select(
             "user_id",
             F.unix_micros("w.start").alias("s_start_us"),

@@ -38,7 +38,6 @@ def _default_driver_mem() -> str:
 def get_spark(
     app_name: str = "rust_etl_spark",
     *,
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -52,7 +51,7 @@ def get_spark(
     cores = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
+        .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -20,17 +20,15 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: Per-file row cap for the parquet writers, so one skewed partition
+#: still splits into parallel-readable files.
+MAX_RECORDS_PER_FILE = 1_000_000
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    *,
-    max_records_per_file: int = 1_000_000,
-) -> None:
+
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     (
         df.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy(*partition_cols)
         .parquet(path)
     )
@@ -138,7 +136,6 @@ def write_range_partitioned(
     col: str,
     *,
     n_partitions: int = 8,
-    max_records_per_file: int = 1_000_000,
 ) -> None:
     """Write parquet range-clustered on one ordered column — the
     time-series layout: ``repartitionByRange`` samples the column to
@@ -154,7 +151,7 @@ def write_range_partitioned(
         df.repartitionByRange(n_partitions, col)
         .sortWithinPartitions(col)
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .parquet(path)
     )
 
@@ -216,17 +213,17 @@ def write_zordered(
     col_a: str,
     col_b: str,
     *,
-    bits: int = 16,
-    max_records_per_file: int = 1_000_000,
+    max_records_per_file: int = MAX_RECORDS_PER_FILE,
 ) -> None:
-    """Write parquet clustered by the Z-order of (col_a, col_b).
+    """Write parquet clustered by the Z-order of the low 16 bits of
+    (col_a, col_b).
 
     ``sortWithinPartitions`` after a range repartition on the z-key
     gives globally-clustered row groups without a driver-side sort.
     """
     from pyspark.sql import functions as F
 
-    z = zorder_key(F.col(col_a), F.col(col_b), bits)
+    z = zorder_key(F.col(col_a), F.col(col_b))
     (
         df.withColumn("__z", z)
         .repartitionByRange("__z")

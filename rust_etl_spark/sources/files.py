@@ -16,16 +16,15 @@ from pyspark.sql import types as T
 
 from rust_etl_spark.errors import EngineError
 
+#: Column that receives a malformed JSON line verbatim.
+CORRUPT_COL = "_corrupt_record"
+
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    *,
-    schema: T.StructType | str | None = None,
-    header: bool = True,
-    delimiter: str = ",",
+    spark: SparkSession, path: str, *, schema: T.StructType | str | None = None
 ) -> DataFrame:
-    reader = spark.read.option("header", header).option("sep", delimiter)
+    """Comma-separated CSV with a header row."""
+    reader = spark.read.option("header", True)
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -33,8 +32,8 @@ def read_csv(
     return reader.csv(path)
 
 
-def write_csv(df: DataFrame, path: str, *, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", header).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def read_jsonl(
@@ -51,26 +50,22 @@ def write_jsonl(df: DataFrame, path: str) -> None:
 
 
 def read_jsonl_permissive(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    *,
-    corrupt_col: str = "_corrupt_record",
+    spark: SparkSession, path: str, schema: T.StructType | str
 ) -> DataFrame:
     """JSON-lines read that quarantines malformed rows instead of
     failing the job: good rows parse into ``schema``, broken lines land
-    verbatim in ``corrupt_col`` (NULL elsewhere) — the ingestion
+    verbatim in ``CORRUPT_COL`` (NULL elsewhere) — the ingestion
     posture for dirty landing zones at scale (fail-soft per row, the
     row-level analogue of the reference's per-endpoint fail-soft,
     /root/reference/src/main.rs:52-108).
     """
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    full = schema.add(T.StructField(corrupt_col, T.StringType(), True))
+    full = schema.add(T.StructField(CORRUPT_COL, T.StringType(), True))
     return (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
 
@@ -81,41 +76,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 
 def write_orc(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").orc(path)
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """JDBC source (needs the vendor driver jar on the classpath).
-
-    At scale ALWAYS pass ``partition_column`` + bounds: without them
-    Spark reads the whole table through one connection; with them the
-    scan fans out over ``num_partitions`` range-predicate queries.
-    """
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise EngineError("read_jdbc: partition_column requires lower_bound and upper_bound")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", num_partitions)
-            .option("lowerBound", lower_bound)
-            .option("upperBound", upper_bound)
-        )
-    try:
-        return reader.load()
-    except Exception as e:  # pragma: no cover - driver-jar dependent
-        raise EngineError(f"jdbc source failed (is the vendor driver on the classpath?): {e}") from e
 
 
 def read_avro(spark: SparkSession, path: str) -> DataFrame:

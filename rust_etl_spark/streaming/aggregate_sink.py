@@ -11,9 +11,11 @@ rescanning history. Two variants share one exactly-once core:
   stream moves past them, and a batch only ever rewrites the buckets
   it touches.
 
-Mechanics: each micro-batch is pre-aggregated (count/sum per group
-key), then merged into the summary table with ``upsert_parquet`` by
-summing onto the stored partials (count and sum are algebraic, so
+Mechanics: every sink is a ``lift`` (one input row -> the partial
+state of a one-row group) and a ``merge`` (combine partials of the same
+group). Each micro-batch is pre-aggregated as ``merge(lift(batch))``,
+then merged with the stored partials by the same ``merge`` and written
+back with ``upsert_parquet`` (every aggregate here is algebraic, so
 batch partials compose exactly). The summary stays queryable between
 batches, and the upsert's rename-aside swap keeps a live directory at
 every instant. At scale the summary table is keyed by a
@@ -42,23 +44,32 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _additive_merge(group_keys: list[str]) -> Callable[[DataFrame], DataFrame]:
+    """(n, total) partials merge by summing both."""
+
+    def merge(partials: DataFrame) -> DataFrame:
+        return partials.groupBy(*group_keys).agg(
+            F.sum("n").alias("n"), F.sum("total").alias("total")
+        )
+
+    return merge
+
+
 def _start_aggregate_sink(
     spark: SparkSession,
     source_dir: str,
     summary_path: str,
     checkpoint_dir: str,
     schema: T.StructType | str,
-    partial_fn: Callable[[DataFrame], DataFrame],
+    lift: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
     group_keys: list[str],
-    merge_fn: Callable[[DataFrame], DataFrame] | None = None,
 ):
-    """Shared exactly-once merge core. ``partial_fn`` turns a
-    micro-batch into per-group partials; ``merge_fn`` combines the
-    union of stored and batch partials back to one row per group
-    (default: additive (n, total) — count/sum are algebraic). Any
-    aggregate whose partials compose (min/max/min_by/sum...) slots in
-    here; non-algebraic ones (exact median) would need the raw
-    stream."""
+    """Shared exactly-once merge core. ``lift`` turns each input row
+    into a one-row partial; ``merge`` combines partials back to one row
+    per group. Any aggregate whose partials compose
+    (min/max/min_by/sum...) slots in here; non-algebraic ones (exact
+    median) would need the raw stream."""
     import json
     import os
 
@@ -82,26 +93,12 @@ def _start_aggregate_sink(
         epoch_file = os.path.join(summary_path, "_applied_epoch")
         if os.path.exists(epoch_file):
             with open(epoch_file) as fh:
-                raw = fh.read().strip()
-            try:
-                marker = json.loads(raw)
-                applied, marker_ckpt = int(marker["epoch"]), marker.get("ckpt")
-            except (json.JSONDecodeError, TypeError, KeyError):
-                applied, marker_ckpt = int(raw), None  # legacy bare-int marker
-            if marker_ckpt in (None, ckpt_id) and int(epoch_id) <= applied:
+                marker = json.load(fh)
+            if marker["ckpt"] == ckpt_id and int(epoch_id) <= int(marker["epoch"]):
                 return  # replayed epoch: partials already include it
-        partial = partial_fn(batch_df)
+        merged = merge(lift(batch_df))
         if os.path.exists(summary_path):
-            prev = spark.read.parquet(summary_path)
-            both = prev.unionByName(partial)
-            if merge_fn is not None:
-                merged = merge_fn(both)
-            else:
-                merged = both.groupBy(*group_keys).agg(
-                    F.sum("n").alias("n"), F.sum("total").alias("total")
-                )
-        else:
-            merged = partial
+            merged = merge(spark.read.parquet(summary_path).unionByName(merged))
         # collect to driver is NOT used: upsert rewrites via Spark jobs
         upsert_parquet(
             spark,
@@ -132,13 +129,11 @@ def start_incremental_aggregate(
     """Maintain ``summary_path`` = per-``key`` (n, total of ``value``)
     over all JSON-lines files that ever landed in ``source_dir``."""
 
-    def partial(batch_df: DataFrame) -> DataFrame:
-        return batch_df.groupBy(key).agg(
-            F.count(F.lit(1)).alias("n"), F.sum(value).alias("total")
-        )
+    def lift(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(key, F.lit(1).alias("n"), F.col(value).alias("total"))
 
     return _start_aggregate_sink(
-        spark, source_dir, summary_path, checkpoint_dir, schema, partial, [key]
+        spark, source_dir, summary_path, checkpoint_dir, schema, lift, _additive_merge([key]), [key]
     )
 
 
@@ -164,23 +159,17 @@ def start_incremental_window_aggregate(
     (the batch-query mirror is ``events_window_agg`` /
     ``date_trunc_rollup``)."""
 
-    def partial(batch_df: DataFrame) -> DataFrame:
-        return (
-            batch_df.groupBy(F.window(ts_col, window).alias("w"), key)
-            .agg(F.count(F.lit(1)).alias("n"), F.sum(value).alias("total"))
-            .select(
-                F.unix_micros("w.start").alias("w_start_us"), key, "n", "total"
-            )
+    def lift(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(
+            F.unix_micros(F.window(ts_col, window).start).alias("w_start_us"),
+            key,
+            F.lit(1).alias("n"),
+            F.col(value).alias("total"),
         )
 
+    keys = ["w_start_us", key]
     return _start_aggregate_sink(
-        spark,
-        source_dir,
-        summary_path,
-        checkpoint_dir,
-        schema,
-        partial,
-        ["w_start_us", key],
+        spark, source_dir, summary_path, checkpoint_dir, schema, lift, _additive_merge(keys), keys
     )
 
 
@@ -206,55 +195,38 @@ def start_incremental_ohlc(
     and two partials merge with sum/max/min/min_by/max_by — so late or
     replayed data folds into ITS candle deterministically (the
     ordering key (event-time micros, ``id_col``) is total, mirroring
-    the batch query's tie-break). At scale the summary is
-    candle-grain (keys x windows), orders of magnitude smaller than
-    the stream, and each batch's upsert rewrites only the candles it
-    touches.
+    the batch query's tie-break). A single row lifts to the candle
+    whose open, high, low and close are all that row. At scale the
+    summary is candle-grain (keys x windows), orders of magnitude
+    smaller than the stream, and each batch's upsert rewrites only the
+    candles it touches.
     """
-    ord_us = F.unix_micros(F.col(ts_col))
 
-    def partial(batch_df: DataFrame) -> DataFrame:
-        base = batch_df.select(
-            F.window(ts_col, window).alias("w"),
-            F.col(key),
-            F.col(value).cast("double").alias("v"),
-            ord_us.alias("e_us"),
-            F.col(id_col).cast("long").alias("e_id"),
-        ).select(
-            F.unix_micros("w.start").alias("w_start_us"),
+    def lift(batch_df: DataFrame) -> DataFrame:
+        v = F.col(value).cast("double")
+        e_us = F.unix_micros(F.col(ts_col))
+        e_id = F.col(id_col).cast("long")
+        return batch_df.select(
+            F.unix_micros(F.window(ts_col, window).start).alias("w_start_us"),
             key,
-            "v",
-            "e_us",
-            "e_id",
-        )
-        ordk = F.struct(F.col("e_us").alias("us"), F.col("e_id").alias("id"))
-        return base.groupBy("w_start_us", key).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("v").alias("high"),
-            F.min("v").alias("low"),
-            F.min_by(F.struct("e_us", "e_id", "v"), ordk).alias("o"),
-            F.max_by(F.struct("e_us", "e_id", "v"), ordk).alias("c"),
-        ).select(
-            "w_start_us",
-            key,
-            "n",
-            F.col("o.e_us").alias("open_us"),
-            F.col("o.e_id").alias("open_id"),
-            F.col("o.v").alias("open"),
-            "high",
-            "low",
-            F.col("c.e_us").alias("close_us"),
-            F.col("c.e_id").alias("close_id"),
-            F.col("c.v").alias("close"),
+            F.lit(1).alias("n"),
+            e_us.alias("open_us"),
+            e_id.alias("open_id"),
+            v.alias("open"),
+            v.alias("high"),
+            v.alias("low"),
+            e_us.alias("close_us"),
+            e_id.alias("close_id"),
+            v.alias("close"),
         )
 
-    def merge(both: DataFrame) -> DataFrame:
+    def merge(partials: DataFrame) -> DataFrame:
         # Each side of a candle keeps ITS OWN ordering key: the merged
         # open is the partial open with the earliest (open_us, open_id),
         # the merged close the partial close with the latest
         # (close_us, close_id).
         return (
-            both.groupBy("w_start_us", key)
+            partials.groupBy("w_start_us", key)
             .agg(
                 F.sum("n").alias("n"),
                 F.max("high").alias("high"),
@@ -283,13 +255,7 @@ def start_incremental_ohlc(
             )
         )
 
+    keys = ["w_start_us", key]
     return _start_aggregate_sink(
-        spark,
-        source_dir,
-        summary_path,
-        checkpoint_dir,
-        schema,
-        partial,
-        ["w_start_us", key],
-        merge_fn=merge,
+        spark, source_dir, summary_path, checkpoint_dir, schema, lift, merge, keys
     )

@@ -22,27 +22,19 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rust_etl_spark.functions.money import VALUE_CENTS as _V_CENTS
-from rust_etl_spark.functions.rounding import round_half_up
+from rust_etl_spark.functions.money import value_total_col
 from rust_etl_spark.sources.tables import normalize_event_time
-
-
-def _total_value_col():
-    """Exact scaled-integer total of 2-decimal events.value — the same
-    form as the batch plans (plans/events_queries.py), so streaming vs
-    batch parity is value-identical, and sum state is a BIGINT (exact
-    merge across micro-batches, no FP accumulation drift)."""
-    return round_half_up(F.sum(F.expr(_V_CENTS)).cast("long") / F.lit(100.0), 2)
 
 WINDOW = "5 minutes"
 WATERMARK = "10 minutes"
 
 
-def windowed_counts_batch(events: DataFrame) -> DataFrame:
-    """Tumbling-window counts/sums per event_type (batch form)."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Tumbling-window counts/sums per event_type, over a batch frame or
+    a watermarked stream alike (:func:`run_stream_once`)."""
     return (
         events.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), _total_value_col().alias("total_value"))
+        .agg(F.count(F.lit(1)).alias("n"), value_total_col().alias("total_value"))
         .select(
             F.col("w.start").alias("w_start"),
             "event_type",
@@ -87,18 +79,20 @@ def drain_bounded_stream(
     return spark.table(name)
 
 
-def run_stream_dedup_once(spark: SparkSession, events_path: str) -> int:
-    """Streaming exact dedup: the same events file delivered twice
-    (two micro-batches of duplicates) must come out once.
-
-    ``withWatermark + dropDuplicates([key, ts])`` is the streaming
+def deduped_events(events: DataFrame) -> DataFrame:
+    """``withWatermark + dropDuplicates([key, ts])`` is the streaming
     form of exact dedup — state holds one entry per key inside the
     watermark horizon and expires beyond it, so unbounded duplicate
-    streams run in bounded memory. Returns the deduplicated count.
-    """
+    streams run in bounded memory."""
+    return events.withWatermark("ts", WATERMARK).dropDuplicates(["event_id", "ts"])
 
+
+def run_stream_dedup_once(spark: SparkSession, events_path: str) -> int:
+    """Streaming exact dedup: the same events file delivered twice
+    (two micro-batches of duplicates) must come out once. Returns the
+    deduplicated count."""
     def build(source):
-        return source().withWatermark("ts", WATERMARK).dropDuplicates(["event_id", "ts"])
+        return deduped_events(source())
 
     return drain_bounded_stream(
         spark, events_path, build, "append", "events_deduped", copies=2
@@ -147,13 +141,7 @@ def run_stream_once(spark: SparkSession, sf_dir: str, events_path: str) -> DataF
     the standard local smoke for a streaming plan."""
 
     def build(source):
-        return (
-            source()
-            .withWatermark("ts", WATERMARK)
-            .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"), _total_value_col().alias("total_value"))
-            .select(F.col("w.start").alias("w_start"), "event_type", "n", "total_value")
-        )
+        return windowed_counts(source().withWatermark("ts", WATERMARK))
 
     return drain_bounded_stream(spark, events_path, build, "complete", "events_windowed", copies=1)
 
@@ -178,7 +166,7 @@ def run_stream_sessions_once(spark: SparkSession, events_path: str) -> DataFrame
             source()
             .withWatermark("ts", WATERMARK)
             .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"), _total_value_col().alias("total_value"))
+            .agg(F.count(F.lit(1)).alias("n_events"), value_total_col().alias("total_value"))
             .select(
                 "user_id",
                 F.unix_micros("w.start").alias("s_start_us"),

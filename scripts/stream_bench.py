@@ -8,9 +8,9 @@ driver — and records per profile: input rows, wall from start() to
 processAllAvailable(), rows/sec, micro-batch count, and the state-store
 size (rows + memory) from the final StreamingQueryProgress.
 
-Profiles (same plan shapes as rust_etl_spark/streaming/*, constants and
-the stateful operator imported from there so this measures shipped
-code):
+Profiles (the plans of rust_etl_spark/streaming/*: the windowed
+aggregate, the dedup and the stateful operator are built by the
+engine's own functions, so this measures shipped code):
 
   * windowed_agg     — watermark + tumbling-window count/sum (update
                        mode, so watermark eviction actually drops
@@ -41,7 +41,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from rust_etl_spark.sources.tables import normalize_event_time  # noqa: E402
-from rust_etl_spark.streaming.events import SESSION_GAP, WATERMARK, WINDOW  # noqa: E402
+from rust_etl_spark.streaming.events import (  # noqa: E402
+    SESSION_GAP,
+    WATERMARK,
+    deduped_events,
+    windowed_counts,
+)
 from rust_etl_spark.streaming.stateful import user_profiles_stream  # noqa: E402
 
 #: micro-batches per run: enough to amortize the first batch's plan
@@ -116,12 +121,7 @@ def _stream(spark, watch: str, schema, mfpt: int = 1):
 
 
 def profile_windowed_agg(spark, watch, schema):
-    agg = (
-        _stream(spark, watch, schema)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
+    agg = windowed_counts(_stream(spark, watch, schema).withWatermark("ts", WATERMARK))
     # update mode (NOT complete): complete retains every window ever
     # seen in the store, so watermark eviction never applies and the
     # recorded state would grow with total windows rather than the
@@ -140,11 +140,7 @@ def profile_session_window(spark, watch, schema):
 
 
 def profile_dedup(spark, watch, schema):
-    stream = _stream(spark, watch, schema).withColumnRenamed("ts", "ts_event")
-    deduped = stream.withWatermark("ts_event", WATERMARK).dropDuplicates(
-        ["event_id", "ts_event"]
-    )
-    return _drive(deduped, "append")
+    return _drive(deduped_events(_stream(spark, watch, schema)), "append")
 
 
 def profile_stateful_profiles(spark, watch, schema):

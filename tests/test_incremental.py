@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from rust_etl_spark.streaming.incremental import start_incremental_ingest
 
 SCHEMA = "id long, name string"
@@ -316,6 +318,42 @@ def test_aggregate_sink_fresh_checkpoint_not_suppressed(spark, tmp_path):
         q2.stop()
     got = {r["k"]: (r["n"], r["total"]) for r in spark.read.parquet(summary).collect()}
     assert got == {"x": (2, 4.0), "z": (1, 5.0)}  # new batch applied, not skipped
+
+
+def test_aggregate_sink_rejects_bare_int_marker(spark, tmp_path):
+    """The epoch marker is always JSON naming its checkpoint. A bare
+    integer names none, so it cannot tell a replay from a new
+    checkpoint's batch: the sink must fail the batch rather than skip
+    it and lose its rows."""
+    from rust_etl_spark.streaming.aggregate_sink import start_incremental_aggregate
+
+    src1 = str(tmp_path / "landing1")
+    src2 = str(tmp_path / "landing2")
+    summary = str(tmp_path / "summary")
+    os.makedirs(src1)
+    os.makedirs(src2)
+    schema = "k string, v double"
+
+    _drop_file(src1, "a.jsonl", [{"k": "x", "v": 1.0}])
+    q = start_incremental_aggregate(
+        spark, src1, summary, str(tmp_path / "ckpt_old"), schema, "k", "v"
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    with open(os.path.join(summary, "_applied_epoch"), "w") as fh:
+        fh.write("0")
+
+    _drop_file(src2, "b.jsonl", [{"k": "x", "v": 3.0}])
+    q2 = start_incremental_aggregate(
+        spark, src2, summary, str(tmp_path / "ckpt_new"), schema, "k", "v"
+    )
+    try:
+        with pytest.raises(Exception):
+            q2.processAllAvailable()
+    finally:
+        q2.stop()
 
 
 def test_incremental_ohlc_matches_batch_recompute(spark, tmp_path):

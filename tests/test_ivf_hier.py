@@ -97,13 +97,13 @@ def test_flat_fold_equals_historical_min_struct(spark) -> None:
     """The numpy exact assignment (f = 1 path) must reproduce the
     historical broadcast-join + min(struct(dist, cid)) aggregate
     value-for-value — same (dist, cid) tie-break. The expected side
-    uses l2sq_rhu (portable floor rounding), which the round-12 numpy
+    uses l2sq (portable floor rounding), which the round-12 numpy
     kernel mirrors bit-for-bit by construction; the legacy F.round
     form agreed with it on every fixture value (verified at sf0.01 /
     sf0.1 / gen tiers before the migration)."""
     from pyspark.sql import functions as F
 
-    from rust_etl_spark.functions.vectors import l2sq_rhu, to_double_array
+    from rust_etl_spark.functions.vectors import l2sq, to_double_array
     from rust_etl_spark.operators.similarity import ivf_assignments
     from rust_etl_spark.sources import load_table
 
@@ -116,7 +116,7 @@ def test_flat_fold_equals_historical_min_struct(spark) -> None:
     hist = (
         emb.select("vec_id", to_double_array("embedding").alias("v"))
         .crossJoin(F.broadcast(cent))
-        .select("vec_id", "cid", l2sq_rhu(F.col("v"), F.col("cvec")).alias("dist"))
+        .select("vec_id", "cid", l2sq(F.col("v"), F.col("cvec")).alias("dist"))
         .groupBy("vec_id")
         .agg(F.min(F.struct("dist", "cid")).alias("m"))
         .select("vec_id", F.col("m.cid").alias("cid"), F.col("m.dist").alias("dist"))

@@ -7,7 +7,7 @@ kernels pinned in tests/test_pq_kernel_contract.py: (1) explicit
 left-associated per-dimension accumulation (never np.sum's pairwise
 reduction); (2) argmin first-min over id-sorted axes == the oracle's
 ``ORDER BY dist, id`` tie-break; (3) floor-based round_half_up
-rounding, bit-identical to the l2sq_rhu / l2sq_rhu_sql pair. Plus the
+rounding, bit-identical to the l2sq / l2sq_sql pair. Plus the
 IVF-specific structural edges the fold form carried: the (cid=-1,
 dist=inf) no-candidate pair and the empty-Arrow-batch skip.
 
@@ -86,11 +86,11 @@ def test_left_associated_accumulation_not_np_sum():
 
 def test_rounding_matches_l2sq_rhu_through_a_real_plan(spark):
     """The kernel's 6-digit floor round must equal the Spark-side
-    l2sq_rhu column (the oracle's l2sq_rhu_sql mirror) bit for bit on
+    l2sq column (the oracle's l2sq_sql mirror) bit for bit on
     the same vectors — including values that land on .5e-6 boundaries."""
     from pyspark.sql import functions as F
 
-    from rust_etl_spark.functions.vectors import l2sq_rhu
+    from rust_etl_spark.functions.vectors import l2sq
 
     rng = np.random.default_rng(7)
     X = rng.normal(size=(64, 8)).round(3)
@@ -102,7 +102,7 @@ def test_rounding_matches_l2sq_rhu_through_a_real_plan(spark):
     df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
     got_spark = {
         r["i"]: r["d"]
-        for r in df.select("i", l2sq_rhu(F.col("a"), F.col("b")).alias("d")).collect()
+        for r in df.select("i", l2sq(F.col("a"), F.col("b")).alias("d")).collect()
     }
     D = _ivf_l2sq_np(X, c[None, :])
     for i in range(len(X)):

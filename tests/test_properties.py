@@ -89,7 +89,7 @@ def test_connected_components_matches_union_find(spark, edge_list):
 def test_connected_components_chain_escalates_to_star(spark):
     """A 50-node chain is the propagation worst case: O(diameter) = 49
     rounds of min-label walking. The hybrid must escalate to
-    large-star/small-star after `star_after` rounds and finish the
+    large-star/small-star after `CC_STAR_AFTER` rounds and finish the
     whole component in O(log^2 n) star rounds — correct labels, far
     fewer total rounds than the diameter."""
     from rust_etl_spark.operators.dedup import connected_components

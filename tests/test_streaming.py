@@ -13,7 +13,7 @@ from rust_etl_spark.sources import load_table
 from rust_etl_spark.streaming.events import (
     run_stream_dedup_once,
     run_stream_once,
-    windowed_counts_batch,
+    windowed_counts,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -67,7 +67,7 @@ def test_stream_matches_batch(spark, tmp_root):
     events_path = os.path.join(SF, "events.parquet")
     streamed = run_stream_once(spark, SF, events_path)
     assert _leaked_dirs(tmp_root) == []
-    batch = windowed_counts_batch(load_table(spark, SF, "events"))
+    batch = windowed_counts(load_table(spark, SF, "events"))
     s = sorted((str(r["w_start"]), r["event_type"], r["n"], r["total_value"]) for r in streamed.collect())
     b = sorted((str(r["w_start"]), r["event_type"], r["n"], r["total_value"]) for r in batch.collect())
     assert s == b
