@@ -41,7 +41,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rust_etl_spark.plans import catalog
-from rust_etl_spark.session import get_spark
+from rust_etl_spark.session import cds_active, get_spark
 from rust_etl_spark.sources import load_table
 
 #: Round-2 operators timed as a SECONDARY metric: kept out of HEADLINE so
@@ -216,6 +216,9 @@ def main() -> None:
         # Divergence >10% means the wall numbers above straddled a
         # contended host window.
         "calibration_sec_start": calibration_start,
+        # Whether the driver JVM started from the engine's CDS archive
+        # (a cold start without it takes ~2x as long).
+        "cds": cds_active(spark),
         "extended_total": round(sum(extended.values()), 3),
         "queries": timings,
         "variance": variance,
@@ -247,6 +250,7 @@ def main() -> None:
                 "sf": record["sf"],
                 "calibration_sec": record["calibration_sec"],
                 "calibration_sec_start": record["calibration_sec_start"],
+                "cds": record["cds"],
                 "extended_total": record["extended_total"],
                 "queries": timings,
                 "variance": variance,

@@ -388,8 +388,8 @@ def lsh_bucket_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=f"ANN top-{TOPK} with multi-probe LSH: probe the query's bucket "
     f"PLUS the {N_PLANES} buckets one hyperplane-flip away (a neighbor "
     "on the far side of one cutting plane lands exactly there), then "
-    "exact cosine within the probed set — the multi-probe recall knob "
-    "at ~(1+planes)/2^planes of the corpus scanned.",
+    "exact cosine within the probed set. The probe radius is fixed at "
+    "one flip, so ~(1+planes)/2^planes of the corpus is scanned.",
 )
 def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH search: the probe set is the query's bucket and

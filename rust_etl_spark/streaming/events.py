@@ -135,7 +135,7 @@ def run_stream_interval_join_once(spark: SparkSession, events_path: str) -> Data
     return drain_bounded_stream(spark, events_path, build, "append", "events_ssjoin", copies=1)
 
 
-def run_stream_once(spark: SparkSession, sf_dir: str, events_path: str) -> DataFrame:
+def run_stream_once(spark: SparkSession, events_path: str) -> DataFrame:
     """Drive the streaming agg over a bounded file source to
     completion (memory sink) and return the result as a DataFrame —
     the standard local smoke for a streaming plan."""

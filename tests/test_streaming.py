@@ -65,7 +65,7 @@ def test_stream_interval_join_matches_batch_range_join(spark, tmp_root):
 
 def test_stream_matches_batch(spark, tmp_root):
     events_path = os.path.join(SF, "events.parquet")
-    streamed = run_stream_once(spark, SF, events_path)
+    streamed = run_stream_once(spark, events_path)
     assert _leaked_dirs(tmp_root) == []
     batch = windowed_counts(load_table(spark, SF, "events"))
     s = sorted((str(r["w_start"]), r["event_type"], r["n"], r["total_value"]) for r in streamed.collect())
