@@ -12,23 +12,26 @@ Each query is forced end-to-end with a noop sink (full plan executes,
 nothing is collected to the driver). One tiny warm-up query first so
 JVM/codegen startup is not billed to the first headline query.
 
-Variance note (three rounds of evidence, r1-r3): individual sub-second
-queries on local[32] swing up to +/-30% between runs of UNCHANGED code
-(JIT, GC, page cache), while the 22-query headline TOTAL is
-reproducible to ~1%. Treat any single-query delta smaller than its
-reported "variance" spread as noise. Each query runs 3x and reports
-the min (steady state); the per-query max-min spread ships in the
-JSON so noise is visible in the artifact instead of inferred. This
-runner records one window; before/after comparisons are interleaved
-same-host runs judged by perfbench/compare.py.
+Each query runs 3x and reports the min (steady state); the max-min
+spread per query ships as "variance", because a sub-second query can
+swing ~30% between runs of unchanged code (JIT, GC, page cache) while
+the headline total is reproducible to ~1%. This runner records one
+window; before/after comparisons are interleaved same-host runs judged
+by perfbench/compare.py.
+
+Per-query engine metrics: the three timed runs of a query share one
+Spark job group, and once they finish the status store's totals for
+that group (jobs, tasks, task CPU, GC, shuffle, spill, and the plan
+counts and operator times of perfbench.sparkstats.plan_counts) go into
+the query's entry of BENCH_LOCAL.json's "stats" block, summed over the
+three runs. They are read with the UI off and outside the timed runs.
 
 Stdout-tail note: the "No Partition Defined for Window operation"
 WARNs this run emits all come from the BOUNDED-GRAIN single-partition
 windows enumerated in tests/test_plans.py's
 BOUNDED_GRAIN_SP_WINDOW_OK allowlist (each entry states why its grain
-is corpus-size-independent) — they are adjudicated shapes, not a
-scale bug; the catalog-wide lock fails any NEW single-partition
-window.
+is corpus-size-independent); the catalog-wide lock fails any NEW
+single-partition window.
 """
 
 from __future__ import annotations
@@ -40,12 +43,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.sparkstats import StatusReader, plan_counts
 from rust_etl_spark.plans import catalog
 from rust_etl_spark.session import cds_active, get_spark
 from rust_etl_spark.sources import load_table
 
-#: Round-2 operators timed as a SECONDARY metric: kept out of HEADLINE so
-#: the headline total stays comparable across rounds.
+#: Operators timed as a SECONDARY metric: kept out of HEADLINE so the
+#: headline total stays comparable with earlier records.
 EXTENDED = [
     "dedup_minhash_verified",
     "dedup_clusters",
@@ -57,7 +61,6 @@ EXTENDED = [
     "events_json_extract",
     "kmeans_iterate",
     "fuzzy_blocked_match",
-    # late round-4 operators (secondary for the same comparability reason)
     "decontaminate",
     "ngram_counts",
     "events_retention",
@@ -69,7 +72,6 @@ EXTENDED = [
     "pii_pseudonymize",
     "q5_local_supplier",
     "q21_sole_late_supplier",
-    # round-5 operators (secondary, same comparability reason)
     "dedup_containment",
     "lm_quality_score",
     "events_ohlc",
@@ -81,7 +83,6 @@ EXTENDED = [
     "events_rolling_distinct",
     "doc_chunk",
     "dataset_split",
-    # late round-5 operators (secondary, same comparability reason)
     "zorder_order",
     "bloom_prefilter",
     "skyline_pareto",
@@ -146,13 +147,12 @@ def _calibration() -> float:
 
 
 def _warm_page_cache(sf_dir: str) -> None:
-    """Sequential read of every parquet file in the tier (round-11
-    mechanism, promoted into bench.py itself in round 15 per VERDICT
-    r14 #2): column-pruned parquet reads are seeky and ~3.5x slower
-    cold, and a query's own noop re-runs do NOT self-warm — so the
-    DRIVER's post-close bench run was paying cold-cache variance into
-    the committed BENCH_r*.json record. One sequential pass (~250 MB
-    at sf0.1) restores warm values for everything that follows."""
+    """Sequential read of every parquet file in the tier: column-pruned
+    parquet reads are seeky and ~3.5x slower cold, and a query's own
+    noop re-runs do NOT self-warm, so a bench run right after the
+    fixtures were written would time cold-cache variance. One sequential
+    pass (~250 MB at sf0.1) restores warm values for everything that
+    follows."""
     import glob as _glob
 
     for path in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
@@ -164,27 +164,35 @@ def _warm_page_cache(sf_dir: str) -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("rust_etl_spark-bench")
+    # The status store evicts stages past its limit, skipped ones first,
+    # and a job whose skipped stage is gone cannot be totalled: keep
+    # every stage of the run.
+    spark = get_spark("rust_etl_spark-bench",
+                      extra_conf={"spark.ui.retainedStages": str(1 << 20)})
 
     # Warm-up: page cache first, then a tiny scan that exercises
     # session + parquet reader + codegen.
     _warm_page_cache(sf_dir)
     load_table(spark, sf_dir, "region").count()
 
-    # Start-of-run CPU anchor (VERDICT r15 #8): paired with the
-    # end-of-run `calibration_sec` below, a >10% within-run divergence
-    # flags a contended measurement window IN the record itself (the
-    # r15 driver window read untouched queries up to 3x high).
+    # Start-of-run CPU anchor: paired with the end-of-run
+    # `calibration_sec` below, a >10% within-run divergence flags a
+    # contended measurement window in the record itself.
     calibration_start = _calibration()
 
     # min-of-3 per query: first execution pays codegen/JIT, the min
     # reflects steady-state throughput. The max-min spread is reported
     # alongside so single-query noise is visible in the artifact.
+    reader = StatusReader(spark)
+    stats: dict[str, dict[str, float]] = {}
+
     def run_set(names: list[str]) -> tuple[dict[str, float], dict[str, float]]:
         timings: dict[str, float] = {}
         spreads: dict[str, float] = {}
         for name in names:
             q = catalog.get(name)
+            group = f"bench:{name}"
+            spark.sparkContext.setJobGroup(group, name)
             runs = []
             for _ in range(3):
                 t0 = time.perf_counter()
@@ -192,16 +200,15 @@ def main() -> None:
                 runs.append(time.perf_counter() - t0)
             timings[name] = round(min(runs), 3)
             spreads[name] = round(max(runs) - min(runs), 3)
+            # Read per query: the status store keeps only the most
+            # recent 1,000 jobs and executions.
+            jobs = reader.jobs_for_groups([group])
+            metrics = {**vars(reader.stage_totals(jobs)), **plan_counts(reader.executions(jobs))}
+            stats[name] = {k: round(v, 3) for k, v in metrics.items() if k != "intervals"}
         return timings, spreads
 
     timings, variance = run_set(HEADLINE)
-    # headline-only mode for very large tiers (e.g. the 100x gen tier)
-    # where the 44-query extended set would dominate wall for no extra
-    # curve information.
-    if os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_ONLY"):
-        extended, variance_ext = {}, {}
-    else:
-        extended, variance_ext = run_set(EXTENDED)
+    extended, variance_ext = run_set(EXTENDED)
 
     total = round(sum(timings.values()), 3)
     calibration = _calibration()
@@ -228,11 +235,13 @@ def main() -> None:
             "per-query values are min-of-3; 'variance' is the "
             "max-min spread per query — sub-second queries swing "
             "up to ~30% on unchanged code, the headline total is "
-            "reproducible to ~1%; compare totals across rounds"
+            "reproducible to ~1%; 'stats' sums each query's three "
+            "timed runs"
         ),
+        "stats": stats,
     }
-    # Full record survives in-repo (the driver stores only a 2000-char
-    # tail of stdout, which truncated r5's per-query block mid-JSON).
+    # Full record survives in-repo: a consumer that keeps only a
+    # 2000-char tail of stdout would truncate the per-query blocks.
     local_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
     )

@@ -53,7 +53,7 @@ to DOUBLE (correctly rounded, identical on both engines even above
 accumulator and is oracle-verified at every sweep tier;
 tests/test_money_dec38.py pins the adversarial grid INCLUDING a
 beyond-int64 sum; the measured overhead at the 100x tier lives in
-DEC38_BENCH.json / SCALING.md.
+DEC38_BENCH.json.
 """
 
 from __future__ import annotations

@@ -461,7 +461,7 @@ JACCARD_DF_CAP = 64
 #: Shingles are hashed to 60-bit BIGINTs *before* any shuffle: the
 #: inverted-index stages key on `sh`, and an 8-byte long shuffles ~4x
 #: fewer bytes than a raw 3-token shingle string (measured at sf0.1:
-#: 34.7 MB -> see SCALE_AUDIT.md). Collisions (2^-60) are mirrored
+#: 34.7 MB of shingle-string shuffle before). Collisions (2^-60) are mirrored
 #: exactly by the oracle, which applies the identical md5 hash.
 _SHINGLES_SQL = (
     "list_distinct(list_transform("

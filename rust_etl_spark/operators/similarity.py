@@ -96,7 +96,7 @@ _LSH_DEDUP_PLANES_SQL = f"""(
 #: graded scales (N <= 10^4 -> MOD = 100) is bit-identical to the old
 #: fixed MOD = 100; larger tiers re-size so assignment is O(N*sqrt(N))
 #: instead of the O(N^2/MOD) the 30x run measured (kmeans_iterate was
-#: the only >=20x outlier, SCALING.md).
+#: the only >=20x outlier).
 IVF_CENTROID_MOD = 100
 
 
@@ -121,7 +121,7 @@ IVF_NPROBE = 4  #: base cells probed by the IVF search (the standard recall knob
 #: -------- hierarchical (two-level) assignment sizing (round 9) --------
 #: Exact argmin assignment is N x C distance folds with C ~ sqrt(N) —
 #: O(N^1.5), the wall-worst surface at the 100x tier (similarity_ann_ivf
-#: ~19 s, kmeans_iterate ~25-50 s; SCALING.md round 8). Above
+#: ~19 s, kmeans_iterate ~25-50 s on a 32-core host). Above
 #: IVF_HIER_MIN_CELLS cells the assignment goes two-level: every f-th
 #: centroid (f ~ sqrt(C), power of 2) is a SUPER-cell; each centroid
 #: attaches to its nearest super, each vector finds its nearest super
@@ -464,7 +464,7 @@ EMB_NEARDUP_TAU = 0.4
     f"2^P buckets bound expected occupancy at {LSH_DEDUP_OCCUPANCY} vectors "
     "(integer-only, mirrored by a scalar subquery in the oracle), so in-bucket pair "
     "expansion stays ~N*occupancy/2 — linear — instead of the N^2/2^8 a fixed 8-plane "
-    "key densifies to (121 GB spill at the 100x tier, SCALING.md round 8).",
+    "key densifies to (121 GB spill at the 100x tier).",
 )
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs near-dup within scale-aware LSH buckets.

@@ -301,7 +301,7 @@ _FUZZY_BLK_SQL = f"""(
     "bounds expected per-suffix density at 100 rows (integer-only, mirrored "
     "by a scalar subquery in the oracle) — the fixed 3-char key densified "
     "linearly with the corpus, making within-block pair generation "
-    "quadratic (5.6x wall at 10x rows, SCALING.md round 6).",
+    "quadratic (5.6x wall at 10x rows).",
 )
 def fuzzy_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rust_etl_spark.sources import table_rows

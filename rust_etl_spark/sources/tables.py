@@ -73,8 +73,7 @@ def normalize_event_time(df: DataFrame) -> DataFrame:
 #: materialized (sinks.write_bucketed_table), registering it here makes
 #: EVERY catalog query read the optimized layout transparently — the
 #: same move a 100 TB deployment makes by repointing the table in its
-#: metastore; queries never change. Used by
-#: scripts/bucketed_layout_bench.py and tests/test_bucketed_layout.py.
+#: metastore; queries never change. Used by tests/test_bucketed_layout.py.
 _LAYOUT_OVERRIDES: dict[tuple[str, str], str] = {}
 
 

@@ -3,9 +3,9 @@
 The driver-provided fixtures stop at sf0.1 (~600k lineitem rows), so
 every 100 TB claim rested on plan shape + the sf0.1 shuffle audit.
 This script synthesizes a 10x tier (`gen_sf1/`, lineitem ~6M rows)
-INSIDE the repo (never touching the read-only /root/testdata) so
-`scripts/scale_audit.py` and `bench.py` can measure an actual scaling
-curve: wall time, shuffle bytes, and spill at 10x the rows.
+INSIDE the repo (never touching the read-only fixtures) so `bench.py`
+can measure an actual scaling curve at 10x the rows: wall time plus
+its per-query `stats` block (shuffle bytes, spill, task CPU).
 
 Construction (seed=42, fully deterministic):
 

@@ -231,8 +231,8 @@ def main() -> None:
     # 75%-pass modulo filter defeats exactly that check. So every run
     # diffs against the committed record and surfaces NEW entries of
     # EITHER class loudly — a new reduced flag is un-adjudicated until
-    # someone writes its family down in SCALING.md and the canary
-    # allowlist (tests/test_misbroadcast_canary.py).
+    # someone writes its family down in the canary allowlist
+    # (tests/test_misbroadcast_canary.py, REDUCED_OK).
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_path = os.path.join(root, "MISBROADCAST_AUDIT.json")
     new_raw: list[str] = []

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Pre-snapshot gate: run BEFORE any end-of-round commit.
 #
-#   bash scripts/verify_round.sh            # full gate (~12 min)
+#   bash scripts/verify_round.sh            # full gate (~17 min, 4 cores)
 #
 # Stages:
 #   1. driver-sim  — vanilla SparkSession, every queries() entry vs its
@@ -15,15 +15,13 @@
 #      misbroadcast canary (tests/test_misbroadcast_canary.py): the
 #      scripts/misbroadcast_audit.py classifier over every graded +
 #      bench plan at fixture scale, failing on any fact-table
-#      broadcast not adjudicated in its allowlists — the net that
-#      caught two real scale bugs in round 11 now fires on every
-#      gate run, not only on manual gen_sf10 sweeps (which remain
-#      the round-close deep check for AQE-runtime conversions).
+#      broadcast not adjudicated in its allowlists.
 #   4. perfbench tests — the benchmark's own suite; it catches breakage
 #      of the engine names the benchmark wraps (read_json_document,
 #      process_json_document, run_pipeline, get_spark) before a
 #      benchmark run does.
-#   5. bench smoke — bench.py must print exactly one JSON line.
+#   5. bench smoke — bench.py must print exactly one JSON line, and its
+#      BENCH_LOCAL.json must hold engine stats for every headline query.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -43,21 +41,21 @@ python -m pytest perfbench/tests -q
 
 echo "== 5/5 bench smoke (sf0.01) =="
 # bench.py rewrites BENCH_LOCAL.json on every run; the smoke's sf0.01
-# record must not clobber the committed sf0.1 one — save and restore.
-bench_local_saved=""
+# record is checked, then the committed one is restored on any exit.
 if [ -f BENCH_LOCAL.json ]; then
     bench_local_saved=$(mktemp)
     cp BENCH_LOCAL.json "$bench_local_saved"
+    trap 'mv "$bench_local_saved" BENCH_LOCAL.json' EXIT
 fi
 out=$(SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python bench.py 2>/dev/null | tail -1)
-if [ -n "$bench_local_saved" ]; then
-    mv "$bench_local_saved" BENCH_LOCAL.json
-fi
 echo "$out"
 python - "$out" <<'EOF'
 import json, sys
 d = json.loads(sys.argv[1])
 assert d["unit"] == "sec" and d["queries"], "bench JSON malformed"
+stats = json.load(open("BENCH_LOCAL.json"))["stats"]
+missing = [q for q in d["queries"] if stats.get(q, {}).get("jobs", 0) <= 0]
+assert not missing, f"no stats entry with jobs > 0: {missing}"
 EOF
 
 echo "VERIFY_ROUND: ALL GREEN"

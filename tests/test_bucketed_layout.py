@@ -14,9 +14,6 @@ plan that:
 * a groupBy on the bucket key aggregates with ZERO exchanges;
 * the shipped q18 query strictly REDUCES its exchange count when the
   layout is repointed, with identical results.
-
-scripts/bucketed_layout_bench.py measures the same three shipped
-queries at the gen tiers (wall + shuffle bytes); SCALING.md renders it.
 """
 
 from __future__ import annotations
@@ -338,9 +335,7 @@ def test_user_bucketed_window_sort_elimination(spark, bucketed_events):
     [
         "events_sessionize",
         "events_funnel",
-        # round 15: the family's two largest pure-events exchanges,
-        # added to the measured bucketed set (see
-        # scripts/bucketed_layout_bench.py FAMILIES note).
+        # the family's two largest pure-events exchanges.
         "events_ewma",
         "events_interval_merge",
         # round 16 (VERDICT r15 #2, the deferred layout decision): the

@@ -23,8 +23,8 @@ correct plan at that scale — those queries are enumerated below with
 the reason each is safe at 100 TB (each verified non-raw in the
 committed gen_sf10 MISBROADCAST_AUDIT.json, raw=0). A NEW entry of
 either class fails with an "adjudicate me" message; adjudication
-means writing the family reason here and in SCALING.md, never just
-appending the name.
+means writing the family reason in the allowlist entry here, never
+just appending the name.
 """
 
 from __future__ import annotations
@@ -42,8 +42,8 @@ SF = "/root/testdata/sf0.001"
 
 #: Queries whose fixture-scale plan broadcasts a RAW fact projection
 #: because the fact is genuinely tiny at sf0.001 — the documented
-#: broadcast-threshold crossover family (SCALING.md "Broadcast
-#: crossover"): Catalyst flips these to shuffle joins as the estimate
+#: broadcast-threshold crossover family: Catalyst flips these to
+#: shuffle joins as the estimate
 #: grows, verified raw=0 in the committed gen_sf10 audit, and the
 #: bucketed orderkey layout is the measured 100 TB answer.
 RAW_OK_AT_FIXTURE_SCALE = {
@@ -64,8 +64,8 @@ RAW_OK_AT_FIXTURE_SCALE = {
 
 #: Queries with a REDUCED fact broadcast (filtered/aggregated before
 #: the exchange) — legitimate whenever the reduction is sublinear in
-#: corpus size; families adjudicated in SCALING.md "Misbroadcast
-#: audit" section. Fixture-only members beyond the gen_sf10 record's
+#: corpus size; each entry's value names its family and why it is
+#: bounded. Fixture-only members beyond the gen_sf10 record's
 #: 17 are the crossover family again (their dim-filtered fact side
 #: also fits under the threshold at sf0.001).
 REDUCED_OK = {
@@ -133,7 +133,8 @@ def test_no_unadjudicated_fact_broadcasts(spark):
         "aggregated before the exchange, but a filter is only safe if its "
         "selectivity tracks corpus growth sublinearly (round 11's "
         "decontaminate had a 75%-pass filter classified 'reduced'). "
-        "Adjudicate the family in SCALING.md and REDUCED_OK, or re-plan."
+        "Adjudicate the family in REDUCED_OK with the reason its side "
+        "stays bounded, or re-plan."
     )
 
     # Drift guard in the other direction: entries that no longer flag
