@@ -15,8 +15,17 @@ normalizer, see SURVEY.md) as an idiomatic Spark engine:
 - ``streaming`` — Structured Streaming ingest + stateful ops
 
 Everything is DataFrame/Catalyst-first: declarative plans, predicate
-pushdown, broadcast joins for dims, Pandas UDFs only where built-ins
-cannot express the semantics (byte decoding, multimodal feature stubs).
+pushdown, broadcast joins for dims. Arrow/pandas kernels
+(``mapInPandas``/``applyInPandas``) run only where built-ins cannot
+express the semantics: LSH bucketing and dedup, IVF cell assignment
+(k-means runs on it) and PQ encoding and search in
+``operators.similarity``, the PCA Gram sweep (``operators.pca``),
+SimHash (``operators.dedup``), winnowing fingerprints
+(``operators.text``), sequence packing (``operators.packing``), grouped
+z-scores (``operators.grouped``), the multimodal feature stub
+(``operators.multimodal``) and the stateful streaming operator
+(``streaming.stateful``). The codepoint decode is one JVM expression
+(``operators.decode``).
 """
 
 __version__ = "0.1.0"

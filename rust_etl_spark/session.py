@@ -9,6 +9,12 @@ operators.
 
 The driver JVM starts from a class-data-sharing (CDS) archive of the
 engine's classes when this host has one: see ``get_spark``.
+
+Python workers of a session whose JVM ``get_spark`` launched import
+``pyspark`` and ``py4j`` from the installed packages, not from Spark's
+archives, when the installed ``pyspark`` is the archived release
+(``rust_etl_spark/worker_daemon.py``); otherwise they import from the
+archives as stock workers do. Nothing about this is configurable.
 """
 
 from __future__ import annotations
@@ -258,6 +264,16 @@ def get_spark(
     directory, the cache is unwritable, or another live process is
     recording; nothing is dumped when a setting puts a non-empty
     directory on the driver's classpath.
+
+    Python workers: a call that launches the driver JVM also sets
+    ``spark.python.daemon.module`` to ``rust_etl_spark.worker_daemon``,
+    over any ``extra_conf`` value. Its workers import ``pyspark`` and
+    ``py4j`` from the installed packages instead of ``pyspark.zip``, the
+    py4j zip and the spark-core jar, so a task no longer re-parses the
+    archives (~0.15 s per task), but only when the installed ``pyspark``
+    has the archived ``version.py`` and ``py4j`` imports without its
+    zip; otherwise they import from the archives, as stock workers do.
+    A session attached to a JVM launched elsewhere keeps the stock daemon.
     """
     cores = default_parallelism()
     builder = (
@@ -323,7 +339,9 @@ def get_spark(
     conf = dict(extra_conf or {})
     launching = SparkContext._gateway is None
     if launching:
+        # Only a JVM launched here has the engine on its workers' path.
         _export_engine_path()
+        conf["spark.python.daemon.module"] = "rust_etl_spark.worker_daemon"
     launch = _cds_launch() if launching else None
     if launch is not None:
         archive, classlist, conf_dir = launch
