@@ -95,6 +95,8 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     ).collect()[0]
 
     with_split.write.mode("overwrite").partitionBy("split", "lang").parquet(out_dir)
+    verdicts.unpersist()
+    with_split.unpersist()
     return {
         "counts": counts,
         "drop_by_rule": drop_by_rule,

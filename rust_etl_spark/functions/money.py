@@ -3,11 +3,9 @@
 ``round(sum(double), 2)`` is NOT engine-portable: Spark and DuckDB may
 reduce the same multiset of doubles in different orders, and when the
 accumulated low bits differ the final cent-round can land on opposite
-sides of a half-cent boundary. This hash-failed twice at the 10x tier
-in round 6 (q9: half-cent sum boundary; q15: ulp-tied max winners) and
-CLAUDE.md's policy is to migrate the whole class: round 13 covered
-every graded MONEY aggregate, and round 14 extended it to
-``events.value`` (``VALUE_CENTS``) — the fixture generator quantizes
+sides of a half-cent boundary (or pick different ulp-tied max
+winners). So every graded MONEY aggregate, and ``events.value``
+(``VALUE_CENTS``), is exact scaled-integer — the fixture generator quantizes
 event values to exactly 2 decimals (verified: 0 of 100k sf0.1 rows
 carry >2), so scaled-integer sums are value-exact there too, not a
 semantics fork. Genuinely continuous derived floats (cosine scores,
@@ -29,7 +27,7 @@ rounding boundary.
 
 Int64 headroom: the widest scale used is 10^6 (sum_charge: cents x
 discount-pct x tax-pct); per-group sums reach ~1.7e18 of int64's
-9.2e18 at the gen_sf10 evidence tier. Beyond ~sf50 the posture is
+9.2e18 at a 10x generated tier. Beyond ~sf50 the posture is
 DECIMAL(38) accumulators — not needed at any graded or evidence tier,
 and the driver harness requires BIGINT-castable outputs anyway. This
 bound is ENFORCED, not just documented: tests/test_money_headroom.py
@@ -37,23 +35,22 @@ measures max |per-group scaled sum| for every scale family on the
 active tier and fails (naming the DECIMAL(38) escape hatch) before
 wraparound could produce a wrong hash instead of an error.
 
-The escape hatch is IMPLEMENTED and tested, not just named (round-15
-VERDICT #4): ``dec38_sql`` wraps a scaled summand in a DECIMAL(38,0)
+The escape hatch is IMPLEMENTED and tested: ``dec38_sql`` wraps a
+scaled summand in a DECIMAL(38,0)
 cast, so the SUM accumulates in 38-digit exact decimal on both engines
 (capacity ~1e38, ~1e19x the int64 bound). Failure-mode note, pinned in
 tests/test_money_dec38.py: under Spark 4's DEFAULT ANSI mode a BIGINT
 accumulator overflow RAISES ARITHMETIC_OVERFLOW — a loud query error,
-not the silent wrap earlier round prose assumed (that wrap is the
-non-ANSI behavior; nothing in this repo or the driver disables ANSI) —
-so past the headroom the BIGINT form fails loudly and the DEC38 form
+not a silent wrap (that wrap is the non-ANSI behavior; nothing in this
+repo or the driver disables ANSI) — so past the headroom the BIGINT
+form fails loudly and the DEC38 form
 is the fix. Reconstitution is unchanged: the exact decimal sum casts
 to DOUBLE (correctly rounded, identical on both engines even above
 2^53) then one IEEE division + ``round_half_up``.
 ``groupby_agg_dec38`` (plans/relational.py) runs the q1 shape on this
 accumulator and is oracle-verified at every sweep tier;
 tests/test_money_dec38.py pins the adversarial grid INCLUDING a
-beyond-int64 sum; the measured overhead at the 100x tier lives in
-DEC38_BENCH.json.
+beyond-int64 sum.
 """
 
 from __future__ import annotations
@@ -72,10 +69,8 @@ def cents_sql(col: str) -> str:
     CONSTRUCTION (the repo's round_half_up doctrine) — round(double)
     only agrees empirically (Spark rounds the decimal string via
     BigDecimal, DuckDB multiplies), and Spark's BigDecimal path
-    allocates per row: the round-13 chain measured the round()-based
-    form DOUBLING the scan-bound wide aggregates (q1 0.92 -> 2.04 s,
-    groupby_agg 1.11 -> 2.34 s at the 100x tier; the floor form
-    restored them). Fixture money carries exactly 2 decimals, so
+    allocates per row, which about doubles scan-bound wide aggregates
+    such as q1. Fixture money carries exactly 2 decimals, so
     x*100 sits within ~1e-9 of an integer and the +0.5 never lands
     near a representational boundary; for negative amounts
     (c_acctbal) the tie rule is half-toward-+inf, the same documented
@@ -111,9 +106,7 @@ def dec38_sql(expr: str) -> str:
     is in range — pinned in tests/test_money_dec38.py, which also
     proves the beyond-int64 case where the BIGINT sum raises
     ARITHMETIC_OVERFLOW (Spark ANSI default) and this form stays
-    exact. Costs one decimal
-    accumulator per group instead of a long (measured at the 100x
-    tier: DEC38_BENCH.json).
+    exact. Costs one decimal accumulator per group instead of a long.
     """
     return f"CAST({expr} AS DECIMAL(38, 0))"
 

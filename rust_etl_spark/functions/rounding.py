@@ -12,8 +12,8 @@ BOTH engines: every step is a correctly-rounded IEEE operation, so the
 results are bit-identical whenever the inputs are. Signed inputs are
 supported and parity-safe by construction: negative halves round
 toward +inf (e.g. -0.125 -> -0.12 at 2dp) identically on both engines
-— the round-14 sweep applies it to signed corr/covar/regr slopes and
-cosine scores deliberately. The convention is "half toward +inf", not
+— it is applied to signed corr/covar/regr slopes and cosine scores
+deliberately. The convention is "half toward +inf", not
 "half away from zero"; what matters for grading is that the two
 engines agree, which pure IEEE ops guarantee.
 """

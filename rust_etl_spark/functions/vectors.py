@@ -41,7 +41,7 @@ def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two (already double) arrays, rounded to
     ``NDIGITS``.
 
-    Portable half-up floor rounding (round-14 sweep): cosine is a
+    Portable half-up floor rounding: cosine is a
     DERIVED float, and round(double, n) is only empirically portable —
     the floor form agrees across engines by construction (negatives
     round half-toward-+inf identically on both)."""

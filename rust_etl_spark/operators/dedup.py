@@ -312,12 +312,28 @@ CC_STAR_AFTER = 5
 CC_MAX_ROUNDS = 50
 
 
-def connected_components(
-    pairs: DataFrame,
-    a: str,
-    b: str,
-    stats: dict | None = None,
-) -> DataFrame:
+def _label_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label propagation round over the (u, lbl) frame:
+    (u, lbl, moved), materialized. The new label AND the convergence
+    bit live in the same checkpointed frame, so the changed-check reads
+    the materialized rows instead of re-running the join."""
+    prop = (
+        edges.join(labels.withColumnRenamed("u", "v"), "v")
+        .groupBy("u")
+        .agg(F.min("lbl").alias("nlbl"))
+    )
+    return (
+        labels.join(prop, "u", "left")
+        .select(
+            "u",
+            F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl"),
+            (F.coalesce("nlbl", "lbl") < F.col("lbl")).alias("moved"),
+        )
+        .localCheckpoint(eager=True)  # also truncates the growing lineage
+    )
+
+
+def connected_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """(u, lbl) for every node of the undirected pair graph, where lbl
     is the minimum node id in its connected component.
 
@@ -330,19 +346,14 @@ def connected_components(
     same DataFrame ops, but each pass halves path lengths instead of
     walking one hop. The star phase is seeded with the propagation
     phase's partial labels (label edges preserve connectivity), so no
-    progress is discarded. ``stats`` (optional dict) receives
-    ``plain_rounds`` / ``star_rounds`` for observability; property-
-    tested against a union-find reference in tests/test_properties.py.
+    progress is discarded. Property-tested against a union-find
+    reference in tests/test_properties.py.
 
-    ``CC_STAR_AFTER = 5`` is measured, not guessed: the sf0.1 MinHash
-    candidate graph converges in exactly 5 propagation rounds (2.52 s);
-    escalating earlier is slower there (after 3 rounds → 3.44 s,
-    after 2 → 3.21 s) because a star round (two sub-phases +
-    distinct) costs more than a propagation round. The escalation pays
-    off only on genuinely high-diameter graphs (50-chain: 49 plain
-    rounds vs ~7 hybrid). A fused round-0 initialization (labels =
-    min of closed neighborhood) was also measured slower (2.97 s vs
-    2.46 s) despite saving a round — kept out.
+    ``CC_STAR_AFTER = 5``: the sf0.1 MinHash candidate graph converges
+    in exactly 5 propagation rounds, and a star round (two sub-phases +
+    distinct) costs more than a propagation round, so escalating
+    earlier is slower there. The escalation pays off on genuinely
+    high-diameter graphs (50-chain: 49 plain rounds vs ~7 hybrid).
     """
     edges = (
         pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
@@ -351,37 +362,11 @@ def connected_components(
     )
     nodes = edges.select("u").distinct()
     labels = nodes.withColumn("lbl", F.col("u"))
-    plain_rounds = 0
-    converged = False
     for _ in range(CC_STAR_AFTER):
-        plain_rounds += 1
-        prop = (
-            edges.join(labels.withColumnRenamed("u", "v"), "v")
-            .groupBy("u")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        # One materialization per round: the new label AND the
-        # convergence bit live in the same checkpointed frame, so the
-        # changed-check reads the materialized rows instead of
-        # re-running the join.
-        step = (
-            labels.join(prop, "u", "left")
-            .select(
-                "u",
-                F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl"),
-                (F.coalesce("nlbl", "lbl") < F.col("lbl")).alias("moved"),
-            )
-            .localCheckpoint(eager=True)  # also truncates the growing lineage
-        )
+        step = _label_round(edges, labels)
         labels = step.select("u", "lbl")
         if step.filter(F.col("moved")).limit(1).count() == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats["plain_rounds"] = plain_rounds
-        stats["star_rounds"] = 0
-    if converged:
-        return labels
+            return labels
     # Escalation: seed the star graph with the original edges PLUS the
     # partial labels (u -> lbl edges), canonicalized.
     label_edges = labels.filter(F.col("lbl") != F.col("u")).select(
@@ -401,16 +386,12 @@ def connected_components(
         )
 
     prev = sig(c)
-    star_rounds = 0
     for _ in range(CC_MAX_ROUNDS):
-        star_rounds += 1
         c = _star_round(c).localCheckpoint(eager=True)
         cur = sig(c)
         if cur == prev:
             break
         prev = cur
-    if stats is not None:
-        stats["star_rounds"] = star_rounds
     # Fixpoint is a star forest: every non-min node has exactly the
     # edge (u, component_min); component minima only appear as v.
     lbl = c.groupBy("u").agg(F.min("v").alias("lbl"))
@@ -597,7 +578,7 @@ def _simhash_batches():
     ``2*ones_j > T``. Empty Arrow batches are skipped (the PQ-kernel
     precedent: an upstream filter may emit one and it would reach
     np.concatenate as a malformed input). Zero-length ``th`` arrays
-    raise ValueError (ADVICE r15): ``np.add.reduceat`` silently
+    raise ValueError: ``np.add.reduceat`` silently
     returns ``flat[start]`` — the NEXT doc's first hash — for an
     empty segment, a wrong signature rather than an error, so the
     kernel hard-fails if reused without the caller's size(t) > 0
@@ -634,20 +615,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy pass folds the hash array into the 32-bit signature — no
     explode, no shuffle anywhere in the whole plan.
 
-    PERF (round 15): the previous Catalyst form folded the token-hash
-    array through a 32-long accumulator via ``aggregate``+``zip_with``
-    +``bit_get`` — 32 lambda evaluations and a fresh 32-element array
-    allocation per TOKEN. That is the dense fixed-shape integer kernel
-    the PQ-encode precedent flagged (guide §4.2: hand whole batches to
-    numpy; CLAUDE.md: higher-order folds pay ~17x on dense kernels).
-    Subtree attribution at gen_sf10 (warm, min-of-3, noop sink):
-    scan+distinct_tokens+md5 1.46 s, full Catalyst query 4.00 s — the
-    fold alone was ~2.5 s. The numpy swap (32 vectorized shift/mask
-    passes + np.add.reduceat per doc-segment) removes it; md5 hashing
-    stays in the JVM so only (doc_id, array<long>) crosses the Arrow
-    boundary, the columns the kernel needs and nothing else (§4.1).
-    Bit-parity: integers end to end, verified value-for-value against
-    the old fold at gen_sf10 before shipping; contract pinned in
+    The kernel is 32 vectorized shift/mask passes + np.add.reduceat
+    per doc-segment, instead of a Catalyst ``aggregate``+``zip_with``
+    fold that allocates a 32-element array per TOKEN (CLAUDE.md:
+    higher-order folds are slow on dense kernels). md5 hashing stays in
+    the JVM, so only (doc_id, array<long>) crosses the Arrow boundary.
+    Bit-parity: integers end to end; contract pinned in
     tests/test_simhash_kernel_contract.py.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -686,17 +659,13 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate pairs joined back to per-doc distinct-token arrays for
     exact-Jaccard verification.
 
-    Join strategy (round 11): both token joins hint ``shuffle_hash``
-    with the PAIRS side as build. The round-11 misbroadcast audit
-    (scripts/misbroadcast_audit.py) caught Catalyst's unhinted pick
-    broadcasting the RAW token-array projection of documents on the
-    second join at the 100x tier — the only raw fact broadcast left in
-    the catalog, the same pathology class as events_range_join's
-    (token arrays grow with the corpus; the build would die on a
-    driver at scale). The hinted form is measured at par locally
-    (1.93 s vs 1.77 s shipped / 1.91 s merge, min-of-3 at gen_sf10 —
-    within spread) and is deterministic + scale-safe in every regime:
-    both sides shuffle on doc_id, each task hash-builds only its
+    Join strategy: both token joins hint ``shuffle_hash`` with the
+    PAIRS side as build. Unhinted, Catalyst broadcasts the RAW
+    token-array projection of documents on the second join at large
+    tiers (token arrays grow with the corpus; the build would die on
+    a driver at scale). The hinted form is deterministic and
+    scale-safe in every regime: both sides shuffle on doc_id, each
+    task hash-builds only its
     bucket-capped pairs slice (bounded by AQE's 16 MB advisory), and
     Spark's fallback when a hint can't be honored is the spill-safe
     SMJ on the same key."""
@@ -850,16 +819,13 @@ def exact_jaccard_pairs_df(docs: DataFrame, tau: float) -> DataFrame:
     return pairs.filter(jac >= tau).select("doc_a", "doc_b")
 
 
-def minhash_recall(
-    docs: DataFrame,
-    k: int = MINHASH_K,
-    band_rows: int = MINHASH_BAND_ROWS,
-) -> float:
-    """Measured candidate recall of the (k, band_rows) LSH setting over
-    a (doc_id, text) frame: |candidates ∩ truth| / |truth| for truth =
-    exact Jaccard >= ``MINHASH_VERIFY_TAU``."""
+def minhash_recall(docs: DataFrame) -> float:
+    """Measured candidate recall of the shipped (``MINHASH_K``,
+    ``MINHASH_BAND_ROWS``) LSH setting over a (doc_id, text) frame:
+    |candidates ∩ truth| / |truth| for truth = exact Jaccard >=
+    ``MINHASH_VERIFY_TAU``."""
     truth = exact_jaccard_pairs_df(docs, MINHASH_VERIFY_TAU)
-    cand = minhash_candidate_pairs_df(docs, k, band_rows)
+    cand = minhash_candidate_pairs_df(docs, MINHASH_K, MINHASH_BAND_ROWS)
     n_truth = truth.count()
     if n_truth == 0:
         return 1.0
@@ -942,11 +908,9 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 COSINE_NEARDUP_TAU = 0.4
 #: Candidate-block width: pairs are only scored within the same
 #: ``vec_id // COSINE_BLOCK`` block, so the candidate set is
-#: n*(B-1)/2 — linear in the corpus, not quadratic. This bounded form
-#: replaced the round-1..14 all-pairs crossJoin (VERDICT r14 #3): the
-#: O(n^2) DuckDB oracle excluded the query from every gen-tier parity
-#: sweep (~2e8 list-lambda pairs at gen_sf1), while the blocked oracle
-#: runs in under a second there. The all-pairs ground-truth tool for
+#: n*(B-1)/2 — linear in the corpus, not quadratic, so the blocked
+#: DuckDB oracle also runs in under a second at gen_sf1 (an all-pairs
+#: one would evaluate ~2e8 list-lambda pairs). The all-pairs ground-truth tool for
 #: recall measurement remains `exact_jaccard_pairs_df` (tokens) and
 #: the labeled crossJoin in scripts/ann_recall_tier.py (vectors).
 COSINE_BLOCK = 250
@@ -1063,21 +1027,17 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments (real corpora would split on newlines instead; the
     dataflow is identical).
 
-    Pipeline (round-15 re-plan): chunk map-side (one projection, no
-    shuffle) -> ONE exchange on the segment fingerprint computing the
-    corpus document-frequency as two windows over the same fp
-    clustering (lag marks each fp's first row per doc_id, a sum window
-    totals the marks == countDistinct) -> re-aggregate per doc. The
-    previous groupBy(fp)+join-back shape hit the exact pathology the
-    dedup_ngram_jaccard adjudication measured: map-side partial
-    aggregation makes the two fp exchanges non-identical, ReuseExchange
-    never fires, and the whole chunk+md5 subplan evaluates TWICE —
-    13.5 -> 4.25 s min-of-4 interleaved warm at gen_sf10, outputs
-    exactly equal (exceptAll = 0 both directions over all 500k rows).
-    Same q21-precedent justification: the windows run on the
-    clustering the old join exchange already required, the sort-based
+    Pipeline: chunk map-side (one projection, no shuffle) -> ONE
+    exchange on the segment fingerprint computing the corpus
+    document-frequency as two windows over the same fp clustering (lag
+    marks each fp's first row per doc_id, a sum window totals the
+    marks == countDistinct) -> re-aggregate per doc. A groupBy(fp) +
+    join-back shape would evaluate the whole chunk+md5 subplan TWICE:
+    map-side partial aggregation makes the two fp exchanges
+    non-identical, so ReuseExchange never fires. The windows run on
+    the clustering a join exchange would require anyway, the sort-based
     window spills gracefully on a hot boilerplate fp (where a
-    collect_set hash-agg would OOM), and the join disappears. Shuffle
+    collect_set hash-agg would OOM), and there is no join. Shuffle
     moves 16-byte md5 keys + ids, never segment text; the output is
     one row per document (ids + counters only).
 

@@ -128,7 +128,11 @@ def top_eigenvector(cov: list[list[float]]) -> list[float]:
     "drift-monitoring primitive of an embedding pipeline.",
 )
 def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Project every vector onto the corpus's first principal axis."""
+    """Project every vector onto the corpus's first principal axis.
+
+    Building the DataFrame runs Spark jobs: the mean and covariance
+    are collected to the driver and the eigensolve runs there, so the
+    returned plan holds the mean and the axis as literals."""
     emb = load_table(spark, sf_dir, "embeddings")
     mu, cov, _ = corpus_covariance(emb)
     w = top_eigenvector(cov)

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from rust_etl_spark.functions.hashing import md5_long60_sql
 from rust_etl_spark.functions.rounding import round_half_up
 from rust_etl_spark.functions.vectors import (
+    NDIGITS,
     cosine,
     cosine_sql,
     l2sq,
@@ -50,13 +51,9 @@ N_PLANES = 8
 N_DIMS = 64
 
 #: dedup_embedding_lsh plane-count sizing. A FIXED plane count is a
-#: scale bug for the all-pairs-within-bucket dedup (found by the 100x
-#: extended audit, round 8): 2^8 = 256 buckets means expected occupancy
-#: grows as N/256, in-bucket pair expansion as N^2/256 — quadratic.
-#: (It stayed invisible below 100x because the pair->vector joins
-#: broadcast the embeddings table; at 200k vectors the table outgrew
-#: the 64 MB threshold and the quadratic pair set hit a sort-merge
-#: shuffle: 15.8 GB shuffled, 121 GB spilled, 332 s.) The SEARCH ops
+#: scale bug for the all-pairs-within-bucket dedup: 2^8 = 256 buckets
+#: means expected occupancy grows as N/256, in-bucket pair expansion as
+#: N^2/256 — quadratic. The SEARCH ops
 #: (similarity_ann_lsh, lsh_bucket_assign) keep the fixed N_PLANES:
 #: their cost is the probed fraction, not in-bucket pairs, and the
 #: probe set (the query bucket plus its one-bit-flip neighbors) sets
@@ -92,11 +89,9 @@ _LSH_DEDUP_PLANES_SQL = f"""(
 #: can mirror the codebook. MOD is SCALE-AWARE so the codebook stays
 #: ~sqrt(N): the smallest power of 10 (floored at this base) whose
 #: square covers the corpus — an integer-only derivation both engines
-#: compute identically (no log10 boundary risk). Every result at the
-#: graded scales (N <= 10^4 -> MOD = 100) is bit-identical to the old
-#: fixed MOD = 100; larger tiers re-size so assignment is O(N*sqrt(N))
-#: instead of the O(N^2/MOD) the 30x run measured (kmeans_iterate was
-#: the only >=20x outlier).
+#: compute identically (no log10 boundary risk). The graded scales
+#: (N <= 10^4) get MOD = 100; larger tiers re-size so assignment is
+#: O(N*sqrt(N)) instead of O(N^2/MOD).
 IVF_CENTROID_MOD = 100
 
 
@@ -118,10 +113,9 @@ _IVF_MOD_SQL = f"""(
 )"""
 IVF_NPROBE = 4  #: base cells probed by the IVF search (the standard recall knob)
 
-#: -------- hierarchical (two-level) assignment sizing (round 9) --------
+#: -------- hierarchical (two-level) assignment sizing --------
 #: Exact argmin assignment is N x C distance folds with C ~ sqrt(N) —
-#: O(N^1.5), the wall-worst surface at the 100x tier (similarity_ann_ivf
-#: ~19 s, kmeans_iterate ~25-50 s on a 32-core host). Above
+#: O(N^1.5). Above
 #: IVF_HIER_MIN_CELLS cells the assignment goes two-level: every f-th
 #: centroid (f ~ sqrt(C), power of 2) is a SUPER-cell; each centroid
 #: attaches to its nearest super, each vector finds its nearest super
@@ -133,11 +127,8 @@ IVF_NPROBE = 4  #: base cells probed by the IVF search (the standard recall knob
 #: can attach to a neighboring super's child), which is mirrored
 #: EXACTLY by the oracle: same integer-only derivation family as
 #: ivf_mod / lsh_dedup_planes, so both engines build the identical
-#: hierarchy. Every graded tier (and sf0.1 / gen_sf1 / gen_sf3: C <=
-#: 60) stays below the gate, so f = 1 there and results remain
-#: bit-identical to the historical exact argmin (the flat fold was
-#: verified value-equal to the old min(struct) aggregate at sf0.01 and
-#: sf0.1 before landing).
+#: hierarchy. Every graded tier (C <= 60 up to gen_sf3) stays below
+#: the gate, so f = 1 there and the assignment is the exact argmin.
 IVF_HIER_MIN_CELLS = 64
 _IVF_MAX_SUPER_FACTOR = 1024  #: f caps at 1024 => fine up to ~10^6 cells
 
@@ -163,11 +154,10 @@ def ivf_super_factor(n_cells: int) -> int:
 
 def ivf_nprobe(n_cells: int) -> int:
     """Scale-aware nprobe: hold the probed fraction ~constant (>= 1/5
-    of the cells, floored at IVF_NPROBE) instead of a fixed cell count.
-    Round-8 measurement: fixed nprobe=16 recall diluted 0.958 -> 0.732
-    as cells grew 20 -> 200 (ANN_RECALL_gen_sf10.json); a constant
-    fraction holds the recall anchor flat while probed work stays
-    ~N/5 — the same linear-in-N cost as every other knob here."""
+    of the cells, floored at IVF_NPROBE) instead of a fixed cell count:
+    a fixed nprobe dilutes recall as the cell count grows
+    (ANN_RECALL_*.json), while a constant fraction holds it flat and
+    keeps the probed work ~N/5 — linear in N."""
     return max(IVF_NPROBE, (n_cells + 4) // 5)
 
 
@@ -287,30 +277,17 @@ def lsh_buckets(
     Map-side only (same pattern as dedup_simhash): one Arrow-batched
     numpy pass (``_lsh_bucket_batches``) computes every plane dot
     product and assembles the bucket bits — zero shuffles; only
-    (vec_id, embedding) crosses the Python boundary. The round-1
-    shape (posexplode x 64 dims -> broadcast-join planes ->
-    groupBy(vec_id,i) -> groupBy(vec_id)) multiplied rows by N_DIMS
-    and shuffled twice for what is per-row arithmetic; the round-5
-    Catalyst zip_with+aggregate fold kept it in codegen but paid 512
-    lambda evaluations per row (retired round 15, PERF note below).
+    (vec_id, embedding) crosses the Python boundary.
 
     Dot products are quantized with the portable half-up floor
     (floor(dp * 1e6 + 0.5)) before the sign test, mirroring the SQL
     oracle, so summation-order FP noise cannot flip a bit and the
-    quantize step itself cannot diverge across engines.
-
-    PERF (round 15): the Catalyst single-fold form (zip_with over dims
-    x transform over planes) evaluated N_DIMS x n_planes = 512 lambdas
-    and allocated an 8-double array per DIMENSION per row — the dense
-    fixed-shape FP kernel class (guide §4.2; the PQ-encode precedent).
-    Now an Arrow-batched numpy pass (``_lsh_bucket_batches``): one
-    dimension-ASCENDING loop of elementwise multiply-adds — the same
-    left-to-right association as the fold, so every dot product is
-    bit-identical (IEEE * is commutative bitwise, + association
-    preserved) — then the same floor sign test. Bucket assembly is a
-    sum of distinct powers of two in int64 (exact in any order).
-    Verified exceptAll-equal at gen_sf10 for all three consumers;
-    contract pinned in tests/test_lsh_bucket_kernel_contract.py.
+    quantize step itself cannot diverge across engines. The kernel is
+    one dimension-ASCENDING loop of elementwise multiply-adds — the
+    oracle's left-to-right association, so every dot product is
+    bit-identical — then the floor sign test; bucket assembly is a sum
+    of distinct powers of two in int64 (exact in any order). Contract
+    pinned in tests/test_lsh_bucket_kernel_contract.py.
     """
     planes = _plane_weights(n_planes)
     schema = "vec_id long, bucket long" + (", v array<double>" if keep_vector else "")
@@ -402,7 +379,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     buckets = lsh_buckets(spark, emb)
     # The query bucket comes from a SINGLE-ROW kernel pass over the
-    # pre-filtered scan (round 15): the bucket function is per-row, so
+    # pre-filtered scan: the bucket function is per-row, so
     # filtering before lsh_buckets is value-identical, and the vec_id
     # predicate reaches the parquet scan — with the filter ABOVE the
     # opaque mapInPandas the qb branch would re-run the kernel over
@@ -469,35 +446,24 @@ EMB_NEARDUP_TAU = 0.4
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs near-dup within scale-aware LSH buckets.
 
-    P = 8 at every graded tier (bit-identical to the historical fixed
-    key); the 10x/30x/100x gen tiers step to P = 10/11/13, holding
+    P = 8 at every graded tier; the 10x/30x/100x gen tiers step to
+    P = 10/11/13, holding
     per-bucket occupancy ~constant. More planes also RAISE per-pair
     precision (more agreeing hyperplanes), so the recall trade moves
     toward precision as the corpus grows — the standard LSH knob,
     documented in CATALOG.md; run multiple plane families to recover
     recall at high P, exactly as with the MinHash band trade.
 
-    Scale posture (round-15 re-plan): the previous form exploded
-    (vec_a, vec_b) pairs and re-joined the full double vectors TWICE
-    (pairs -> va -> vb) — at the 100x tier that dataflow wrote 1.7 GB
-    of shuffle for a 1.6 MB input, the catalog's largest, because
-    every candidate pair shipped two 512-byte vectors through two
-    exchanges. Now the vector rides its bucket row into ONE exchange
+    Scale posture: the vector rides its bucket row into ONE exchange
     (the bucket groupBy — each vector crosses the wire exactly once,
     ~N x 520 B) and the in-bucket pairwise cosines run in a numpy
-    mapInPandas kernel over the collected members (occupancy-bounded,
-    same per-group state as the old collect_list of ids + two hash
-    probes per pair). Bit-parity with the Catalyst ``cosine()`` fold
-    is by construction — dim-ascending accumulation loops mirror the
+    mapInPandas kernel over the collected members (occupancy-bounded),
+    instead of exploding (vec_a, vec_b) pairs and re-joining the full
+    vectors twice. Bit-parity with the Catalyst ``cosine()`` fold is by
+    construction — dim-ascending accumulation loops mirror the
     left-to-right ``F.aggregate``, ``floor(x * 1e6 + 0.5) / 1e6``
     mirrors ``round_half_up`` — and is pinned exactly in
-    tests/test_lsh_pair_kernel_contract.py plus an old-vs-new
-    equality sweep at gen_sf10 before shipping (exceptAll = 0 both
-    directions over all 174,238 pairs). Measured at gen_sf10:
-    interleaved warm min 7.86 -> 4.17 s (4/4 reps faster); the old
-    dataflow's 1705 MB audit shuffle collapses to the one bucket
-    exchange (~N x 520 B ≈ 110 MB — each vector crosses the wire
-    once).
+    tests/test_lsh_pair_kernel_contract.py.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     n_planes = lsh_dedup_planes(table_rows(spark, sf_dir, "embeddings"))
@@ -586,7 +552,7 @@ _CENTROIDS_SQL = f"SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE
 
 #: Unified hierarchical assignment chain (exports CTEs ``centroids``
 #: and ``assign``). With f = 1 (every tier up to 30x) the chain
-#: DEGENERATES to the historical exact argmin: every centroid is a
+#: DEGENERATES to the exact argmin: every centroid is a
 #: super, each attaches to itself (ties on duplicate vectors break to
 #: the lower id on BOTH levels, so a tied vector still reaches the
 #: globally-lowest-id nearest centroid), and the vector->super argmin
@@ -635,9 +601,9 @@ _ASSIGN_SQL = f"""
 """
 
 
-def _ivf_l2sq_np(X, C, ndigits: int = 6):
-    """(n, k) rounded squared-L2 distance matrix — the numpy mirror of
-    the SQL oracle's left-associated per-dimension fold.
+def _ivf_l2sq_np(X, C):
+    """(n, k) squared-L2 distance matrix rounded to ``NDIGITS`` — the
+    numpy mirror of the SQL oracle's left-associated per-dimension fold.
 
     Order parity is explicit, exactly as in :func:`_pq_subspace_scan`:
     the accumulation is a Python loop of numpy adds over dimensions in
@@ -647,9 +613,9 @@ def _ivf_l2sq_np(X, C, ndigits: int = 6):
     and float32 -> float64 input widening is value-exact. Rounding is
     the portable floor form (``floor(x * 1e6 + 0.5) / 1e6`` ==
     functions/rounding.round_half_up — distances are non-negative), to
-    which the oracle's l2sq_sql is bit-identical by construction;
-    the legacy ``F.round``/DuckDB-``round`` pair this replaces agreed
-    only empirically on boundary values (CLAUDE.md)."""
+    which the oracle's l2sq_sql is bit-identical by construction
+    (``F.round`` and DuckDB's ``round`` can disagree on boundary values,
+    CLAUDE.md)."""
     import numpy as np
 
     d = None
@@ -657,7 +623,7 @@ def _ivf_l2sq_np(X, C, ndigits: int = 6):
         t = X[:, i:i + 1] - C[None, :, i]
         t = t * t
         d = t if d is None else d + t
-    s = float(10 ** ndigits)
+    s = float(10 ** NDIGITS)
     return np.floor(d * s + 0.5) / s
 
 
@@ -675,17 +641,13 @@ def _ivf_assign_batches(C_ids, C, S_ids, S, child_sid, keep_vec: bool):
     +inf — then argmin over the union of both supers' children. The
     union is evaluated by GROUPING the batch's rows on their
     (unordered) probed-super pair and slicing the centroid matrix to
-    that pair's child columns (ADVICE r12: the previous dense
-    rows x C matrix with non-children masked to +inf did O(N*C) =
-    O(N^1.5) distance work and allocated rows*C*8B per batch — the
-    exact asymptotics the hierarchy exists to avoid; the sliced form
-    does the claimed O(N^1.25) and allocates rows_g * ~2*sqrt(C)).
-    Bit-parity with the masked-dense form is by construction: the
+    that pair's child columns, so the distance work is O(N^1.25) and
+    a batch allocates rows_g * ~2*sqrt(C), not a dense rows x C matrix.
+    Bit-parity with a dense masked argmin is by construction: the
     per-dimension fold never depends on which columns are present,
     column slices are taken in ascending-cid order (np.union1d of the
-    per-super child lists), so first-min stays lowest-cid-among-ties
-    — and was additionally verified exactly equal on every gen_sf10
-    vector before shipping. When only one super exists the masked
+    per-super child lists), so first-min stays lowest-cid-among-ties.
+    When only one super exists the masked
     second argmin re-selects it — the child union is unchanged.
     A row with no finite candidate (childless pair) yields
     (cid=-1, dist=inf), the fold's init pair; the childless-super
@@ -767,21 +729,9 @@ def assign_to_cells(
     recover the neighbor-super child a single probe misses — the IMI
     standard). Per-vector distance work is the ~2*sqrt(C) two-super
     child union itself (rows grouped by probed pair, centroid matrix
-    sliced to the pair's children — ADVICE r12 closed the gap where
-    the kernel computed the dense rows x C matrix and masked, i.e.
-    O(N^1.5) work under an O(N^1.25) claim; grouped slicing measured
-    5.4x less kernel time at gen_sf10, outputs bit-identical on all
-    200k vectors), mirrored exactly by the oracle.
-
-    History: through round 12 this was a Catalyst higher-order fold
-    (struct-least aggregates over broadcast codebook arrays — see
-    _pq_subspace_scan for the identical PQ story). The fold paid
-    per-element lambda overhead on a dense fixed-shape FP argmin:
-    swapping to Arrow/numpy with the identical left-associated
-    arithmetic took kmeans_iterate 4.6 -> ~1 s at the 100x tier,
-    outputs verified exactly equal at every tier (flat and two-level)
-    before shipping. Rounding migrated F.round -> round_half_up on
-    both engines in the same change (the portable form; CLAUDE.md).
+    sliced to the pair's children), mirrored exactly by the oracle.
+    The kernel runs the oracle's left-associated arithmetic with
+    round_half_up rounding on both engines (CLAUDE.md).
 
     ``keep_vec`` carries the input vector through as column ``v`` (for
     callers like the Lloyd mean that need (cid, v) without re-joining
@@ -793,7 +743,7 @@ def assign_to_cells(
     if not rows:
         # not an assert: production path, and asserts vanish under -O —
         # an empty codebook would otherwise surface as an opaque numpy
-        # shape error downstream (ADVICE r12)
+        # shape error downstream
         raise ValueError("empty centroid codebook")
     C_ids = np.array([r["cid"] for r in rows], dtype=np.int64)
     C = np.array([r["cvec"] for r in rows], dtype=np.float64)
@@ -824,9 +774,8 @@ def ivf_assignments(
 ) -> DataFrame:
     """(vec_id, cid, dist): nearest deterministic centroid per vector.
 
-    Flat exact argmin below IVF_HIER_MIN_CELLS cells (bit-identical to
-    the historical min(struct) form — verified value-equal at sf0.01 /
-    sf0.1 before landing), two-level hierarchical above it (see the
+    Flat exact argmin below IVF_HIER_MIN_CELLS cells, two-level
+    hierarchical above it (see the
     sizing comment at ivf_super_factor: O(N^1.25) instead of the exact
     O(N^1.5); the oracle mirrors the hierarchy exactly). Zero shuffle
     on the vector side either way — assignment is a pure map against
@@ -915,6 +864,11 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook (n_cells x n_dims doubles) crosses the driver boundary.
     A cell that loses every member drops out of the codebook. Output is
     (cid, d, c_val, n_members) for the final round.
+
+    Building the DataFrame runs Spark jobs: the driver loop collects
+    every round's per-cell means to seed the next round, and the
+    returned plan recomputes the last round against the codebook
+    collected before it.
     """
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("v")
@@ -925,8 +879,9 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") % mod == 0)
         .select(F.col("vec_id").alias("cid"), F.col("v").alias("cvec"))
     )
-    # cid 0 is always a centroid initially, so a super exists in round 1;
-    # later rounds re-check against the surviving codebook ids.
+    # cid 0 is always a centroid initially, so a super exists in the
+    # first iteration; later ones re-check against the surviving
+    # codebook ids.
     cids = list(range(0, n, mod))
     spark_sess = emb.sparkSession
     last = None
@@ -935,8 +890,8 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hierarchical only if the super slice of the SURVIVING codebook
         # is non-empty (cells can drop out between rounds).
         step = mod * f if f > 1 and any(c % (mod * f) == 0 for c in cids) else None
-        # keep_vec fold assignment: zero shuffle on the vector side per
-        # round (the round-6 min(struct) form shuffled ~N combined rows).
+        # keep_vec assignment: zero shuffle on the vector side per
+        # iteration.
         assigned = assign_to_cells(emb, cents, step, keep_vec=True)
         comp = assigned.select("cid", F.posexplode("v").alias("d", "x"))
         stats = comp.groupBy("cid", F.col("d").cast("long").alias("d")).agg(
@@ -984,9 +939,8 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         LIMIT {TOPK}
     """,
     doc=f"ANN top-{TOPK} probing the query's nprobe nearest IVF cells with "
-    "exact cosine inside them. nprobe is SCALE-AWARE (round 9): a fixed "
-    "cell count dilutes recall as the sqrt(N) codebook grows (measured "
-    "0.958 -> 0.732 for nprobe=16 as cells grew 20 -> 200), so ivf_nprobe "
+    "exact cosine inside them. nprobe is SCALE-AWARE: a fixed "
+    "cell count dilutes recall as the sqrt(N) codebook grows, so ivf_nprobe "
     f"holds the probed fraction at >= 1/5 of the cells (floored at {IVF_NPROBE}; "
     "same integer-only derivation on both engines).",
 )
@@ -997,7 +951,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, and run exact cosine only inside them. At 100 TB the probed
     fraction is nprobe/n_cells of the corpus — held ~constant by the
     scale-aware derivation, so recall doesn't dilute as the codebook
-    grows (the round-8 recall-vs-tier measurement, ANN_RECALL_*.json)."""
+    grows (ANN_RECALL_*.json)."""
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_rows(spark, sf_dir, "embeddings")  # one memoized count
     mod = ivf_mod(n)
@@ -1159,12 +1113,11 @@ def embedding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("nsq") == 0.0, 1).otherwise(0)).cast("long").alias("n_zero_vecs"),
         round_half_up(F.min("nsq"), 6).alias("min_normsq"),
         round_half_up(F.max("nsq"), 6).alias("max_normsq"),
-        # Integer-exact cross-row mean (the text_stats avg_alpha pattern,
-        # ADVICE r14): quantize nsq per row to a 1e-6 grid, sum the
+        # Integer-exact cross-row mean (the text_stats avg_alpha
+        # pattern): quantize nsq per row to a 1e-6 grid, sum the
         # BIGINTs (order-independent, exact), divide once. A plain
         # avg(double) sums in engine/partition order and can differ by
-        # ulps across engines — the aggregate-rounding class that
-        # hash-failed at the 10x tier in round 6. Headroom: nsq*1e6 is
+        # ulps across engines (CLAUDE.md). Headroom: nsq*1e6 is
         # ~1e8 per row, so int64 holds to ~1e10 rows per label.
         round_half_up(
             F.sum(F.floor(F.col("nsq") * F.lit(1000000.0) + F.lit(0.5)).cast("long"))
@@ -1305,17 +1258,12 @@ def _pq_codebook_np(anchors: list):
 
 def _pq_batch_matrix(pdf):
     """The Arrow batch's embedding column as an (n, dims) float64
-    matrix — vectorized, bit-identical to the per-row
-    ``np.asarray(e, dtype=float64)`` loop it replaced (round-12:
-    Arrow hands each list element over as a float32 ndarray, and
-    float32 -> float64 widening is value-exact, so stacking first and
-    widening once yields the same doubles; verified BIT-identical on
-    all 200k gen_sf10 vectors inside real mapInPandas workers,
-    uint64-view compare, before shipping). Measured honestly: the
-    ingest step alone is ~1.4x faster (0.95 -> 0.67 s per 200k rows) —
-    a minor win, the subspace argmin kernel dominates worker CPU; the
-    swap's real point is removing the last per-row Python loop from
-    the batch path. Callers guard empty
+    matrix — vectorized, bit-identical to a per-row
+    ``np.asarray(e, dtype=float64)`` loop: Arrow hands each list
+    element over as a float32 ndarray, and float32 -> float64 widening
+    is value-exact, so stacking first and widening once yields the
+    same doubles. The subspace argmin kernel, not this ingest,
+    dominates worker CPU. Callers guard empty
     batches before calling (np.vstack rejects an empty sequence, and
     an empty object array would otherwise build a 1-D (0,) array that
     breaks the subspace slice downstream)."""
@@ -1335,17 +1283,7 @@ def _pq_subspace_scan(X, C, m: int):
     ulp-tied argmins. ``argmin`` returns the FIRST minimum = the
     lowest code, matching the oracle's ``min(k)`` over equal-minimum
     rows. Elementwise ``(x - a) * (x - a)`` is the same two IEEE ops
-    both engines run.
-
-    History: through round 10 this was a Catalyst higher-order fold
-    (``transform``/``aggregate``/``zip_with`` over a literal codebook
-    — an unrolled 2048-term scalar chain had blown the 64 KB JVM
-    method limit first). The fold kept whole-stage codegen but
-    evaluates array lambdas element-at-a-time with per-element
-    overhead; the Arrow/numpy swap runs the identical arithmetic as C
-    loops — measured 8.65 -> 0.51 s (encode) and 9.16 -> 0.70 s (ADC
-    scan) at the 100x tier, results bit-identical on all 200k
-    vectors."""
+    both engines run."""
     import numpy as np
 
     Xs = X[:, m * PQ_SUBDIM:(m + 1) * PQ_SUBDIM]
@@ -1377,10 +1315,8 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the Lloyd/IVF codebooks above — and ships in the mapInPandas
     closure, so encoding is a pure map: per Arrow batch, per subspace,
     a vectorized 16-way argmin of 8-term squared distances
-    (_pq_subspace_scan — round-11 swap from a Catalyst array fold,
-    8.65 -> 0.51 s at the 100x tier, bit-identical: the per-element
-    fold overhead of higher-order functions was ~17x the arithmetic).
-    No join, no shuffle; at 100 TB every task encodes its partition
+    (_pq_subspace_scan, C loops instead of per-element Catalyst array
+    lambdas). No join, no shuffle; at 100 TB every task encodes its partition
     against the closure-constant codebook, and the Python workers are
     Arrow-batched, never row-at-a-time. The DuckDB oracle evaluates
     the same left-associated IEEE expression chain via a cross join
@@ -1532,9 +1468,8 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME left-associated IEEE term order as the SQL oracle (Python
     floats are IEEE doubles, so the grids are bit-identical) and ships
     in the mapInPandas closure with the codebook; each Arrow batch
-    encodes (_pq_subspace_scan — the round-11 numpy swap, 9.16 ->
-    0.70 s at the 100x tier on identical results; see
-    embedding_pq_encode) and sums its 8 grid lookups left-associated,
+    encodes (_pq_subspace_scan; see embedding_pq_encode) and sums its
+    8 grid lookups left-associated,
     carrying the embedding column THROUGH the Python worker untouched
     so the corpus is scanned exactly once. A TakeOrdered keeps the
     best PQ_SHORTLIST rows. Stage 2 (exact, shortlist only): those

@@ -469,21 +469,14 @@ def doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicated) is the set-fingerprint form used for containment
     checks; positional variants add the offset column.
 
-    PERF (round 15): the window fold was a Catalyst
-    ``transform(sequence(...), i -> array_min(slice(hs, i, W)))`` —
-    per k-gram, a fresh W-element array allocation plus W+2 lambda
-    evaluations, then ``array_distinct`` re-walks the result. Subtree
-    attribution at gen_sf10 (warm, min-of-3, noop sink): scan+shingles
-    +md5 2.40 s, full Catalyst query 6.53 s — the fold+distinct alone
-    was ~4.1 s, the dense fixed-shape integer kernel class (guide
-    §4.2; the PQ-encode precedent). Now an Arrow-batched numpy pass
-    (``_winnow_batches``: sliding_window_view min + np.unique per doc)
-    replaces fold+distinct+explode; md5 stays in the JVM so only
-    (doc_id, array<long>) crosses the boundary. Bit-parity: integers
-    end to end; np.unique emits the same VALUE SET as array_distinct
-    (order differs — both the driver hash and the oracle harness are
-    order-insensitive); verified exceptAll-equal both ways at gen_sf10
-    before shipping; contract pinned in
+    The window minima come from an Arrow-batched numpy pass
+    (``_winnow_batches``: sliding_window_view min + np.unique per doc),
+    not a Catalyst ``transform(sequence(...), i -> array_min(slice(hs,
+    i, W)))`` fold that allocates a W-element array per k-gram; md5
+    stays in the JVM so only (doc_id, array<long>) crosses the
+    boundary. Bit-parity: integers end to end; np.unique emits the
+    same VALUE SET as array_distinct (order differs — both the driver
+    hash and the oracle harness are order-insensitive); contract pinned in
     tests/test_winnow_kernel_contract.py. Still zero shuffle
     (plan-locked in test_plans.py).
     """

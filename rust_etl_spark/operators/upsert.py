@@ -100,6 +100,9 @@ def upsert_parquet(
 BUCKET_COL = "__bucket"
 _ASIDE_PREFIX = ".aside_"  # dot-prefixed: invisible to parquet discovery
 _NBUCKETS_MARKER = "_n_buckets"
+#: Key-buckets of a table :func:`upsert_parquet_bucketed` creates; an
+#: existing table must have been bucketed the same way.
+N_BUCKETS = 64
 
 
 def _bucket_expr(keys: list[str], n_buckets: int):
@@ -126,13 +129,12 @@ def upsert_parquet_bucketed(
     target_path: str,
     updates: DataFrame,
     keys: list[str],
-    n_buckets: int = 64,
 ) -> None:
     """MERGE emulation that rewrites only the key-buckets the updates
     touch — the scale path for upserts into large tables.
 
     The table is laid out hash-partitioned on ``__bucket =
-    pmod(xxhash64(keys), n_buckets)`` (directory per bucket), so an
+    pmod(xxhash64(keys), N_BUCKETS)`` (directory per bucket), so an
     upsert costs O(touched buckets), not O(table): at 100 TB a batch
     touching 3 of 4096 buckets reads and rewrites ~0.07% of the table,
     and the read of current bucket contents is partition-pruned by
@@ -151,21 +153,21 @@ def upsert_parquet_bucketed(
     if not keys:
         raise ValueError("keys must be non-empty")
     tmp_path = target_path.rstrip("/") + "._upsert_tmp"
-    up = updates.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+    up = updates.withColumn(BUCKET_COL, _bucket_expr(keys, N_BUCKETS))
     marker = os.path.join(target_path, _NBUCKETS_MARKER)
     if not os.path.exists(target_path):
         up.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(target_path)
         with open(marker, "w") as fh:
-            fh.write(str(n_buckets))
+            fh.write(str(N_BUCKETS))
         return
     with open(marker) as fh:
         stored = int(fh.read().strip())
-    if stored != n_buckets:
+    if stored != N_BUCKETS:
         raise ValueError(
-            f"table at {target_path} is bucketed {stored}-way, got n_buckets={n_buckets}"
+            f"table at {target_path} is bucketed {stored}-way, not N_BUCKETS={N_BUCKETS}"
         )
     _restore_bucket_asides(target_path)
-    # Bounded driver transfer: at most n_buckets small ints.
+    # Bounded driver transfer: at most N_BUCKETS small ints.
     touched = sorted(
         r[BUCKET_COL] for r in up.select(BUCKET_COL).distinct().collect()
     )

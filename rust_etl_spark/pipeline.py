@@ -119,11 +119,7 @@ def run_pipeline(
         res.seconds = time.perf_counter() - t0
         return res
 
-    work = list(_endpoints(config))
-    if max_workers <= 1:
-        report.results = [one(w) for w in work]
-    else:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            report.results = list(pool.map(one, work))
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        report.results = list(pool.map(one, _endpoints(config)))
     report.total_seconds = time.perf_counter() - t_start  # main.rs:111-115
     return report

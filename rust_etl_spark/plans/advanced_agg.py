@@ -70,10 +70,9 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
        a row exactly W below is INSIDE the frame). The frame aggregate
        is a function of p alone and distinct prices are cent-quantized
        over a bounded domain (1% of rows at the 100x tier), so the
-       endpoint explode + window + groupBy all run at DISTINCT scale
-       (round-12 re-plan: the round-2 form ran them per ORDER row —
-       2N rows through the window and a 2N-row groupBy over an N-key
-       domain, profiled as the two dominant stages);
+       endpoint explode + window + groupBy all run at DISTINCT scale,
+       not per ORDER row (2N rows through the window and a 2N-row
+       groupBy over an N-key domain);
     4. order rows resolve by one equi-join on the exact price double
        (bit-identical keys: the distinct values come from the same
        column through groupBy), against a domain-bounded aggregate
@@ -91,8 +90,8 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     bkt = lambda v: F.floor(v / w).cast("long")  # noqa: E731
 
     # 1. distinct values with in-bucket prefix count/sum.
-    # the summed metric is exact integer cents (functions/money.py,
-    # round-13 class migration): the decomposed prefix sums reassociate
+    # the summed metric is exact integer cents (functions/money.py):
+    # the decomposed prefix sums reassociate
     # the reduction vs the oracle's sequential window accumulation,
     # which is exactly where a double sum's low bits diverge
     g = (
@@ -120,16 +119,13 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # 3. endpoint lookups — PER DISTINCT PRICE, not per order row
-    # (round-12 re-plan): the frame aggregate G(<= p) - G(< p - W) is
-    # a function of p alone, and the price domain is cent-quantized
-    # over a bounded range, so distinct prices saturate sublinearly
-    # (149,743 at the 100x tier vs 15M order rows — 1%). The round-2
-    # form exploded TWO endpoint rows per ORDER, pushing 2N rows
-    # through the bucket window and a 2N-row groupBy over an N-key
-    # domain (profiled as the two dominant stages: 8.3 s warm at
-    # 100x); evaluating the identical machinery over the distinct-
-    # price table makes both stages ~1% of their size, and order rows
+    # 3. endpoint lookups — PER DISTINCT PRICE, not per order row:
+    # the frame aggregate G(<= p) - G(< p - W) is a function of p
+    # alone, and the price domain is cent-quantized over a bounded
+    # range, so distinct prices saturate sublinearly (~1% of order
+    # rows at the 100x tier). Evaluating the machinery over the
+    # distinct-price table instead of two endpoint rows per ORDER
+    # keeps the bucket window and its groupBy ~1% of that size, and order rows
     # resolve by one equi-join on the exact price double at the end
     # (bit-identical join keys: v comes from the same column through
     # groupBy). Per anchor price an inclusive anchor at p (+1 *
@@ -174,9 +170,8 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Join-back: shuffle_hash hinted with PER_PRICE (domain-bounded,
     # 1% of rows) as the build side. Unhinted, the gate's misbroadcast
     # canary caught Catalyst broadcasting the pruned ORDERS projection
-    # — the corpus-scaling side, the exact round-11 pathology this
-    # round's re-plan was supposed to avoid (its 2-column estimate
-    # sits under the threshold at small/mid tiers). SMJ on the price
+    # — the corpus-scaling side (its 2-column estimate sits under the
+    # threshold at small/mid tiers). SMJ on the price
     # double is the spill-safe fallback.
     return o.join(per_price.hint("shuffle_hash"), o.o_totalprice == per_price.av).select(
         "o_orderkey", "o_totalprice", "n_near", "sum_near"

@@ -14,6 +14,8 @@ name, so:
 
 from __future__ import annotations
 
+import hashlib
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -47,75 +49,46 @@ GRADE_WINDOW = 50
 GRADE_ORDER: tuple[str, ...] = (
     # §2c dedup family (dedup_embedding_cosine — the block-bounded
     # brute-force correctness baseline — ships pytest-only; its scale
-    # path dedup_embedding_lsh holds the graded slot)
+    # path dedup_embedding_lsh holds the graded slot), incremental dedup
+    # against the stored corpus index, C4-style segment dedup,
+    # containment dedup (doc-inside-doc, the overlap mode symmetric
+    # Jaccard misses) and the CCNet-style perplexity filter
     "dedup_exact", "dedup_exact_hash", "dedup_minhash_lsh", "dedup_minhash_groups",
     "dedup_ngram_jaccard", "dedup_simhash", "dedup_clusters",
-    # round 5: the two ops a real nightly 100 TB curation run exercises —
-    # incremental dedup against the stored corpus index and C4-style
-    # segment dedup (dedup_segments) — promoted over two generic relational slots
-    # (groupby_having, join_outer_full; both families stay past-window).
     "dedup_against_corpus", "dedup_segments",
-    # round 5: containment dedup (doc-inside-doc, the overlap mode
-    # symmetric Jaccard misses) and the CCNet-style perplexity filter —
-    # promoted over join_semi_anti (semi/anti semantics stay in-window
-    # via decontaminate's anti-join; the op plus q4/q16/q22 cover the
-    # family past-window) and agg_distinct (distinct-agg stays
-    # past-window via agg_distinct/q16/corpus_stats, all locally
-    # driver-strict checked every run).
     "dedup_containment", "lm_quality_score",
-    # §2c similarity search family (round 5: similarity_ann_pq — the
-    # IVF-PQ compressed-search tier — takes ivf_assign's slot;
-    # IVF assignment stays graded transitively through
-    # similarity_ann_ivf, which probes the same assignment, and
-    # ivf_assign itself remains past-window driver-strict checked)
+    # §2c similarity search family (IVF assignment is graded through
+    # similarity_ann_ivf, which probes the same assignment)
     "similarity_topk", "lsh_bucket_assign", "similarity_ann_lsh",
     "dedup_embedding_lsh", "similarity_ann_pq", "similarity_ann_ivf",
-    # §2c text analysis family (+ winnowing local fingerprints, round 4;
-    # round 5 adds the composed C4-style cleaning cascade — the
-    # keep/drop-with-reason-codes pipeline a real curation run ships)
+    # §2c text analysis family, winnowing fingerprints and the composed
+    # C4-style cleaning cascade (keep/drop with reason codes)
     "text_stats", "token_count", "lang_id", "quality_score", "doc_fingerprint",
     "doc_winnow", "corpus_clean_pipeline",
-    # §2c multimodal (frame_sample holds the second graded slot — full
-    # oracle — while the rows-only Arrow feature extractor stays
-    # pytest-bounded past the window). grouped_normalize moved
-    # past-window in round 5 (Arrow grouped-map stays represented
-    # in-window by multimodal_frame_sample, which is applyInPandas too).
+    # §2c multimodal (frame_sample, an applyInPandas grouped map, holds
+    # the second graded slot; the rows-only Arrow feature extractor is
+    # bounded in pytest)
     "multimodal_meta", "multimodal_frame_sample",
     # §2a reference-parity ETL operators
     "explode_array", "struct_unnest", "decode_codepoints", "drop_technical",
     # event-time / streaming-batch surface
     "events_window_agg", "events_sessionize", "events_session_window",
     "events_asof_join", "events_range_join",
-    # corpus-assembly family (round 4): the steps that turn a cleaned
-    # corpus into a training mix — first-class alongside dedup/similarity.
-    # decontaminate (benchmark n-gram-overlap scrub) joined late round 4,
-    # displacing rollup_agg (grouping-sets semantics stay past-window via
-    # cube_agg / grouping_sets_id under the local-strict harness).
+    # corpus assembly: the steps that turn a cleaned corpus into a
+    # training mix, and benchmark n-gram-overlap decontamination
     "sample_stratified", "dataset_mix", "shuffle_deterministic",
     "decontaminate",
-    # event-time analytics: ordered funnel joined late round 4 (displaced
-    # window_running; running totals remain covered by window_range_frame
-    # in-window and window_running past-window)
+    # event-time analytics: ordered funnel
     "events_funnel",
-    # core relational algebra (window_rank moved past-window round 5:
-    # ranking stays represented in-window by window_range_frame and
-    # sort_topk; the freed slot grades zorder_order — the physical-
-    # layout lever (multi-dim clustering for parquet stats pruning)
-    # that a 100 TB deployment tunes before any single query)
+    # core relational algebra, plus zorder_order — the physical-layout
+    # lever (multi-dim clustering for parquet stats pruning)
     "scan_project", "filter_predicate", "groupby_agg",
     "join_star", "sort_topk", "zorder_order",
-    # TPC-H query shapes (q1 joined late round 4, displacing
-    # agg_filter_sum — the FILTER-clause variant stays past-window;
-    # q1 is the canonical wide-aggregate anchor)
+    # TPC-H query shapes (q1 is the canonical wide-aggregate anchor)
     "q1_pricing_summary", "q3_shipping_priority", "q10_returned_items",
     # advanced-agg representative
     "window_range_frame",
 )
-# Displaced to past-window in round 4 (still driver-strict locally
-# checked every run): set_ops, pivot_agg, math_funcs, percentile_stats —
-# generic relational representatives whose families stay covered by the
-# remaining window slots; the freed slots grade the corpus-assembly ops
-# and winnowing fingerprints the 100 TB training-pipeline story leads with.
 
 
 def register(name: str, oracle: str | None = None, doc: str = ""):
@@ -156,6 +129,30 @@ def oracle_sql() -> dict[str, str]:
 def get(name: str) -> Query:
     _ensure_loaded()
     return _REGISTRY[name]
+
+
+_PLAN_IDS = re.compile(r"#\d+|plan_id=\d+")
+_PATHS = re.compile(r"(?<!\w)(?:file:)?(?:/[\w.\-=]+){2,}")
+_LAMBDA_VARS = re.compile(r"\b[xyz]_\d+\b")
+
+
+def fingerprint(df: DataFrame) -> str:
+    """Hash of ``df``'s optimized logical plan with its per-session
+    names erased: expression ids (``#N``), ``plan_id=N``, absolute
+    paths (the tier directory a scan reads) and PySpark's global lambda
+    variable names (``x_N``, ``y_N``, ``z_N``, renamed ``x_0``,
+    ``x_1``, ... in order of first appearance). Builds of one query
+    hash alike across sessions and ``SPARK_GRAFT_CPUS`` values, except
+    where Catalyst orders hash-keyed groups by expression id (the
+    distinct groups of a multi-distinct aggregate), which gives such a
+    query one hash per ordering; a changed hint, filter or join moves
+    the hash. A cached DataFrame with the same plan replaces it with an
+    ``InMemoryRelation``, so fingerprint in a session without one."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = _PATHS.sub("<path>", _PLAN_IDS.sub("#", plan))
+    names: dict[str, str] = {}
+    plan = _LAMBDA_VARS.sub(lambda m: names.setdefault(m.group(0), f"x_{len(names)}"), plan)
+    return hashlib.sha256(plan.encode()).hexdigest()[:16]
 
 
 _LOADED = False

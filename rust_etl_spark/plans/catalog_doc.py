@@ -44,9 +44,9 @@ def render() -> str:
 
 def _tier_recall_section() -> list[str]:
     """Recall at the big tiers, rendered from ANN_RECALL_<tier>.json
-    (scripts/ann_recall_tier.py — VERDICT r6 #3: the sqrt(N) IVF
-    codebook decade-jumps MOD with corpus size, so recall where the
-    cell size actually changes is measured, not asserted)."""
+    (scripts/ann_recall_tier.py: the sqrt(N) IVF codebook decade-jumps
+    MOD with corpus size, so recall where the cell size actually
+    changes is measured, not asserted)."""
     import json
 
     root = os.path.dirname(
@@ -78,25 +78,22 @@ def _tier_recall_section() -> list[str]:
         "scanned fraction rose from ~14x to >200x random for PQ). On a "
         "worst-case isotropic corpus of the same size the fixed "
         "shortlist would instead dilute; scale the shortlist/nprobe "
-        "with N to hold recall there (the documented knob). Round 8 "
-        "measured exactly that dilution arriving for a FIXED nprobe "
-        "(recall@16 eased 0.97 -> 0.84 -> 0.73 as cells grew 20 -> 60 "
-        "-> 200); round 9 turned the knob into code: `ivf_nprobe` "
+        "with N to hold recall there (the documented knob). A FIXED "
+        "nprobe dilutes as the cell count grows, so `ivf_nprobe` "
         "scales the shipped nprobe with the cell count (probed "
         "fraction held at >= 1/5, floored at 4 — the np* column), and "
         "assignment goes two-level hierarchical at >= 64 cells "
-        "(`ivf_super_factor`; only gen_sf10 here), probing the TOP-2 "
+        "(`ivf_super_factor`; only the largest tier here), probing the TOP-2 "
         "super-cells per vector so near-boundary assignments recover "
         "(the IMI multi-probe standard). At the shipped default, "
         "recall now holds **flat-or-better** across the tiers at a "
-        "~constant 20% scanned fraction, instead of diluting. The "
-        "gen_sf10 fixed-nprobe points sit lower than round 8's (e.g. "
-        "recall@16 0.73 exact-assignment -> 0.53 single-probe -> 0.56 "
-        "top-2): the hierarchical assignment stays approximate at cell "
-        "boundaries — the O(N^1.25)-assignment trade, more than "
-        "recovered by the scaled default (0.83 at nprobe 40). All "
-        "numbers below are re-measured with the top-2 hierarchy "
-        "active (shipped code).",
+        "~constant 20% scanned fraction, instead of diluting. At the "
+        "largest tier the fixed-nprobe points sit lower than an exact "
+        "assignment would give: the hierarchical assignment stays "
+        "approximate at cell boundaries — the O(N^1.25)-assignment "
+        "trade, recovered by the scaled default (the np* column). All "
+        "numbers below are measured with the top-2 hierarchy active "
+        "(shipped code).",
         "",
         "| tier | vectors | MOD | cells | np* | IVF recall@10 by nprobe (asc, incl. np*) | recall@np* | PQ rerank recall@10 by shortlist 10/50/100/200/500 |",
         "|---|---|---|---|---|---|---|---|",
@@ -131,7 +128,7 @@ def _recall_row(r: dict) -> str:
     """One markdown table row for a tier recall record. Tolerates a
     stale / hand-trimmed record whose curve lacks its own
     nprobe_default point (renders n/a rather than TypeError-ing the
-    whole CATALOG.md render — ADVICE round 9)."""
+    whole CATALOG.md render)."""
     ivf = r["ivf_recall_by_nprobe"]
     pq_c = r["pq_rerank_recall_by_shortlist"]
     ivf_s = " / ".join(f"{ivf[k]:.2f}" for k in sorted(ivf, key=int))

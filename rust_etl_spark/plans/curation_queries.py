@@ -146,81 +146,32 @@ _DECON_SHINGLES_SQL = f"list_distinct({word_shingles_sql(tokens_sql('text'), DEC
 )
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-training-doc count of distinct n-grams that also occur in the
-    eval split (docs with zero hits are clean and omitted).
+    eval split (docs with zero hits are clean and omitted). Extends the
+    reference's corpus-hygiene surface (no equivalent op exists there;
+    cf. SURVEY.md §2c curation family).
 
-    Scale posture: ``n_total`` (distinct shingles per doc) is the SIZE
-    of the per-row distinct-shingle array, computed in-row BEFORE the
-    explode and carried through it — documents are one row per doc_id,
-    so this equals the count the round-≤9 form computed with a
-    doc_id window over the full exploded training-shingle set (the
-    window was the query's only big shuffle: 495 MB at the 100x tier,
-    eliminated in round 10). Extends the reference's corpus-hygiene
-    surface (no equivalent op exists there; cf. SURVEY.md §2c
-    curation family).
+    Plan shape:
 
-    PERF (round 16, VERDICT r15 #3): ``n_total`` now literally RIDES
-    the train explode instead of re-deriving the whole tokenize->
-    shingle->array_distinct pipeline in a second scan branch joined
-    back on doc_id. The round-10 blocker was InferFiltersFromGenerate:
-    a plain ``explode`` over a NAMED array column gets an inferred
-    ``size(arr) > 0`` filter that PushDownPredicate substitutes
-    through the projection, re-evaluating the pipeline per row
-    (measured 9 -> 130 s then). ``explode_outer`` is the deterministic
-    barrier: no size filter is inferred for outer generate, so the
-    pipeline evaluates exactly once (plan: 1 occurrence in the train
-    arm), and the NULL row an empty array emits dies at the join's
-    inferred ``isnotnull(sh)`` filter BELOW the exchange — output
-    identical (inner join on sh never matches NULL; ev has no NULLs).
-    Removes the n_total scan branch (1.05 s of the 4.71 s 100x wall),
-    its doc_id exchange and the final shuffle_hash join-back; the cost
-    is +8 bytes/row (one UnsafeRow slot) on the train-shingle
-    exchange: 678 -> 745 MB total shuffle at gen_sf10 (+10%). The
-    trade is deliberate and measured: the removed branch is a full
-    scan+tokenize+shingle+array_distinct pass over 75% of the corpus
-    (pure CPU, the expensive part of any text pipeline), while the
-    added bytes are 8/~48 per row on one exchange — on a cluster this
-    swaps ~22% of the query's compute for ~10% more of one shuffle.
-    gen_sf10 interleaved warm A/B: 4.69 -> 3.56 s min-of-4 (faster in
-    4/4 pairs); outputs exceptAll-equal both ways at gen_sf10.
-    Bloom re-adjudication on this form (VERDICT r15 #3): the runtime
-    bloom no longer even injects — with round 14's force-confs
-    (creationSideThreshold=256MB, applicationSideScanSizeThreshold=0)
-    the executed plan contains no BloomFilterMightContain, because
-    the probe-side join key now descends from an OUTER Generate,
-    which InjectRuntimeFilter's lineage tracking does not cross; and
-    forced ON vs OFF measured par (5.50 vs 5.48 s min-of-5 in a
-    contended window). The r14 rejection stands; conf stays default.
-
-    Round-13 worst-query profile (gen_sf10, warm, min-of-3): the
-    subtree attribution was ev-distinct 2.2 s, n_total branch 1.5 s,
-    bare train explode 1.6 s — but hits (explode + eval join + agg)
-    was 8.0 s of the 9-10 s total. The wall was the eval BROADCAST:
-    5.6M distinct eval shingles (the synthetic's doc_id%4 eval split
-    scales WITH the corpus) collected, built into a string-keyed hash
-    relation and probed 18.7M times. Distributing the build
-    (shuffle_hash, eval side builds per-task) measured 10.30 ->
-    7.58 s full-query and aligns the plan with the round-11 rule:
-    never hash-build a corpus-scaling side on one node. On a real
-    deployment where the eval benchmark is genuinely bounded (MBs),
-    a broadcast — or Spark's runtime bloom filter (77% of train
-    shingle rows miss and would be pruned pre-shuffle) — is the
-    better physical choice; both are session-config levers, not plan
-    rewrites, so the shipped plan keeps the scale-safe default. The
-    bloom lever was ADJUDICATED round 14 (VERDICT r13 #6): with the
-    injection actually firing (`creationSideThreshold=256MB` +
-    `applicationSideScanSizeThreshold=0`, BloomFilterMightContain
-    verified in the executed plan), interleaved warm min-of-5 at
-    gen_sf10 measured 4.59 s ON vs 4.64 s OFF — no reproducible win
-    over the shuffle_hash plan (round 13's one-off 5.19 s reading
-    was chain-window noise; the shipped plan itself idles at
-    ~4.6-5.4 s), and globally zeroing the application-side threshold
-    would inject creation-side aggregates into EVERY shuffle join,
-    so the conf stays default. (Rejected by measurement, round 13:
-    a single-pass left-join form computing n_hit+n_total in one
-    groupBy — it drags all 18.7M train rows through BOTH the join
-    shuffle and the aggregate, 13.9 s; and pre-hashing shingles to
-    64-bit longs — xxhash64 is not oracle-portable and md5_long60's
-    per-shingle cost ate the probe savings.)
+    - ``n_total`` (distinct shingles per doc) is the SIZE of the
+      per-row distinct-shingle array, computed in-row before the
+      explode and carried through it (documents are one row per
+      doc_id), so there is no doc_id window, no second scan and no
+      join-back.
+    - The train arm explodes with ``explode_outer``: for a plain
+      ``explode`` over a NAMED array column, InferFiltersFromGenerate
+      adds ``size(arr) > 0``, which PushDownPredicate substitutes
+      through the projection, re-evaluating the tokenize->shingle->
+      array_distinct pipeline per row. No size filter is inferred for
+      an outer generate, so the pipeline runs once per arm, and the
+      NULL row an empty array emits dies at the join's inferred
+      ``isnotnull(sh)`` filter below the exchange.
+    - The eval shingles are DISTINCT-collapsed and joined as a
+      ``shuffle_hash`` build side: the eval split scales with the
+      corpus, so it is never hash-built on one node. Where the eval
+      benchmark is genuinely bounded (MBs), a broadcast or Spark's
+      runtime bloom filter is a session-config lever, not a plan
+      rewrite; the runtime bloom does not inject here, because the
+      probe key descends from an OUTER Generate.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("t"))
@@ -228,11 +179,10 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain (inner) explode triggers InferFiltersFromGenerate's
     # `size(col) > 0 AND isnotnull(col)`, which PushDownPredicate
     # substitutes through the projection — re-evaluating the whole
-    # tokens->shingles->array_distinct pipeline per row (measured
-    # 9 -> 130 s at the 100x tier, round 10). The eval arm keeps the
-    # expression INLINED (single use, nothing to share); the train
-    # arm names it but explodes with explode_outer, for which no size
-    # filter is inferred (round 16 — see docstring).
+    # tokens->shingles->array_distinct pipeline per row. The eval arm
+    # keeps the expression INLINED (single use, nothing to share); the
+    # train arm names it but explodes with explode_outer, for which no
+    # size filter is inferred (see docstring).
     shingle_arr = lambda: F.array_distinct(  # noqa: E731
         word_shingles(F.col("t"), DECON_NGRAM)
     )
@@ -241,14 +191,12 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(shingle_arr()).alias("sh"))
         .distinct()
     )
-    # n_total RIDES the train explode (round 16): the array is
-    # materialized once per row in its own projection and consumed by
-    # size() + explode_outer. The OUTER explode is load-bearing, not
-    # cosmetic — see the docstring (InferFiltersFromGenerate fires
-    # only for inner explode; its pushed size()>0 filter was the
-    # round-10 9->130 s re-evaluation). The NULL row an empty array
-    # emits is dropped by the join's inferred isnotnull(sh) below the
-    # exchange, so nothing extra crosses the shuffle.
+    # n_total RIDES the train explode: the array is materialized once
+    # per row in its own projection and consumed by size() +
+    # explode_outer. The OUTER explode is load-bearing, not cosmetic —
+    # see the docstring. The NULL row an empty array emits is dropped
+    # by the join's inferred isnotnull(sh) below the exchange, so
+    # nothing extra crosses the shuffle.
     # (A narrower int rider was probed and makes no byte difference:
     # UnsafeRow serializes every fixed-width field into an 8-byte
     # slot, so int-vs-long never changes shuffle bytes — only varlen
@@ -264,9 +212,9 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # shuffle_hash with EV as the build side (right): each task hash-
     # builds only its shard of the eval set instead of the driver
-    # building (and every probe thread sharing) one 5.6M-entry string
-    # hash relation — the measured 100x wall (see docstring). SMJ on
-    # sh is the spill-safe fallback if the hint can't be honored.
+    # building (and every probe thread sharing) one string hash
+    # relation. SMJ on sh is the spill-safe fallback if the hint can't
+    # be honored.
     return (
         tr.join(ev.hint("shuffle_hash"), "sh")
         .groupBy("doc_id", "n_total")

@@ -217,25 +217,17 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest order at-or-before each event, per user.
 
-    Round-16 re-plan (guide §2.3/§2.4): the prior union-then-window
-    form shuffled BOTH fact projections through one user_id exchange —
-    events padded to 5 columns (null event_id / is_order flag / a
-    window-ordering duplicate of t_us) plus every order row — then
-    paid a full (events + orders) window sort. Orders per user are
-    bounded (gen_sf10: max 24, avg 10), so the orders side collapses
-    to ONE array row per user (collect_list partially aggregates
+    Orders per user are bounded (tens at the generated tiers), so the
+    orders side collapses to ONE array row per user (collect_list
+    partially aggregates
     map-side) and joins the 3-column events projection; per event the
     answer is array_max(filter(arr, x <= t_us)) — max of an empty
     filter is NULL, matching the correlated-max oracle for events
     with no prior order. `shuffle_hash` on the bounded arrays side
     (per-partition build; never a corpus-scaling broadcast) keeps the
-    events side sort-free. Measured at gen_sf10: shuffle 419.7 ->
-    272.4 MB (-35%), interleaved warm min-of-4 wall 3.43 -> 2.41 s;
-    sf0.1 min-of-5: 0.391 -> 0.282 s; outputs exceptAll-equal both
-    ways at both tiers. The union form's "a Union has unknown output
-    partitioning" dead-end is retired with the union itself: the
-    events arm of THIS shape rides a user_id-bucketed layout
-    exchange-free (sinks.write_bucketed_fact_layout).
+    events side sort-free, with no union of the two fact sides and no
+    window sort over them. The events arm rides a user_id-bucketed
+    layout exchange-free (sinks.write_bucketed_fact_layout).
     """
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns div 1000").alias("t_us"), "event_id"
@@ -433,28 +425,22 @@ def events_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="JSON field extraction from the props column with a numeric filter; "
     "missing paths yield NULL on both engines. Single-parse from_json "
-    "(round 12; the get_json_object form re-parsed the payload per call).",
+    "(one get_json_object per path would re-parse the payload per call).",
 )
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse fewer times, extract many: the round-<=11 form used one
-    ``get_json_object`` per path, and with the filter referencing the
-    extracted field the executed plan ran a JSON parse of props 3x per
-    row (filter + two projections — Catalyst has no CSE across
+    """Parse fewer times, extract many: one ``get_json_object`` per
+    path, with the filter referencing the extracted field, parses props
+    3x per row (filter + two projections — Catalyst has no CSE across
     get_json_object calls). ``from_json`` with an explicit
-    string-typed schema drops that to 2 (Catalyst still inlines the
+    string-typed schema parses 2x (Catalyst still inlines the
     parse into the pushed filter, but whole-stage codegen's
     subexpression elimination dedupes the two field extractions inside
     the project, and OptimizeJsonExprs prunes the parse to the two
     requested keys); the struct fields cast long exactly like
     get_json_object's string-extract + cast (scalar JSON numbers
     stringify identically) and a missing key is NULL just as a missing
-    path was. Measured honestly: 3.35 -> 3.02 s min-of-3 at gen_sf10
-    on the fixture's ~10-char payloads, and 2.17 -> 1.78 s (with far
-    tighter spread) on synthetic 210-char 20-field payloads — the win
-    scales with payload width, which is the realistic 100 TB regime
-    (KB-sized event props); outputs verified exactly equal (exceptAll
-    = 0 both directions over all 5M gen_sf10 rows) and oracle-green
-    at sf0.01/sf0.1."""
+    path is. The saving scales with payload width (KB-sized event
+    props at 100 TB)."""
     ev = load_table(spark, sf_dir, "events")
     parsed = F.from_json("props", "k string, missing string")
     return (
@@ -488,10 +474,9 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events in day-bucket floor(s/W) or floor(s/W) + 1 (window width W
     = 1 day), so the SIGNUP side is exploded into those two candidate
     buckets and the join runs on (user_id, bucket). Exploding the
-    small side is the round-10 re-plan: the original form exploded the
-    FOLLOW side (every event, 2N rows — the 100 TB side of the join);
-    flipping the expansion onto signups (~20% of events here; the
-    filtered side by construction) leaves the big side un-generated
+    small side (signups, ~20% of events here; the filtered side by
+    construction) instead of the FOLLOW side (every event, 2N rows)
+    leaves the big side un-generated
     and un-duplicated, with value parity exact (e in (s, s+W] <=>
     e_bkt in {s_bkt, s_bkt+1}, integer division so bucket boundaries
     are exact). At 100 TB this bounds every join group to ~one
@@ -508,10 +493,8 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the post-shuffle slice regardless of corpus size, per-key fan-out
     is one user-day, and the hint is advisory — Spark falls back to
     the spill-safe SortMergeJoin on the same bounded key when a build
-    slice can't be hashed. The committed RANGE_JOIN_REGIMES.json holds
-    the measured regimes (hinted, merge fallback, unhinted broadcast)
-    and the per-(user, day) fan-out; tests/test_plans.py locks the
-    hinted shape and fails any broadcast."""
+    slice can't be hashed. tests/test_plans.py locks the hinted shape
+    and fails any broadcast."""
     ev = load_table(spark, sf_dir, "events")
     day_us = 24 * 3600 * 1_000_000
     base = ev.select(
@@ -568,19 +551,16 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention triangle over event time.
 
-    Scale posture (round-15 re-plan): the previous form shuffled the
-    FULL event-row set on user_id, sorted it for a ``min(ts)`` window,
-    then paid a second exchange for the (user, cohort, day) DISTINCT.
-    Both collapse into one ``groupBy(user_id)`` hash aggregate —
+    Scale posture: no ``min(ts)`` window sort over the full event rows
+    and no second exchange for a (user, cohort, day) DISTINCT — one
+    ``groupBy(user_id)`` hash aggregate —
     ``min(day)`` plus ``collect_set(day)`` — whose map-side partial
     combine eats the per-user-day fan-in (max 11 / p99 6 events per
     user-day) BEFORE the only user_id exchange, and the set explode
     afterwards runs on the already-reduced per-user rows (the
     candidate-expansion-on-the-small-side rule). Per-group state is
     the distinct active-day set — bounded by the corpus date window
-    and strictly smaller than the per-user sort run the window form
-    held. Interleaved warm pairs at gen_sf10: faster in 4/4 reps,
-    1.42 -> 1.08 s; outputs exactly equal.
+    and strictly smaller than a per-user window sort run.
     """
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
@@ -1021,20 +1001,14 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper than the join form (which re-shuffles the events table
     twice and fans out x K).
 
-    PERF (round 15, guide §4.2 allocation pressure in disguise): the
-    previous form materialized a ``collect_list`` ROWS frame per row
-    and folded it through a 3-field struct accumulator — K array+
-    struct allocations per output row, measured at gen_sf10 (warm,
-    interleaved A/B) at 9.9-23.3 s with huge spread (GC pressure from
-    ~10M x K transient objects; this was also the standing
-    "cold-cache/host-window mover" of the chain records). The lag form
-    computes the identical BIGINT sums (weight of age a is
+    The lag form computes the BIGINT sums of a ``collect_list`` ROWS
+    frame folded through a struct accumulator (weight of age a is
     2^(K-1-a); absent lags at partition starts contribute 0 to both
-    numerator and weight sum, exactly like the short collect_list)
-    with zero per-row allocation: 1.77-2.89 s, same 204 MB shuffle,
-    outputs verified exceptAll-equal over all 10M rows.
+    numerator and weight sum, exactly like a short collect_list), with
+    zero per-row allocation instead of K array+struct allocations per
+    output row.
 
-    CAVEAT (ADVICE r15): lag-offset == collect_list-fold only while
+    CAVEAT: lag-offset == collect_list-fold only while
     ``value`` is never NULL mid-partition — collect_list SKIPPED
     nulls (compacting the highest weights onto the remaining values)
     while the lag form zeroes that offset's weight. The events
@@ -1089,7 +1063,7 @@ ROLLING_DISTINCT_DAYS = 7
 )
 def events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window distinct counting as a sweep line over per-user
-    merged day-intervals (round-16 re-plan, guide §2.3).
+    merged day-intervals.
 
     A user counts toward target day d iff some activity day lies in
     [d-(K-1), d] — equivalently iff d falls inside the union of
@@ -1109,21 +1083,11 @@ def events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the same explode, so no days driver table, no semi join,
     no x{K} row fan-out.
 
-    PERF (round 16): the previous form exploded each distinct
-    (day, user) row into the K target days it can serve and paid a
-    countDistinct over the fanned rows — 229.1 MB shuffle at
-    gen_sf10. This form shuffles 7.1 MB (-97%). The LOCAL wall is
-    measured honestly: idle min-of-5 reads 2.84 s vs the fan-out
-    form's 2.35 (+21%) — the collect_set ObjectHashAggregate is
-    non-codegen while the fan-out was all codegen, and on one
-    machine shuffle "bytes" are memory traffic, so the byte win
-    cannot show. The trade is deliberate per guide §2.3: the 222 MB
-    saved is the cluster-scaling currency (at 100 TB the fan-out's
-    network crossing dominates any per-row CPU), exactly the q9
-    bytes-over-local-wall precedent. A distinct-then-collect_list
-    variant (codegen first aggregate) measured 2.78 s but pays a
-    second exchange (~37 MB) — rejected, par wall for 5x the bytes.
-    Outputs exceptAll-equal both ways at gen_sf10.
+    Trade: exploding each distinct (day, user) row into the K target
+    days it can serve and counting distinct over the fanned rows is
+    all-codegen and can be faster on one machine, but shuffles ~30x the
+    bytes; the collect_set ObjectHashAggregate here is non-codegen.
+    Shuffle bytes are what scale on a cluster, so they win the trade.
     """
     K = ROLLING_DISTINCT_DAYS
     delta_t = "array<struct<day:bigint,c:int,obs:int>>"
@@ -1678,10 +1642,9 @@ def events_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- lateness profile
 
-#: Two-level prefix-max block width, SCALE-AWARE (round 8: the fixed
-#: 1000-wide block left the block-domain prefix window growing N/1000 —
-#: corpus-linear — which the corrected single-partition-window lock
-#: caught). The smallest power of 10 whose square covers the stream
+#: Two-level prefix-max block width, SCALE-AWARE (a fixed 1000-wide
+#: block leaves the block-domain prefix window growing N/1000 —
+#: corpus-linear). The smallest power of 10 whose square covers the stream
 #: balances the split: ~sqrt(N) blocks of ~sqrt(N) rows each, so BOTH
 #: window stages stay one-task-feasible at any achievable N (10^6-row
 #: stages at a trillion events). Same integer-only derivation as

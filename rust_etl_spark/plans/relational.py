@@ -174,8 +174,7 @@ def groupby_agg_dec38(spark: SparkSession, sf_dir: str) -> DataFrame:
     default ANSI mode — tests/test_money_dec38.py). The exact
     decimal sum reconstitutes through one correctly-rounded cast to
     DOUBLE (identical on both engines even above 2^53) + one IEEE
-    division + the portable half-up round. Per-tier cost vs the BIGINT
-    accumulator is recorded in the committed DEC38_BENCH.json.
+    division + the portable half-up round.
     """
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -256,11 +255,8 @@ def discount_revenue(spark: SparkSession, sf_dir: str, lo: float, hi: float) -> 
 def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by ASIA nation (Q5 topology minus the supplier arm).
 
-    Scale posture (round-15 re-plan, measured at every tier): the
-    round-1 form joined full lineitem to full orders on orderkey and
-    then reshuffled the joined LINEITEM-ROW set on custkey before the
-    region restriction ever applied — two full-fact-row exchanges.
-    Now the ASIA restriction flows dims-first (region -> nation ->
+    Scale posture: no full-fact-row exchange. The ASIA restriction
+    flows dims-first (region -> nation ->
     customer, both bounded dims broadcast) so orders is pruned to ~1/5
     BEFORE any fact exchange, and the lineitem side is partially
     aggregated per orderkey (map-side combine collapses the ~4
@@ -268,16 +264,12 @@ def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses that partitioning, no second lineitem-side shuffle). The
     pruned per-order side is hinted shuffle_hash: it is filtered but
     still corpus-scaling, and Catalyst's static estimate would
-    otherwise broadcast it at mid tiers (the round-11 misbroadcast
-    pathology); the per-task hash build holds one partition slice of
-    the ~1/5 orders projection. orders<->customer stays size-based on
-    purpose (the q5/ADVICE-r12 adjudication: size-based selection is
-    self-correcting — it flips to a shuffle join as the estimate
-    grows, while a forced broadcast of a corpus-scaling side is the
-    pathology). Min-of-3 warm vs the old shape: 0.942 -> 0.893 s at
-    sf0.1, 1.376 -> 1.258 s at gen_sf1, 3.056 -> 2.890 s at gen_sf3,
-    4.248 -> 3.440 s at gen_sf10; outputs exactly equal at all tiers.
-    Per-order rev_scaled sums stay ~1e10 « int64 (headroom family:
+    otherwise broadcast it at mid tiers (a misbroadcast); the per-task
+    hash build holds one partition slice of the ~1/5 orders
+    projection. orders<->customer stays size-based on purpose, as in
+    q5: size-based selection flips to a shuffle join as the estimate
+    grows, while a forced broadcast of a corpus-scaling side is a
+    misbroadcast. Per-order rev_scaled sums stay ~1e10 « int64 (headroom family:
     REV_SCALED, coarsest grain unchanged).
     """
     li = load_table(spark, sf_dir, "lineitem")
@@ -369,7 +361,7 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Running per-customer spend: frame-bounded window aggregate (ROWS UNBOUNDED "
     "PRECEDING..CURRENT). The prefix sum accumulates exact integer cents — a "
-    "double prefix sum is order-dependent in its low bits, the round-6 class.",
+    "double prefix sum is order-dependent in its low bits.",
 )
 def window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (

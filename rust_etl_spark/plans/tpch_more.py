@@ -408,27 +408,18 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     class CLAUDE.md predicted for round(sum(double)). The only float
     ops left are two IEEE steps on the same BIGINT — bit-identical.
 
-    PERF (round 15, guide §2.3 "shuffle fewer bytes"): the previous
-    shape shipped SIX payload columns of every red-part lineitem row
-    through the orderkey exchange (suppkey, quantity, price,
-    discount, retailprice) and computed the profit integer only after
-    the orders join. All broadcast dims (part, supplier) attach
+    Plan shape (shuffle fewer bytes): all broadcast dims (part, supplier) attach
     BEFORE that exchange, so the per-row profit integer is computable
     pre-shuffle: project each row to (l_orderkey, s_nationkey,
     profit_cents) — three longs — ahead of the exchange; nation (25
     rows) joins AFTER the final aggregate at result grain. BIGINT
     sums reassociate exactly, so the grouped total is bit-identical.
-    A (l_orderkey, s_nationkey) PRE-aggregate was measured and
-    REJECTED: its group keys differ from the join key, so it adds a
-    second fact exchange (405 MB total, worse than the 366 MB
-    baseline), and a repartition(l_orderkey)-fused variant measured
-    byte-identical to the plain narrow projection (duplicate
-    (order, nation) pairs are too rare to pay for). The orders join
+    A (l_orderkey, s_nationkey) PRE-aggregate does not pay: its group
+    keys differ from the join key, so it adds a second fact exchange,
+    and duplicate (order, nation) pairs are too rare. The orders join
     is hinted shuffle_hash on the narrow side (the q3 precedent:
     Catalyst must never broadcast a corpus-scaling projection; SMJ
-    stays the spill-safe fallback). gen_sf10, interleaved A/B:
-    shuffle 366 -> 284 MB, wall par (4.44 vs 4.35 min-of-3);
-    outputs exactly equal.
+    stays the spill-safe fallback).
     """
     part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select(
         "p_partkey", "p_retailprice"
@@ -818,15 +809,13 @@ def q16_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     The NOT IN subquery is a broadcast LEFT ANTI join (the excluded-
     supplier set is tiny). The oracle's (part, supplier) pre-distinct
     is REDUNDANT for the final answer — count(DISTINCT l_suppkey) per
-    (brand, type, size) group dedups suppliers itself — so the round-6
-    form's full-lineitem distinct() (a shuffle of every fact row on
-    two columns, the plan's dominant exchange at the 100x tier) is
-    gone: the broadcast part-filter join runs FIRST (keeping only the
+    (brand, type, size) group dedups suppliers itself — so there is no
+    full-lineitem distinct() (a shuffle of every fact row on two
+    columns): the broadcast part-filter join runs FIRST (keeping only the
     ~14% of rows whose part survives the brand/type/size predicate),
     and the single remaining shuffle is the two-phase distinct
     aggregate, whose map-side partial dedups (group, suppkey) combos
-    before anything crosses the network. 6.6 -> 2.x s min-of-3 warm
-    at gen_sf10; outputs exactly equal (exceptAll = 0 both ways).
+    before anything crosses the network.
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     bad_supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(

@@ -21,10 +21,9 @@ from rust_etl_spark.plans.relational import (
 )
 from rust_etl_spark.sources import load_table
 
-# Exact scaled-integer money (the abc_analysis / q9 / q15 pattern,
-# migrated here proactively in round 13 — `round(sum(double))` hash-
-# failed twice at the 10x tier in round 6 and CLAUDE.md's policy is to
-# migrate the class, not wait for the third hit). See functions/money.py.
+# Exact scaled-integer money (the abc_analysis / q9 / q15 pattern):
+# `round(sum(double))` is not portable across engines (CLAUDE.md). See
+# functions/money.py.
 from rust_etl_spark.functions.money import (  # noqa: E402
     CENTS as _CENTS,
     DISC_REV_SCALED as _DISC_REV_SCALED,
@@ -93,23 +92,16 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shipping-priority top-10 (TPC-H Q3 topology).
 
-    Scale posture (round-15 re-plan): the earlier form shuffled the
-    near-unfiltered orders projection (the date predicate keeps ~97%
-    of orders) to meet lineitem on orderkey and applied the BUILDING
-    segment restriction LAST via a forced customer broadcast — a
-    corpus-scaling side under an explicit broadcast (the round-11
-    pathology class). Now the segment restriction semi-prunes orders
-    FIRST (left_semi on custkey; size-based join selection broadcasts
-    the segment projection at tested tiers and flips to a shuffle
-    join on its own as the estimate grows — the q5/ADVICE-r12
-    self-correcting posture), cutting the orders-side orderkey
-    exchange ~5x; and the shipdate-filtered lineitem side partially
-    aggregates per orderkey ahead of its exchange, which also makes
-    the old post-join groupBy collapse (orders is unique per
-    orderkey, so the join output is already at result grain — the
-    top-10 runs straight off the joined rows, same total-order
-    tie-break). Interleaved warm pairs at gen_sf10: faster in 4/4
-    reps, min 3.77 -> 3.15 s; outputs exactly equal.
+    Scale posture: the BUILDING segment restriction semi-prunes orders
+    FIRST (left_semi on custkey; no forced broadcast of a
+    corpus-scaling side: size-based join selection broadcasts the
+    segment projection at tested tiers and flips to a shuffle join on
+    its own as the estimate grows, as in q5), cutting the orders-side
+    orderkey exchange ~5x; and the shipdate-filtered lineitem side
+    partially aggregates per orderkey ahead of its exchange. Orders is
+    unique per orderkey, so the join output is already at result grain
+    and the top-10 runs straight off the joined rows (total-order
+    tie-break), with no post-join groupBy.
     """
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     orders = (
@@ -171,12 +163,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item revenue per customer (TPC-H Q10 topology).
 
-    Round-13 worst-query re-plan (the last crossover-family residual
-    without one): the round-1 form joined the full R-filtered lineitem
-    through orders AND customer before its single wide groupBy — at
-    the 100x tier that shuffles ~15M joined rows on o_custkey just to
-    collapse them to 1.5M customers one exchange later. Revenue is a
-    pure sum, so aggregation commutes with both equi-joins: collapse
+    Revenue is a pure sum, so aggregation commutes with both
+    equi-joins: collapse
     R-lineitems to ORDER grain before the orderkey join (map-side
     partial aggregation eats the ~1.6 R-rows/order fan-in), then to
     CUSTOMER grain before the customer join, so the custkey exchange
@@ -184,11 +172,9 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer scale. The n_name/c_name attach happens after both
     aggregates (nation broadcast; customer join at customer grain —
     Catalyst may broadcast the per-customer aggregate while its
-    estimate is small and AQE shuffles it later, the adjudicated
-    crossover family). Measured warm min-of-3 at gen_sf10: 6.63 ->
-    4.05 s (1.64x), exceptAll = 0 both directions; the remaining wall
-    is the one orderkey fact exchange — the bucketed-layout family's
-    answer (sinks.write_bucketed_fact_layout).
+    estimate is small and AQE shuffles it later). The one remaining
+    fact exchange is on orderkey — the bucketed layout's answer
+    (sinks.write_bucketed_fact_layout).
     """
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -413,20 +399,17 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-supplier revenue by nation (TPC-H Q5 join topology).
 
     Scale posture: the region restriction is pushed through BOTH dim
-    arms before either fact shuffle. The round-6 form shuffled the
-    full lineitem on l_orderkey and the full join result on o_custkey,
-    then applied the supplier/nation predicates last; since every join
-    is inner and the predicates are conjunctive, they reorder freely —
-    so the ASIA-supplier broadcast semi-probe now prunes lineitem to
+    arms before either fact shuffle. Every join is inner and the
+    predicates are conjunctive, so they reorder freely: the
+    ASIA-supplier broadcast semi-probe prunes lineitem to
     ~1/5 of its rows BEFORE the orderkey exchange, and customer is cut
     to ASIA nations (carrying n_name) before the custkey exchange,
     which also makes orders⋈customer selective (~date-window x 1/5) so
     the orderkey exchange's probe side shrinks the same way. The
     per-order side is hinted shuffle_hash: it is filtered but still
     corpus-scaling, and Catalyst's static estimate would otherwise
-    broadcast it at mid tiers (the round-11 misbroadcast pathology).
-    5.9 -> 2.x s min-of-3 warm at gen_sf10; outputs exactly equal.
-    The same-nation predicate rides the joined row (no extra join).
+    broadcast it at mid tiers (a misbroadcast). The same-nation
+    predicate rides the joined row (no extra join).
     """
     region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = load_table(spark, sf_dir, "nation").join(
@@ -458,11 +441,11 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    # NO explicit broadcast on the supplier probe (ADVICE r12): the
-    # ASIA-filtered supplier projection is corpus-scaling (∝ SF, ~2
-    # ints/row — KBs at every evidence tier but ~GBs at a real 100 TB
-    # SF), and a forced broadcast of an unbounded side is the repo's
-    # own round-11 pathology. Size-based selection broadcasts it at
+    # NO explicit broadcast on the supplier probe: the ASIA-filtered
+    # supplier projection is corpus-scaling (∝ SF, ~2 ints/row — KBs at
+    # every fixture tier but ~GBs at a real 100 TB SF), and a forced
+    # broadcast of an unbounded side is a misbroadcast. Size-based
+    # selection broadcasts it at
     # every tested tier (plan-locked below) and flips to a shuffle
     # join on its own once the estimate outgrows the threshold; the
     # bounded nation/region dims stay explicitly broadcast.
@@ -529,49 +512,20 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier among >1 suppliers; when n_late == 1 that supplier's key
     is max(when(is_late=1, suppkey))). The supplier dim broadcasts.
 
-    Round-16 re-plan (guide §1.2 step 2 / §3.1): the round-12 window
-    form was at the SHUFFLE floor (measured: every variant pays the
-    same 1070 MB at gen_sf10 — lineitem and orders each cross their
-    orderkey exchange exactly once) but paid THREE large sorts per
-    run: SMJ sorted both fact sides (60M + 15M rows) and the window
-    re-sorted all ~60M pair-grain rows a third time, because the
-    intervening hash aggregate destroys the SMJ output order. Two
-    changes remove all three: (a) `shuffle_hash` hint on the orders
-    side (per-partition build ≈ post-AQE partition bytes, bounded;
-    SMJ stays the spill-safe fallback) kills both join sorts, and
-    (b) the window becomes a second HashAggregate keyed l_orderkey —
-    hash(l_orderkey) from the join exchange satisfies both aggregates'
-    clustering, so no new exchange and no sort. Measured interleaved
-    warm min-of-4 at gen_sf10: 9.27 -> 7.96 s (wins 3/4 pairs; bytes
-    identical 1069.8 vs 1069.9 MB — the win is pure sort removal);
-    sf0.1 min-of-5: 1.10 -> 0.58 s. Outputs exceptAll-equal both ways
-    at both tiers. VERDICT r15 lever (a) — pre-aggregating lineitem to
-    (ok, sk, max_ship) BEFORE the orders join — was measured and
-    REJECTED: the fixture's (orderkey, suppkey) duplication ratio is
-    1.002 (59.88M distinct pairs / 60M rows, DuckDB), so map-side
-    combine has nothing to eat, and the pre-agg's own (ok, sk)
-    exchange no longer satisfies the join's hash(ok) requirement —
-    the pair rows cross TWICE (interleaved min-of-4: 11.64 s vs the
-    window form's 9.27).
-
-    History — round-12 re-plan: the round-6 form computed per-order
-    counts as a separate groupBy then JOINED it back to flagged — and
-    the executed plan showed the entire
-    lineitem-join-orders-aggregate subtree EXECUTING TWICE (distinct
-    expression IDs across the self-join branches defeat
-    ReusedExchange). The round-12 window form computed the same two
-    aggregates over the join exchange's partitioning (11.41 ->
-    6.37 s min-of-4 warm at the 100x tier); round 16 keeps that
-    clustering-reuse insight and swaps the window for the cheaper
-    hash aggregate above.
-
-    Shuffle accounting (round-6 numbers, still the relevant
-    comparison): the groupBy/join form wrote 188 MB at the 10x tier
-    across three post-partial-aggregate exchanges; the up-front
-    ``repartition("l_orderkey")`` alternative measured 40% WORSE
-    (267 MB, 4x wall) because it shuffles raw pre-combine rows — and
-    the same lesson is why the window form wins: it reuses the join's
-    clustering instead of paying any new exchange at all.
+    Plan shape: lineitem and orders each cross their orderkey
+    exchange exactly once, and no large sort runs. (a) A
+    `shuffle_hash` hint on the orders side (per-partition build ≈
+    post-AQE partition bytes, bounded; SMJ stays the spill-safe
+    fallback) removes both join sorts, and (b) both aggregates are
+    HashAggregates keyed l_orderkey — hash(l_orderkey) from the join
+    exchange satisfies their clustering, so no new exchange and no
+    sort. Joining per-order counts back to the flagged rows instead
+    would execute the lineitem-join-orders subtree twice (distinct
+    expression IDs across self-join branches defeat ReusedExchange).
+    Pre-aggregating lineitem to (ok, sk) before the orders join does
+    not pay: the fixture's (orderkey, suppkey) pairs are ~unique, and
+    that exchange on (ok, sk) no longer satisfies the join's hash(ok)
+    requirement, so the pair rows would cross twice.
 
     Adapted to this fixture's columns: no l_commitdate/l_receiptdate
     exist, so "late" is ship-lag (l_shipdate - o_orderdate) beyond a

@@ -232,15 +232,16 @@ def _export_engine_path() -> None:
 def get_spark(
     app_name: str = "rust_etl_spark",
     *,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine session.
 
-    ``shuffle_partitions`` defaults to the local core count: on
+    ``spark.sql.shuffle.partitions`` is the local core count: on
     local[N] the 200-partition default just adds scheduling overhead,
     while on a big cluster AQE coalesces post-shuffle partitions to
     the right size anyway (`spark.sql.adaptive.coalescePartitions`).
+    An ``extra_conf`` entry overrides it, as it overrides any setting
+    here.
 
     A call that launches the driver JVM also makes the interpreter's
     exit close the JVM and wait for it, so no JVM outlives the process.
@@ -279,30 +280,24 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Let AQE pick the post-shuffle partition count by bytes, not
         # the static cores count: start wide (8x cores) and coalesce to
-        # ~64 MB targets. Small tiers coalesce back to a handful of
+        # the advisory size. Small tiers coalesce back to a handful of
         # partitions (no extra scheduling), while GB-scale shuffles get
-        # enough sort partitions to stay in memory — at the 100x tier
-        # with a fixed 32, join_star (whose dims outgrow the broadcast
-        # threshold there and fall back to shuffle joins) and
-        # window_range_frame each sorted >1 GB shuffles through 32
-        # partitions and spilled 5.2 / 2.6 GB; starting at 256 removes
-        # the spill. This mirrors the right cluster setting: partition
-        # count scales with data volume, AQE owns the final number.
+        # enough sort partitions to stay in memory instead of spilling.
+        # This mirrors the right cluster setting: partition count
+        # scales with data volume, AQE owns the final number.
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(8 * cores))
         # AQE's 64 MB default advisory target is sized for cluster
-        # executors with GBs of execution memory per task; here each of
-        # the 32 local task slots gets ~heap*0.6/32 ≈ 300 MB, and a
-        # 64 MB shuffle partition expands ~5x as unsafe rows + sort
-        # buffers — the 100x tier's q21 sorted exactly at that edge and
-        # spilled 9.3 GB (wall 16.2 s). 16 MB targets keep post-shuffle
-        # sorts in memory (q21: zero spill, 12.8 s) and coalesce
-        # identically for small shuffles (anything < 16 MB is still one
-        # partition). Cluster translation: advisory size ≈
+        # executors with GBs of execution memory per task; here each
+        # local task slot gets ~heap*0.6/cores, and a 64 MB shuffle
+        # partition expands ~5x as unsafe rows + sort buffers, which
+        # spills wide sorts. 16 MB targets keep post-shuffle sorts in
+        # memory and coalesce identically for small shuffles (anything
+        # < 16 MB is still one partition). Cluster translation: advisory size ≈
         # (executor memory * memory fraction / cores) / ~5x row
         # expansion, rather than a constant.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
@@ -317,20 +312,17 @@ def get_spark(
         # Byte-small but compute-heavy tables (embeddings: 64-float
         # arrays driving O(N*C) distance folds) under-split at the
         # default 4 MB openCost floor — a 6 MB single-file scan plans
-        # 1-2 tasks and serializes 100% of the kernel work on one core
-        # (the 10x scaling run measured kmeans_iterate at 46x for 10x
-        # rows from exactly this). Lowering the split floor restores
+        # 1-2 tasks and serializes the kernel work on one core.
+        # Lowering the split floor restores
         # row-group-grain parallelism; on a real cluster the file count
         # provides it and these two mostly don't bind.
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))
         .config("spark.ui.enabled", "false")
         # Local mode: all executor threads share the driver JVM, so
-        # per-task execution memory is heap * 0.6 / cores. At 8g/32
-        # cores that is ~150 MB — the 100x tier's GB-scale sort-merge
-        # joins and two-level window sorts need ~190 MB/task and
-        # spilled 5.2/2.6 GB (join_star / window_range_frame); 16g
-        # clears both to zero spill. The cluster translation: size
+        # per-task execution memory is heap * 0.6 / cores; GB-scale
+        # sort-merge joins and window sorts spill when that is below
+        # their ~190 MB/task. The cluster translation: size
         # executor memory so sort buffers cover shuffle-partition
         # bytes, or equivalently keep partition bytes under
         # (executor memory * fraction / cores).

@@ -61,13 +61,14 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
+#: Buckets per fact table in :func:`write_bucketed_fact_layout`.
+FACT_BUCKETS = 32
+
+
 def write_bucketed_fact_layout(
     spark: SparkSession,
     sf_dir: str,
     specs: dict[str, str],
-    *,
-    n_buckets: int = 32,
-    suffix: str = "",
 ) -> dict[str, str]:
     """Materialize bucketed copies of fact tables and return their
     catalog names ({source_table: catalog_table}).
@@ -78,7 +79,7 @@ def write_bucketed_fact_layout(
     e.g. events bucketed on user_id but sorted (user_id, ts_ns,
     event_id), so every per-user window over the event clock consumes
     the write-time order too. Each table is
-    repartitioned to exactly ``n_buckets`` on the key before the
+    repartitioned to exactly ``FACT_BUCKETS`` on the key before the
     bucketed write so every bucket lands in ONE file — that makes the
     bucket files globally sorted on the sort key, letting a downstream
     sort-merge join skip BOTH the Exchange and the Sort. This is the
@@ -86,24 +87,15 @@ def write_bucketed_fact_layout(
     co-joined facts: the shuffle is paid at ingest, and every
     subsequent join/agg on the key runs exchange-free (pair with
     sources.set_layout_override so existing queries pick it up
-    transparently). Cost model (measured at the 100x tier on a
-    32-core host): one full shuffle + write per table. On LOCAL wall the orderkey write (22.6-40.7 s across
-    round re-measures / 3.0 GB shuffle) repays at roughly 8-23
-    executions of the measured join/agg queries (each saves ~2 s) and
-    the events_user write (~3 s / 393 MB) at ~3-6 sessionize-class
-    queries — a query-mix investment, not a one-join win. On the
-    shuffle-BYTE basis, the one that transfers to a network-bound
-    cluster, break-even is ~3-6 executions (orderkey: each query
-    eliminates 0.5-1.0 GB of the 3.0 GB write shuffle) and ~2-3
-    (events_user) — and the eliminated bytes grow with the data while
-    the write stays one pass.
+    transparently). Cost model: one full shuffle + write per table,
+    repaid after a few executions of the joins/aggregates on the key
+    — a query-mix investment, not a one-join win; the eliminated
+    shuffle bytes grow with the data while the write stays one pass.
 
-    Sizing: bucket-grain scans cannot split files, so ``n_buckets`` IS
+    Sizing: bucket-grain scans cannot split files, so ``FACT_BUCKETS`` IS
     the layout's scan parallelism — size it to at least 2x the total
-    cores of the biggest expected reader (measured at the 100x tier:
-    a full-table aggregate over 32 buckets on 32 cores ran 1.8x slower
-    than parquet from the single non-overlapping task wave; 64 buckets
-    ran 1.7x faster).
+    cores of the biggest expected reader (one task wave of exactly
+    one bucket per core leaves no room to balance).
 
     Sort elimination: because every bucket is exactly one sorted file,
     readers may also set
@@ -121,19 +113,21 @@ def write_bucketed_fact_layout(
     names: dict[str, str] = {}
     for tbl, spec in specs.items():
         key, sort_cols = (spec, [spec]) if isinstance(spec, str) else (spec[0], list(spec[1]))
-        tname = f"{tbl}_bkt{suffix}"
-        df = load_table(spark, sf_dir, tbl).repartition(n_buckets, F.col(key))
-        write_bucketed_table(df, tname, [key], n_buckets=n_buckets, sort_cols=sort_cols)
+        tname = f"{tbl}_bkt"
+        df = load_table(spark, sf_dir, tbl).repartition(FACT_BUCKETS, F.col(key))
+        write_bucketed_table(df, tname, [key], n_buckets=FACT_BUCKETS, sort_cols=sort_cols)
         names[tbl] = tname
     return names
+
+
+#: Range partitions (and so files) :func:`write_range_partitioned` writes.
+RANGE_PARTITIONS = 8
 
 
 def write_range_partitioned(
     df: DataFrame,
     path: str,
     col: str,
-    *,
-    n_partitions: int = 8,
 ) -> None:
     """Write parquet range-clustered on one ordered column — the
     time-series layout: ``repartitionByRange`` samples the column to
@@ -146,7 +140,7 @@ def write_range_partitioned(
     No global sort: the range exchange + local sorts are fully
     parallel (tests/test_partitioning.py pins span disjointness)."""
     (
-        df.repartitionByRange(n_partitions, col)
+        df.repartitionByRange(RANGE_PARTITIONS, col)
         .sortWithinPartitions(col)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
@@ -178,20 +172,15 @@ def zorder_key(a, b, bits: int = 16):
     100 TB (the same idea Delta/Iceberg expose as OPTIMIZE ZORDER BY),
     implemented here as write-time sort for plain parquet.
 
-    PERF (round 15): the original form summed ``2 * bits`` per-bit
-    ``bit_get(col, j) * 2^k`` terms (63-op expression tree at the
-    shipped bits=21); the mask-shift Morton spread does the identical
-    interleave in 5 shift/or/and steps per column. Verified
-    bit-identical over all 60M gen_sf10 lineitem rows AND 10k random
-    signed longs (both forms read only the masked low bits);
-    zorder_order measured 2.11 -> 0.82 s interleaved warm min at
-    gen_sf10. The DuckDB oracle mirror (layout.morton_duckdb) is
-    value-stable so it needs no change. bits <= 16 interleaves
-    losslessly into the 32 even/odd positions each side uses; the
-    cap is 31, not 32: at bits=32 the b-side spread's bit 31 lands
-    (after the final shiftleft(sb, 1)) in long bit 63 — the sign
-    bit — so z-keys go negative and sort locality inverts (ADVICE
-    r15). Shipped callers use bits=21 / default 16.
+    The mask-shift Morton spread interleaves in 5 shift/or/and steps
+    per column, value-identical to summing ``2 * bits`` per-bit
+    ``bit_get(col, j) * 2^k`` terms (both read only the masked low
+    bits), which the DuckDB oracle mirror (layout.morton_duckdb)
+    states. bits <= 16 interleaves losslessly into the 32 even/odd
+    positions each side uses; the cap is 31, not 32: at bits=32 the
+    b-side spread's bit 31 lands (after the final shiftleft(sb, 1)) in
+    long bit 63 — the sign bit — so z-keys go negative and sort
+    locality inverts. Shipped callers use bits=21 / default 16.
     """
     if bits > 31:
         raise ValueError(
@@ -210,8 +199,6 @@ def write_zordered(
     path: str,
     col_a: str,
     col_b: str,
-    *,
-    max_records_per_file: int = MAX_RECORDS_PER_FILE,
 ) -> None:
     """Write parquet clustered by the Z-order of the low 16 bits of
     (col_a, col_b).
@@ -228,6 +215,6 @@ def write_zordered(
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .parquet(path)
     )

@@ -3,10 +3,11 @@ JSON-lines, ORC (all native Spark readers — pushdown/pruning apply to
 ORC exactly as parquet; CSV/JSON get projection pruning only).
 
 Production posture: always pass an explicit schema for CSV/JSONL at
-scale (``inferSchema`` burns a full extra pass over the data); the
-helpers here accept one and only fall back to inference for ad-hoc
-exploration. Avro would need the spark-avro package on the classpath —
-gated with a clear error instead of a stub import.
+scale (``inferSchema`` burns a full extra pass over the data). The
+readers take the schema as a required argument; ``None`` asks for
+inference, for ad-hoc exploration only. Avro would need the
+spark-avro package on the classpath — gated with a clear error
+instead of a stub import.
 """
 
 from __future__ import annotations
@@ -20,9 +21,7 @@ from rust_etl_spark.errors import EngineError
 CORRUPT_COL = "_corrupt_record"
 
 
-def read_csv(
-    spark: SparkSession, path: str, *, schema: T.StructType | str | None = None
-) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: T.StructType | str | None) -> DataFrame:
     """Comma-separated CSV with a header row."""
     reader = spark.read.option("header", True)
     if schema is not None:
@@ -36,9 +35,7 @@ def write_csv(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, *, schema: T.StructType | str | None = None
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str | None) -> DataFrame:
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)

@@ -137,6 +137,10 @@ def start_incremental_aggregate(
     )
 
 
+#: Tumbling window of the time-bucketed sinks.
+WINDOW = "5 minutes"
+
+
 def start_incremental_window_aggregate(
     spark: SparkSession,
     source_dir: str,
@@ -146,10 +150,9 @@ def start_incremental_window_aggregate(
     ts_col: str,
     key: str,
     value: str,
-    window: str = "5 minutes",
 ):
     """Continuous aggregate (hypertable-rollup pattern): maintain
-    ``summary_path`` = per-(tumbling ``window`` start, ``key``)
+    ``summary_path`` = per-(tumbling ``WINDOW`` start, ``key``)
     (n, total of ``value``) over everything that ever landed.
 
     The time bucket joins the merge key, so late/replayed data sums
@@ -161,7 +164,7 @@ def start_incremental_window_aggregate(
 
     def lift(batch_df: DataFrame) -> DataFrame:
         return batch_df.select(
-            F.unix_micros(F.window(ts_col, window).start).alias("w_start_us"),
+            F.unix_micros(F.window(ts_col, WINDOW).start).alias("w_start_us"),
             key,
             F.lit(1).alias("n"),
             F.col(value).alias("total"),
@@ -183,9 +186,8 @@ def start_incremental_ohlc(
     key: str,
     value: str,
     id_col: str,
-    window: str = "5 minutes",
 ):
-    """Continuously-maintained OHLC candles: per (tumbling ``window``
+    """Continuously-maintained OHLC candles: per (tumbling ``WINDOW``
     start, ``key``) keep n / open / high / low / close of ``value``
     as micro-batches land — the streaming twin of the batch
     ``events_ohlc`` query, via the same exactly-once merge core.
@@ -207,7 +209,7 @@ def start_incremental_ohlc(
         e_us = F.unix_micros(F.col(ts_col))
         e_id = F.col(id_col).cast("long")
         return batch_df.select(
-            F.unix_micros(F.window(ts_col, window).start).alias("w_start_us"),
+            F.unix_micros(F.window(ts_col, WINDOW).start).alias("w_start_us"),
             key,
             F.lit(1).alias("n"),
             e_us.alias("open_us"),

@@ -8,19 +8,13 @@ small tuple per user; at scale the state store shards by the grouping
 key across executors, and a timeout policy would expire idle keys
 (kept NoTimeout here so the bounded smoke run drains deterministically).
 
-Throughput model (measured at the 100x tier on a 32-core host): the
-applyInPandasWithState path costs ~90 us per KEY-UPDATE (per-group
-Arrow framing + GroupState round trip + the mandatory 1-row pandas
-output), independent of rows per group — numpy-fying the body and
-raising arrow.maxRecordsPerBatch both measured flat. The deployment
-lever is therefore TRIGGER SIZING, not body tuning: every key that
-appears in a micro-batch pays the tax once, so many small triggers
-multiply it (8 one-file triggers over the same rows — a deliberately
-MIS-SIZED trigger kept as the pedagogical baseline, not the
-operator's ceiling: 86-95k rows/s; one right-sized trigger:
-620-640k rows/s, a ~7x lever — JVM-native parity). Size triggers so
-rows-per-key-per-trigger stays high, and prefer the JVM-native
-window/session profiles when the semantics fit.
+Throughput model: the applyInPandasWithState path pays a fixed cost
+per KEY-UPDATE (per-group Arrow framing + GroupState round trip + the
+mandatory 1-row pandas output), independent of rows per group, so the
+deployment lever is TRIGGER SIZING, not body tuning: every key that
+appears in a micro-batch pays the tax once, and many small triggers
+multiply it. Size triggers so rows-per-key-per-trigger stays high, and
+prefer the JVM-native window/session profiles when the semantics fit.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Pre-snapshot gate: run BEFORE any end-of-round commit.
 #
-#   bash scripts/verify_round.sh            # full gate (~19 min, 4 cores)
+#   bash scripts/verify_round.sh            # full gate (~21 min, 4 cores)
 #
 # Stages:
 #   1. driver-sim  — vanilla SparkSession, every queries() entry vs its

@@ -15,7 +15,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("rust_etl_spark-tests", shuffle_partitions=8)
+    s = get_spark("rust_etl_spark-tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
 
 

@@ -19,11 +19,11 @@ plan that:
 from __future__ import annotations
 
 import re
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from rust_etl_spark import sinks
 from rust_etl_spark.plans import catalog
 from rust_etl_spark.sinks import write_bucketed_fact_layout
 from rust_etl_spark.sources import (
@@ -46,11 +46,11 @@ def _exchanges(plan: str) -> int:
 
 
 @pytest.fixture()
-def bucketed(spark):
-    """Bucketed orders+lineitem at the smoke tier, unique table names;
+def bucketed(spark, monkeypatch):
+    """Bucketed orders+lineitem at the smoke tier, 4 buckets each;
     overrides NOT set (each test decides); dropped afterwards."""
-    suffix = f"_t{uuid.uuid4().hex[:8]}"
-    names = write_bucketed_fact_layout(spark, SF, FACTS, n_buckets=4, suffix=suffix)
+    monkeypatch.setattr(sinks, "FACT_BUCKETS", 4)
+    names = write_bucketed_fact_layout(spark, SF, FACTS)
     try:
         yield names
     finally:
@@ -127,7 +127,7 @@ def test_bucketed_join_sort_elimination(spark, bucketed, no_broadcast):
     exchanges AND zero sorts — a fully pipelined merge join from disk.
     The conf is off by default because respecting ordering pins read
     parallelism to one-file-per-bucket; write_bucketed_fact_layout
-    guarantees exactly that (repartition-to-n_buckets before the
+    guarantees exactly that (repartition-to-FACT_BUCKETS before the
     write), so the layout can opt in safely."""
     key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
     spark.conf.set(key, "true")
@@ -267,9 +267,9 @@ EVENTS_SPEC = {
 
 
 @pytest.fixture()
-def bucketed_events(spark):
-    suffix = f"_t{uuid.uuid4().hex[:8]}"
-    names = write_bucketed_fact_layout(spark, SF, EVENTS_SPEC, n_buckets=4, suffix=suffix)
+def bucketed_events(spark, monkeypatch):
+    monkeypatch.setattr(sinks, "FACT_BUCKETS", 4)
+    names = write_bucketed_fact_layout(spark, SF, EVENTS_SPEC)
     try:
         yield names
     finally:

@@ -178,8 +178,11 @@ def test_config_validation_fails_fast(raw):
 
 def test_pipeline_fail_soft_end_to_end(spark, tmp_path):
     """Offline pipeline run: one good endpoint, one 'empty response',
-    one templated skip — the loop must advance past failures
-    (main.rs:52-108) and write parquet only for the good one."""
+    one templated skip and one whose destination cannot be written
+    (its parent is a regular file) — the loop must advance past
+    failures (main.rs:52-108), write parquet only for the good one and
+    keep the staged JSON of the failed write (processor.rs:94 removes
+    it only after a good write)."""
     cfg = Config.from_dict(
         {
             "portal": {
@@ -190,9 +193,13 @@ def test_pipeline_fail_soft_end_to_end(spark, tmp_path):
                     "empty": "/empty",
                     "by_id": "/contracts/{id}",
                 },
+                "blocked": {"root_path": "resultado", "unwritable": "/blocked"},
             }
         }
     )
+    data = tmp_path / "data"
+    (data / "portal").mkdir(parents=True)
+    (data / "portal" / "blocked").write_text("a file where the group's directory goes")
 
     def fake_fetch(session, url, dest, **kw):
         os.makedirs(os.path.dirname(dest), exist_ok=True)
@@ -205,22 +212,29 @@ def test_pipeline_fail_soft_end_to_end(spark, tmp_path):
     report = run_pipeline(
         spark,
         cfg,
-        data_dir=str(tmp_path / "data"),
+        data_dir=str(data),
         fetcher=fake_fetch,
         session_factory=lambda: None,
         max_workers=1,
     )
+    assert [r.key for r in report.results] == ["good", "empty", "by_id", "unwritable"]
     by_key = {r.key: r for r in report.results}
     assert by_key["good"].status == "ok"
     assert by_key["empty"].status == "download_error"
     assert by_key["empty"].seconds > 0  # failed endpoints are timed too
     assert by_key["by_id"].status == "skipped_templated"
-    out = str(tmp_path / "data" / "portal" / "contracts" / "good.parquet")
+    assert by_key["unwritable"].status == "transform_error"
+    assert by_key["unwritable"].error
+    out = str(data / "portal" / "contracts" / "good.parquet")
     got = spark.read.parquet(out)
     assert sorted(got.columns) == ["codigo", "id", "nome"]
     assert got.count() == 2
-    # staging removed after successful write (processor.rs:94)
-    assert not os.path.exists(str(tmp_path / "data" / "_staging" / "portal" / "contracts" / "good_temp.json"))
+    assert sorted(os.listdir(data / "portal" / "contracts")) == ["good.parquet"]
+    assert (data / "portal" / "blocked").is_file()
+    # staging removed after successful write (processor.rs:94), kept after a failed one
+    staging = data / "_staging" / "portal"
+    assert not (staging / "contracts" / "good_temp.json").exists()
+    assert json.loads((staging / "blocked" / "unwritable_temp.json").read_text()) == ENVELOPE
 
 
 def test_envelope_runs_two_jvm_only_jobs(spark, tmp_path, monkeypatch):
@@ -228,20 +242,30 @@ def test_envelope_runs_two_jvm_only_jobs(spark, tmp_path, monkeypatch):
     and the parquet write: the empty guard reads only the schema and
     the decode is a JVM expression, so no Python worker runs."""
     plans = []
+    sc = spark.sparkContext
+
+    def in_group(fn):
+        # Job groups are per thread, and run_pipeline transforms each
+        # endpoint on a pool thread: set the group where the jobs run.
+        def run(*args, **kwargs):
+            sc.setJobGroup("envelope-job-count", "one ok envelope")
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+
+        return run
+
     write = pipeline.write_parquet
 
     def planned_write(df, dest):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         write(df, dest)
 
-    monkeypatch.setattr(pipeline, "write_parquet", planned_write)
-    sc = spark.sparkContext
-    sc.setJobGroup("envelope-job-count", "one ok envelope")
-    try:
-        report = _run_one_route(spark, tmp_path, ENVELOPE)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.setattr(pipeline, "process_json_document", in_group(pipeline.process_json_document))
+    monkeypatch.setattr(pipeline, "write_parquet", in_group(planned_write))
+    report = _run_one_route(spark, tmp_path, ENVELOPE)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener state
     assert [r.status for r in report.results] == ["ok"]
     assert len(sc.statusTracker().getJobIdsForGroup("envelope-job-count")) == 2

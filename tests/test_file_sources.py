@@ -33,21 +33,21 @@ def _assert_same_rows(a, b, key):
 def test_csv_roundtrip(spark, nation, tmp_path):
     p = str(tmp_path / "nation_csv")
     write_csv(nation, p)
-    back = read_csv(spark, p, schema="n_nationkey int, n_name string, n_regionkey int")
+    back = read_csv(spark, p, "n_nationkey int, n_name string, n_regionkey int")
     _assert_same_rows(nation, back, ["n_nationkey", "n_name", "n_regionkey"])
 
 
 def test_csv_infer_fallback(spark, nation, tmp_path):
     p = str(tmp_path / "nation_csv2")
     write_csv(nation, p)
-    back = read_csv(spark, p)  # inference path
+    back = read_csv(spark, p, None)  # inference path
     assert back.count() == nation.count()
 
 
 def test_jsonl_roundtrip(spark, nation, tmp_path):
     p = str(tmp_path / "nation_jsonl")
     write_jsonl(nation, p)
-    back = read_jsonl(spark, p, schema="n_nationkey int, n_name string, n_regionkey int")
+    back = read_jsonl(spark, p, "n_nationkey int, n_name string, n_regionkey int")
     _assert_same_rows(nation, back, ["n_nationkey", "n_name", "n_regionkey"])
 
 

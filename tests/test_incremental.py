@@ -225,7 +225,7 @@ def test_window_aggregate_matches_batch_recompute_and_survives_replay(spark, tmp
 
     def run():
         q = start_incremental_window_aggregate(
-            spark, src, summary, ckpt, schema, "ts", "k", "v", window="5 minutes"
+            spark, src, summary, ckpt, schema, "ts", "k", "v"
         )
         try:
             q.processAllAvailable()
@@ -379,7 +379,7 @@ def test_incremental_ohlc_matches_batch_recompute(spark, tmp_path):
 
     def run(files):
         q = start_incremental_ohlc(
-            spark, src, summary, ckpt, schema, "ts", "k", "v", "eid", window="5 minutes"
+            spark, src, summary, ckpt, schema, "ts", "k", "v", "eid"
         )
         try:
             q.processAllAvailable()

@@ -14,7 +14,7 @@ dist=inf) no-candidate pair and the empty-Arrow-batch skip.
 One wrinkle vs the PQ contract: the IVF distances round to 6 digits
 BEFORE the argmin, and a quarter-ulp reassociation around 1.0 is
 invisible at that scale — so the np.sum discrimination fixture calls
-the kernel at ndigits=16, where floor(x * 1e16 + 0.5) / 1e16
+the kernel with NDIGITS=16, where floor(x * 1e16 + 0.5) / 1e16
 preserves one ulp at 1.0 (the 6-digit production path shares the
 identical accumulation loop; only the final scale differs). All
 planted values are dyadic so every IEEE step is exact: a coordinate
@@ -27,6 +27,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from rust_etl_spark.operators import similarity
 from rust_etl_spark.operators.similarity import (
     _ivf_assign_batches,
     _ivf_l2sq_np,
@@ -52,10 +53,10 @@ def test_exact_ties_go_to_the_lowest_index():
     assert D[0].argmin() == 0
 
 
-def test_left_associated_accumulation_not_np_sum():
+def test_left_associated_accumulation_not_np_sum(monkeypatch):
     """Anchor A's squared terms are [1.0, 2^-54 x 63]: left-associated
     every tail add absorbs, total exactly 1.0. Anchor B (LOWER index)
-    totals exactly 1 + 2^-52 under any order. At ndigits=16 the floor
+    totals exactly 1 + 2^-52 under any order. At NDIGITS=16 the floor
     round preserves the ulp, so left-association picks A while a
     pairwise (np.sum-style) reduction inflates A into a tie with B and
     first-min flips to B."""
@@ -76,7 +77,8 @@ def test_left_associated_accumulation_not_np_sum():
     assert left == 1.0
     assert np.sum(terms_a) > 1.0, "np.sum no longer reassociates this input"
 
-    D = _ivf_l2sq_np(X, np.stack([B, A]), ndigits=16)
+    monkeypatch.setattr(similarity, "NDIGITS", 16)
+    D = _ivf_l2sq_np(X, np.stack([B, A]))
     assert D[0, 1] == 1.0, (
         "anchor A's absorbed tail inflated — the accumulation is no "
         "longer the left-associated loop"

@@ -3,10 +3,12 @@
 A default that no call site overrides is a setting nothing runs: it
 belongs in the function body as a constant. For each function under
 ``rust_etl_spark/`` with a default-valued parameter, some call of that
-function name in the engine, ``scripts/``, ``examples/``,
-``perfbench/``, ``bench.py`` or ``tests/`` must pass the parameter by
-keyword or by position (a ``*args`` or ``**kwargs`` splat counts as
-passing it). AST only: imports no engine module and starts no Spark.
+function name in the engine, ``scripts/``, ``perfbench/`` or
+``bench.py`` must pass the parameter by keyword or by position (a
+``*args`` or ``**kwargs`` splat counts as passing it). Calls in
+``tests/`` and ``examples/`` do not count: a setting only a test sets
+is a module constant the test monkeypatches. AST only: imports no
+engine module and starts no Spark.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 ENGINE = ROOT / "rust_etl_spark"
-CALLER_TREES = ("rust_etl_spark", "scripts", "examples", "perfbench", "tests")
+CALLER_TREES = ("rust_etl_spark", "scripts", "perfbench")
 
 
 def _trees() -> dict[Path, ast.Module]:

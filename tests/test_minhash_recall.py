@@ -31,7 +31,7 @@ def test_recall_corpus_is_exactly_the_planted_truth(spark):
 
 def test_shipped_setting_meets_recall_floor(spark):
     docs = recall_corpus(spark).cache()
-    measured = minhash_recall(docs, MINHASH_K, MINHASH_BAND_ROWS)
+    measured = minhash_recall(docs)
     assert measured >= RECALL_FLOOR
 
     # ...and the documented table row for the shipped setting is honest.

@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from rust_etl_spark.operators import joins
 from rust_etl_spark.operators.joins import salted_join
 from rust_etl_spark.sinks import read_table, write_bucketed_table, write_partitioned
 from rust_etl_spark.sources import load_table
@@ -50,13 +51,14 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_cust")
 
 
-def test_zordered_write_clusters_both_dimensions(spark, tmp_path):
+def test_zordered_write_clusters_both_dimensions(spark, tmp_path, monkeypatch):
     """Z-order clustering must shrink per-row-group min/max spans on
     BOTH key columns vs an unclustered write — that span shrinkage is
     exactly what lets parquet footer stats skip row groups for
     predicates on either column."""
     import pyarrow.parquet as pq
 
+    from rust_etl_spark import sinks
     from rust_etl_spark.sinks import write_zordered
     from rust_etl_spark.sources import load_table
 
@@ -85,7 +87,8 @@ def test_zordered_write_clusters_both_dimensions(spark, tmp_path):
     plain = str(tmp_path / "plain")
     li.repartition(4).write.mode("overwrite").option("maxRecordsPerFile", 500).parquet(plain)
     zed = str(tmp_path / "zed")
-    write_zordered(li, zed, "l_partkey", "l_suppkey", max_records_per_file=500)
+    monkeypatch.setattr(sinks, "MAX_RECORDS_PER_FILE", 500)
+    write_zordered(li, zed, "l_partkey", "l_suppkey")
 
     assert mean_span_product(zed) < mean_span_product(plain) / 4
     # identical content, just relaid
@@ -126,9 +129,9 @@ def _skewed_events(spark):
 def test_salted_join_spreads_hot_key(spark):
     """One user owns 20% of the fact side. The salted join must (a)
     return the same result as the plain join and (b) actually split the
-    hot key across n_salts sub-keys — visible both in the plan (join on
+    hot key across N_SALTS sub-keys — visible both in the plan (join on
     __salt) and in the per-salt row distribution."""
-    n_salts = 8
+    n_salts = joins.N_SALTS
     ev = _skewed_events(spark)
     users = spark.range(3000).select(
         F.col("id").alias("user_id"), (F.col("id") % 5).alias("segment")
@@ -137,15 +140,13 @@ def test_salted_join_spreads_hot_key(spark):
     plain = ev.join(users, "user_id").agg(
         F.count(F.lit(1)).alias("n"), F.sum("segment").alias("s")
     )
-    salted = salted_join(
-        ev, users, "user_id", n_salts=n_salts, probe_salt_source="event_id"
-    )
+    salted = salted_join(ev, users, "user_id", probe_salt_source="event_id")
     salted_agg = salted.agg(F.count(F.lit(1)).alias("n"), F.sum("segment").alias("s"))
     assert plain.collect() == salted_agg.collect()
 
     # Salt is a real join key, not dropped before the shuffle.
     assert "__salt" in _plan(
-        salted_join(ev, users, "user_id", n_salts=n_salts, probe_salt_source="event_id")
+        salted_join(ev, users, "user_id", probe_salt_source="event_id")
     )
 
     # Fan-out bound: the hot key's largest per-salt slice must be close
@@ -268,7 +269,7 @@ def test_range_partitioned_write_has_disjoint_file_spans(spark, tmp_path):
 
     ev = load_table(spark, SF, "events").select("event_id", "ts_ns", "value")
     out = str(tmp_path / "ev_range")
-    write_range_partitioned(ev, out, "ts_ns", n_partitions=8)
+    write_range_partitioned(ev, out, "ts_ns")
 
     spans = []
     for f in os.listdir(out):
@@ -290,7 +291,8 @@ def test_range_partitioned_write_has_disjoint_file_spans(spark, tmp_path):
     assert spark.read.parquet(out).count() == ev.count()
 
 
-def test_salted_join_matches_plain_join(spark):
+def test_salted_join_matches_plain_join(spark, monkeypatch):
+    monkeypatch.setattr(joins, "N_SALTS", 4)
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
     orders = load_table(spark, SF, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
@@ -298,9 +300,7 @@ def test_salted_join_matches_plain_join(spark):
     plain = li.join(orders, "l_orderkey").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("q")
     )
-    salted = salted_join(
-        li, orders, "l_orderkey", n_salts=4, probe_salt_source="l_linenumber"
-    ).agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("q"))
+    salted = salted_join(li, orders, "l_orderkey", probe_salt_source="l_linenumber").agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("q"))
     assert plain.collect() == salted.collect()
 
 
@@ -484,9 +484,7 @@ def test_salted_join_correct_without_aqe(spark):
     old = spark.conf.get("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
     try:
-        salted = salted_join(
-            ev, users, "user_id", n_salts=8, probe_salt_source="event_id"
-        ).agg(F.count(F.lit(1)).alias("n"), F.sum("segment").alias("s")).collect()
+        salted = salted_join(ev, users, "user_id", probe_salt_source="event_id").agg(F.count(F.lit(1)).alias("n"), F.sum("segment").alias("s")).collect()
     finally:
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", old)
     assert plain == salted

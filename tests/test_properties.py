@@ -86,7 +86,22 @@ def test_connected_components_matches_union_find(spark, edge_list):
     assert got == want
 
 
-def test_connected_components_chain_escalates_to_star(spark):
+def _count_rounds(monkeypatch) -> dict[str, int]:
+    """Count connected_components' propagation and star rounds by
+    wrapping its two round helpers."""
+    from rust_etl_spark.operators import dedup
+
+    stats = {"plain_rounds": 0, "star_rounds": 0}
+    for helper, key in (("_label_round", "plain_rounds"), ("_star_round", "star_rounds")):
+        def counted(*args, _fn=getattr(dedup, helper), _key=key):
+            stats[_key] += 1
+            return _fn(*args)
+
+        monkeypatch.setattr(dedup, helper, counted)
+    return stats
+
+
+def test_connected_components_chain_escalates_to_star(spark, monkeypatch):
     """A 50-node chain is the propagation worst case: O(diameter) = 49
     rounds of min-label walking. The hybrid must escalate to
     large-star/small-star after `CC_STAR_AFTER` rounds and finish the
@@ -97,18 +112,15 @@ def test_connected_components_chain_escalates_to_star(spark):
     n = 50
     chain = [(i, i + 1) for i in range(n - 1)]
     df = spark.createDataFrame(chain, "a long, b long")
-    stats: dict = {}
-    got = {
-        r["u"]: r["lbl"]
-        for r in connected_components(df, "a", "b", stats=stats).collect()
-    }
+    stats = _count_rounds(monkeypatch)
+    got = {r["u"]: r["lbl"] for r in connected_components(df, "a", "b").collect()}
     assert got == {i: 0 for i in range(n)}  # one component, min label 0
     assert stats["plain_rounds"] == 5  # propagation alone could not finish
     assert 1 <= stats["star_rounds"] <= 10  # log-round convergence, not O(n)
     assert stats["plain_rounds"] + stats["star_rounds"] < n - 1
 
 
-def test_connected_components_easy_graph_stays_in_propagation(spark):
+def test_connected_components_easy_graph_stays_in_propagation(spark, monkeypatch):
     """Quasi-clique graphs (the near-dup shape) converge in 2-3
     propagation rounds — the star escalation must NOT trigger."""
     from rust_etl_spark.operators.dedup import connected_components
@@ -117,11 +129,8 @@ def test_connected_components_easy_graph_stays_in_propagation(spark):
     edges = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     edges += [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
     df = spark.createDataFrame(edges, "a long, b long")
-    stats: dict = {}
-    got = {
-        r["u"]: r["lbl"]
-        for r in connected_components(df, "a", "b", stats=stats).collect()
-    }
+    stats = _count_rounds(monkeypatch)
+    got = {r["u"]: r["lbl"] for r in connected_components(df, "a", "b").collect()}
     want = {**{i: 0 for i in range(4)}, **{i: 10 for i in range(10, 14)}}
     assert got == want
     assert stats["star_rounds"] == 0 and stats["plain_rounds"] <= 3

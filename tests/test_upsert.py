@@ -77,37 +77,43 @@ def _bucket_dirs(path):
     }
 
 
-def test_bucketed_upsert_insert_update_keep(spark, tmp_path):
+def test_bucketed_upsert_insert_update_keep(spark, tmp_path, monkeypatch):
+    from rust_etl_spark.operators import upsert
     from rust_etl_spark.operators.upsert import upsert_parquet_bucketed
+
+    monkeypatch.setattr(upsert, "N_BUCKETS", 8)
 
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k long, v string")
-    upsert_parquet_bucketed(spark, path, base, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, base, ["k"])
     assert _read(spark, path) == {i: f"v{i}" for i in range(100)}
 
     updates = spark.createDataFrame([(7, "NEW"), (200, "ins")], "k long, v string")
-    upsert_parquet_bucketed(spark, path, updates, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, updates, ["k"])
     want = {i: f"v{i}" for i in range(100)} | {7: "NEW", 200: "ins"}
     assert _read(spark, path) == want
 
     # idempotent: re-running the same merge converges to the same table
-    upsert_parquet_bucketed(spark, path, updates, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, updates, ["k"])
     assert _read(spark, path) == want
 
 
-def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
+def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path, monkeypatch):
     """The point of the layout: bucket directories whose keys are not in
     the update batch must keep their exact files (no rewrite)."""
+    from rust_etl_spark.operators import upsert
     from rust_etl_spark.operators.upsert import upsert_parquet_bucketed
+
+    monkeypatch.setattr(upsert, "N_BUCKETS", 8)
 
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k long, v string")
-    upsert_parquet_bucketed(spark, path, base, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, base, ["k"])
     before = _bucket_dirs(path)
     assert len(before) == 8  # 100 keys cover all 8 buckets
 
     updates = spark.createDataFrame([(7, "NEW")], "k long, v string")
-    upsert_parquet_bucketed(spark, path, updates, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, updates, ["k"])
     after = _bucket_dirs(path)
 
     changed = [d for d in before if before[d] != after[d]]
@@ -115,27 +121,30 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert _read(spark, path)[7] == "NEW"
 
 
-def test_bucketed_upsert_recovers_mid_swap_crash(spark, tmp_path):
+def test_bucketed_upsert_recovers_mid_swap_crash(spark, tmp_path, monkeypatch):
     """A crash between a bucket's two renames leaves that bucket only in
     its aside dir; the next call restores it before merging."""
     import os
 
+    from rust_etl_spark.operators import upsert
     from rust_etl_spark.operators.upsert import upsert_parquet_bucketed
+
+    monkeypatch.setattr(upsert, "N_BUCKETS", 8)
 
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k long, v string")
-    upsert_parquet_bucketed(spark, path, base, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, base, ["k"])
 
     victim = next(d for d in os.listdir(path) if d.startswith("__bucket="))
     os.rename(os.path.join(path, victim), os.path.join(path, ".aside_" + victim))
 
     updates = spark.createDataFrame([(7, "NEW")], "k long, v string")
-    upsert_parquet_bucketed(spark, path, updates, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, updates, ["k"])
     assert _read(spark, path) == {i: f"v{i}" for i in range(100)} | {7: "NEW"}
     assert not any(d.startswith(".aside_") for d in os.listdir(path))
 
 
-def test_bucketed_upsert_matches_dict_model(spark):
+def test_bucketed_upsert_matches_dict_model(spark, monkeypatch):
     """Property: any sequence of update batches applied via the
     bucketed upsert equals the same sequence applied to a plain dict
     (last write per key wins, all other keys untouched)."""
@@ -145,7 +154,10 @@ def test_bucketed_upsert_matches_dict_model(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
+    from rust_etl_spark.operators import upsert
     from rust_etl_spark.operators.upsert import upsert_parquet_bucketed
+
+    monkeypatch.setattr(upsert, "N_BUCKETS", 4)
 
     @given(
         st.lists(
@@ -167,7 +179,7 @@ def test_bucketed_upsert_matches_dict_model(spark):
             model: dict[int, int] = {}
             for batch in batches:
                 df = spark.createDataFrame(list(batch.items()), "k long, v long")
-                upsert_parquet_bucketed(spark, path, df, ["k"], n_buckets=4)
+                upsert_parquet_bucketed(spark, path, df, ["k"])
                 model.update(batch)
             got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
             assert got == model
@@ -177,13 +189,17 @@ def test_bucketed_upsert_matches_dict_model(spark):
     run()
 
 
-def test_bucketed_upsert_bucket_count_mismatch_raises(spark, tmp_path):
+def test_bucketed_upsert_bucket_count_mismatch_raises(spark, tmp_path, monkeypatch):
     import pytest
 
+    from rust_etl_spark.operators import upsert
     from rust_etl_spark.operators.upsert import upsert_parquet_bucketed
+
+    monkeypatch.setattr(upsert, "N_BUCKETS", 8)
 
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame([(1, "a")], "k long, v string")
-    upsert_parquet_bucketed(spark, path, base, ["k"], n_buckets=8)
+    upsert_parquet_bucketed(spark, path, base, ["k"])
+    monkeypatch.setattr(upsert, "N_BUCKETS", 16)
     with pytest.raises(ValueError, match="bucketed 8-way"):
-        upsert_parquet_bucketed(spark, path, base, ["k"], n_buckets=16)
+        upsert_parquet_bucketed(spark, path, base, ["k"])

@@ -29,7 +29,7 @@ sys.path.insert(0, sys.argv[1])
 from rust_etl_spark.plans import catalog
 from rust_etl_spark.session import get_spark
 
-spark = get_spark("worker-import-test", shuffle_partitions=2)
+spark = get_spark("worker-import-test", extra_conf={"spark.sql.shuffle.partitions": "2"})
 report = {n: catalog.get(n).fn(spark, sys.argv[2]).count()
           for n in ("embedding_pca_project", "kmeans_lloyd")}
 
